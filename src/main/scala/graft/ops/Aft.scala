@@ -64,11 +64,7 @@ object Aft {
       .withColumn("__y", log(col("__t")))
     base.persist()
     try {
-      // low-cardinality design collapse (guide §1.2 step 1): ONE
-      // groupBy pass; when the distinct (t, d, x…) rows fit in
-      // maxCells, the whole Newton loop runs driver-side over weighted
-      // cells — zero distributed passes per iteration, identical
-      // per-row likelihood math times the cell count. Columns:
+      // design collapse (graft.stats.LocalCollapse). Columns:
       // 0 = __t, 1 = __d, 2..k+1 = __x*, k+2 = __y.
       val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
       val (n, nEvents, badT, badD, mu0, sd0) = cellsOpt match {

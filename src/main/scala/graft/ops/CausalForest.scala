@@ -173,18 +173,10 @@ object CausalForest {
       .drop("__th", "__rh") // __rh only seeds the membership draw
     val growFrame = if (honest) exploded.filter(col("__half") === 0) else exploded
     val estFrame = if (honest) exploded.filter(col("__half") === 1) else exploded
-    // Low-cardinality BINNED-design collapse (the DesignCells idiom,
-    // guide §1.2 step 1): navigation compares raw f against bin
-    // BOUNDARIES, and f <= boundaries(f)(bi) ⟺ bin(f) <= bi, so node
-    // assignment — and with it every level histogram AND the estimation
-    // moments — is a pure function of (tree, half, bin-vector, arm) plus
-    // the y moments (growth needs Σy per cell, estimation Σy²). One
-    // map-side-combined pass collects the cells; the whole depth loop and
-    // the honest estimation then run in plain Scala — zero distributed
-    // passes per level at any data scale (was D+1 scans of the exploded
-    // frame plus its MEMORY_AND_DISK persist). Past the bound (bins^k
-    // distinct vectors on many wide features) or on NaN designs, the row
-    // path below is byte-identical, exploded persisted as before.
+    // BINNED-design collapse (graft.stats.LocalCollapse): f <= boundaries(f)(bi)
+    // ⟺ bin(f) <= bi, so node assignment, every level histogram and the
+    // estimation moments are pure functions of (tree, half, bin-vector, arm)
+    // plus the y moments; past the bound the row path below runs as before.
     val slim = exploded.select(col("__tree") +: col("__half") +:
       (0 until k).map(i => col(s"__b$i")) :+ col("__t") :+ col("__y"): _*)
     val forestCells = graft.stats.DesignCells.collectByX(slim, "__y", maxLocalCells)

@@ -412,27 +412,20 @@ object Contingency {
     val base = df.filter(yd.isNotNull && group.isNotNull)
       .select(yd.as("__y"), group.cast("string").as("__g"))
     if (exact) {
-      // bounded driver collapse (Robust.MaxLocalCells idiom): the grand
-      // median AND the per-group above/below counts are pure functions of
-      // the (group, value, count) cells — ONE distributed pass (was: a
-      // value-histogram quantile pass plus a separate group-count pass
-      // plus two cell aggregates). NaN values bail; past the bound the
-      // path below runs untouched (forced via maxLocalCells = 0).
+      // bounded driver collapse (graft.stats.LocalCollapse); NaN values bail
       val byGV = base.groupBy(col("__g"), col("__y"))
         .agg(count(lit(1)).as("c"))
-      Robust.localCells(byGV, maxLocalCells) match {
+      graft.stats.LocalCollapse.collect(byGV, maxLocalCells) match {
         case Some(rows)
             if rows.forall(r => !r.getDouble(1).isNaN) =>
           val m = rows.length
           // value histogram (merge across groups) for the grand median
-          val keys = new Array[Double](m)
-          locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(1); i0 += 1 } }
-          val ord = Robust.sortPerm(keys)
+          val byV = Robust.sortRows(rows, 1)
           val vs = new Array[Double](m); val cs = new Array[Long](m)
           var w = -1
           var i = 0
           while (i < m) {
-            val r = rows(ord(i))
+            val r = byV(i)
             if (w >= 0 && vs(w) == r.getDouble(1)) cs(w) += r.getLong(2)
             else { w += 1; vs(w) = r.getDouble(1); cs(w) = r.getLong(2) }
             i += 1

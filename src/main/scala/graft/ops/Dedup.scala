@@ -241,49 +241,41 @@ object Dedup {
                           maxLocalEdges: Int = 1000000): DataFrame = {
     val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
       .localCheckpoint(true)
-    // driver union-find fast path (the r18 design-collapse idiom, with
-    // the same guarded-bound discipline): the near-dup graph is orders
-    // of magnitude smaller than the corpus by construction, so when the
-    // materialized edge list fits `maxLocalEdges` (≤ ~60 MB of boxed
-    // rows at the default), path-compressed union-find labels every
-    // component in one driver scan — zero join/checkpoint rounds — and
-    // the result is the identical (id, component = min id) labeling.
-    // A null endpoint (never produced by the pair kernels) falls back
-    // to the distributed loop so its label semantics stay authoritative.
-    if (edges.count() <= maxLocalEdges) {
-      val es = edges.collect()
-      if (!es.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x0: Long): Long = {
-          var r = x0
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x0
-          while (parent.getOrElse(c, c) != r) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
+    // driver union-find over the collapsed edge list
+    // (graft.stats.LocalCollapse), the identical (id, component = min id)
+    // labeling; a null endpoint falls back to the distributed loop
+    for (es <- graft.stats.LocalCollapse.collect(edges, maxLocalEdges)
+         if !es.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(x0: Long): Long = {
+        var r = x0
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x0
+        while (parent.getOrElse(c, c) != r) {
+          val n = parent(c); parent(c) = r; c = n
         }
-        es.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          // attach the larger root under the smaller: every root stays
-          // its component's min id, matching the min-label propagation
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        val out = parent.keys.toArray.sorted.map(v => (v, find(v))).toSeq
-        val spark = pairs.sparkSession
-        import spark.implicits._
-        edges match {
-          case d: org.apache.spark.sql.classic.Dataset[_] =>
-            org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(d)
-          case _ => ()
-        }
-        return out.toDF("id", "component")
+        r
       }
+      es.foreach { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val ra = find(a); val rb = find(b)
+        // attach the larger root under the smaller: every root stays
+        // its component's min id, matching the min-label propagation
+        if (ra != rb) {
+          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+      val out = parent.keys.toArray.sorted.map(v => (v, find(v))).toSeq
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      edges match {
+        case d: org.apache.spark.sql.classic.Dataset[_] =>
+          org.apache.spark.sql.graftbridge.ColumnBridge.unpersistCheckpoint(d)
+        case _ => ()
+      }
+      return out.toDF("id", "component")
     }
     var labels = edges.select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()

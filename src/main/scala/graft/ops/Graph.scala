@@ -45,16 +45,12 @@ object Graph {
       .distinct()
       .persist()
     try {
-      // driver power-iteration fast path (the r18 design-collapse idiom,
-      // guarded): when the DISTINCT edge list fits `maxLocalEdges`, the
-      // whole power iteration runs over driver arrays — zero distributed
-      // rounds — with the identical formula, dangling redistribution,
-      // and iteration count. The accumulation ORDER differs from the
-      // distributed sum's, but that order is already partition-dependent
-      // on the row path; edges iterate sorted here so the driver result
-      // is run-to-run deterministic.
-      if (e.count() <= maxLocalEdges) {
-        val es = e.collect()
+      // driver power iteration over the collapsed edge list
+      // (graft.stats.LocalCollapse): identical formula, dangling
+      // redistribution and iteration count; edges iterate sorted, so the
+      // result is run-to-run deterministic; a null endpoint falls back
+      for (es <- graft.stats.LocalCollapse.collect(e, maxLocalEdges)
+           if !es.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         val ids = es.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
           .distinct.sorted
         require(ids.nonEmpty, "pagerank: the edge table is empty")

@@ -135,12 +135,8 @@ object MlWrappers {
     try {
       val yd = col("__y")
       val xsS = (0 until k).map(i => col(s"__x$i"))
-      // low-cardinality design collapse (guide §1.2 step 1): when the
-      // distinct COVARIATE rows fit in maxCells, one groupBy pass with
-      // per-cell y moments replaces every IRLS aggregate — z is linear
-      // in y given x and w depends only on x, so the per-cell moments
-      // reproduce the row-scale weighted OLS buffer exactly. The whole
-      // loop then runs driver-side: zero distributed passes/iteration.
+      // design collapse (graft.stats.LocalCollapse): z is linear in y given
+      // x and w depends only on x, so per-x-cell y moments are exact
       val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
       cellsOpt match {
         case Some(cells) =>
@@ -252,10 +248,8 @@ object MlWrappers {
     try {
       val yd = col("__y")
       val xsS = (0 until k).map(i => col(s"__x$i"))
-      // low-cardinality design collapse (guide §1.2 step 1): z is linear
-      // in y given x and the Fisher weight μ depends only on x, so the
-      // per-x-cell y moments reproduce every IRLS aggregate (and the
-      // Pearson pass) exactly — the loop runs driver-side.
+      // design collapse (graft.stats.LocalCollapse): z is linear in y given
+      // x and μ depends only on x, so per-x-cell y moments are exact
       val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
       cellsOpt match {
         case Some(cells) =>
@@ -426,10 +420,8 @@ object MlWrappers {
     try {
       val yd = col("__y")
       val xsS = (0 until k).map(i => col(s"__x$i"))
-      // low-cardinality design collapse (guide §1.2 step 1): the
-      // log-link gamma IRLS weight is CONSTANT and z is linear in y
-      // given x, so per-x-cell y moments reproduce every unweighted-OLS
-      // aggregate (and the Pearson pass) exactly — driver-side loop.
+      // design collapse (graft.stats.LocalCollapse): the gamma IRLS weight
+      // is constant and z is linear in y given x, so per-x-cell moments are exact
       val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
       cellsOpt match {
         case Some(cells) =>
@@ -601,11 +593,8 @@ object MlWrappers {
     try {
       val yd = col("__y")
       val xsS = (0 until k).map(i => col(s"__x$i"))
-      // low-cardinality design collapse (guide §1.2 step 1): the NB2
-      // likelihood needs lgamma(y + r) per row (nonlinear in y), so the
-      // collapse keys on the FULL (y, x…) row — count outcomes are
-      // naturally low-cardinality. Everything (moment α, IRLS passes,
-      // auxiliary SE, both likelihoods) then runs driver-side.
+      // design collapse (graft.stats.LocalCollapse) keyed on the FULL (y, x…)
+      // row: the NB2 likelihood's lgamma(y + r) is nonlinear in y
       val cellsOpt = graft.stats.DesignCells.collect(slim, maxCells)
       cellsOpt match {
         case Some((cells, cnts)) =>

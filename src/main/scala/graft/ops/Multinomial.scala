@@ -52,10 +52,7 @@ object Multinomial {
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
     base.persist()
     try {
-      // low-cardinality design collapse (guide §1.2 step 1): ONE
-      // groupBy pass replaces the level scan, the row count, AND every
-      // per-iteration aggregate — the Newton loop then runs driver-side
-      // over weighted cells. Columns: 0 = __y, 1..k = __x*.
+      // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
       val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
       val levels = cellsOpt match {
         case Some((cells, _)) =>

@@ -73,13 +73,7 @@ object QuantileTest {
                               maxLocalCells: Int = Robust.MaxLocalCells): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p > 0 && p < 1))
     if (exact) {
-      // bounded driver collapse (Robust.MaxLocalCells idiom): the per-arm
-      // exact quantiles are pure functions of the per-arm (value, count)
-      // histogram, so ONE map-side-combined groupBy pass + plain-Scala
-      // interpolation replaces Spark `percentile`'s all-values buffer
-      // (two of them — one per arm — merged single-threaded in the final
-      // task). NaN values bail; past the bound the aggregate below runs
-      // untouched (forced via maxLocalCells = 0 in the spec).
+      // bounded driver collapse (graft.stats.LocalCollapse); NaN values bail
       val spark = df.sparkSession
       import spark.implicits._
       val yd = y.cast("double")
@@ -88,21 +82,12 @@ object QuantileTest {
         .groupBy(yd.as("v")).agg(
           sum(when(tc === 0, 1L).otherwise(0L)).as("c0"),
           sum(when(tc === 1, 1L).otherwise(0L)).as("c1"))
-      Robust.localCells(byV, maxLocalCells) match {
-        case Some(rows)
-            if rows.forall(r => !r.isNullAt(0) && !r.getDouble(0).isNaN) =>
-          val m = rows.length
-          val keys = new Array[Double](m)
-          locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(0); i0 += 1 } }
-          val ord = Robust.sortPerm(keys)
-          val vs = new Array[Double](m)
-          val c0 = new Array[Long](m); val c1 = new Array[Long](m)
-          var i = 0
-          while (i < m) {
-            val r = rows(ord(i))
-            vs(i) = r.getDouble(0); c0(i) = r.getLong(1); c1(i) = r.getLong(2)
-            i += 1
-          }
+      graft.stats.LocalCollapse.collect(byV, maxLocalCells) match {
+        case Some(cells)
+            if cells.forall(r => !r.isNullAt(0) && !r.getDouble(0).isNaN) =>
+          val rows = Robust.sortRows(cells, 0)
+          val vs = rows.map(_.getDouble(0))
+          val c0 = rows.map(_.getLong(1)); val c1 = rows.map(_.getLong(2))
           // empty arm: Spark percentile returns null for the whole array —
           // bail to the distributed twin so its null row shape survives
           if (c0.exists(_ > 0) && c1.exists(_ > 0)) {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -25,64 +26,14 @@ object Robust {
   def winsorize(c: Column, lo: Double, hi: Double): Column =
     when(c.isNotNull, greatest(lit(lo), least(lit(hi), c)))
 
-  // ------------------------------------------------------------------
-  // Bounded DRIVER collapse for the exact order-statistic verbs (the
-  // DesignCells idiom applied to value histograms; guide §1.2 step 1).
-  // The exact-quantile family already avoids Spark `percentile`'s
-  // all-values buffer via histogram + RangeCumSum — but the prefix-sum
-  // machinery still costs a range-partition sort plus several small jobs
-  // per quantile call. When the CELL table (distinct values × counts) is
-  // bounded, collecting it once and running every order statistic in
-  // plain Scala is strictly cheaper at any data scale: ONE distributed
-  // pass per verb, identical interpolation math, deterministic
-  // driver-side summation. Past the bound — or when plan statistics say
-  // the input is large enough that a row-scale cell table is plausible —
-  // the existing distributed paths run UNTOUCHED (spec-pinned via
-  // maxLocalCells = 0).
-  // ------------------------------------------------------------------
-
-  /** Default distinct-cell bound for the driver collapse: 2^21 cells of
-    * a few doubles ≈ tens of MB collected — bounded driver state. */
+  /** Default distinct-cell bound for the exact order-statistic verbs'
+    * driver collapse ([[graft.stats.LocalCollapse]]): 2^21 cells of a few
+    * doubles ≈ tens of MB collected. */
   val MaxLocalCells: Int = 1 << 21
 
-  /** Inputs whose ESTIMATED size exceeds this skip the collapse probe
-    * outright: the fallbacks are themselves scale-safe single passes,
-    * and on a genuinely large input the probe's head() would still pay
-    * the full cell aggregate before bailing (the DesignCells big-input
-    * lesson). Unknown statistics read as big (safe side). */
-  private val bigInputBytes = BigInt(1L << 30)
-
-  private[ops] def smallInput(df: DataFrame): Boolean =
-    try df.queryExecution.optimizedPlan.stats.sizeInBytes <= bigInputBytes
-    catch { case _: Throwable => false }
-
-  /** Bounded driver collect of a cell frame: Some(rows) when `df` holds
-    * at most `maxCells` rows AND plan statistics say the input is small;
-    * None otherwise (callers fall back to their distributed path).
-    * Returns INTERNAL rows (SparkPlan.executeTake): a head()/collect()
-    * converts every row to an external GenericRow on the driver, which
-    * measured as ~1 s of single-threaded gap per ~600 k cells — the
-    * UnsafeRow batch is 5-10× cheaper to materialize and the callers
-    * only read primitives off it. */
-  private[ops] def localCells(df: DataFrame, maxCells: Int)
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
-    if (maxCells <= 0 || !smallInput(df)) return None
-    // executeTake's default partition ramp (1 → 4x…) runs several
-    // SEQUENTIAL jobs when the take is not satisfied early — measured
-    // ~1 s of pure wait on a 32-partition cell frame. The cell frame is
-    // statistics-gated small, so scan every partition in ONE parallel
-    // job; the take still stops DECODING at the bound.
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.limit.initialNumPartitions"
-    val prev = try conf.get(key) catch { case _: Throwable => null }
-    val rows = try {
-      conf.set(key, "10000")
-      df.queryExecution.executedPlan.executeTake(maxCells + 1)
-    } finally {
-      if (prev == null) conf.unset(key) else conf.set(key, prev)
-    }
-    if (rows.length > maxCells) None else Some(rows)
-  }
+  /** Collapsed cells in ascending order of the double at `field`. */
+  private[ops] def sortRows(rows: Array[InternalRow], field: Int): Array[InternalRow] =
+    sortPerm(rows.map(_.getDouble(field))).map(rows)
 
   /** Permutation that sorts `keys` ascending (total order via
     * Double.compare — NaN last, −0.0 < 0.0): a primitive-index quicksort;
@@ -138,28 +89,28 @@ object Robust {
   }
 
   /** Bounded driver histogram: Some((values ascending, counts)) when the
-    * (v, c) frame holds at most `maxCells` rows. Null or NaN values bail
-    * (the distributed paths' null/NaN ordering stays authoritative). */
+    * (v, c) frame holds at most `maxCells` rows. Null or NaN values and
+    * fractional counts bail (the distributed paths' semantics stay
+    * authoritative). */
   def localHistOnCounts(byV: DataFrame, maxCells: Int)
-      : Option[(Array[Double], Array[Long])] = {
-    localCells(byV.select(col("v").cast("double").as("v"),
-      col("c").cast("long").as("c")), maxCells).flatMap { rows =>
+      : Option[(Array[Double], Array[Long])] =
+    graft.stats.LocalCollapse.collect(byV.select(col("v").cast("double").as("v"),
+      col("c").cast("double").as("c")), maxCells).flatMap { rows =>
       val n = rows.length
       val vs = new Array[Double](n); val cs = new Array[Long](n)
       var i = 0
-      var ok = true
-      while (ok && i < n) {
+      while (i < n) {
         val r = rows(i)
-        if (r.isNullAt(0) || r.isNullAt(1) || r.getDouble(0).isNaN) ok = false
-        else { vs(i) = r.getDouble(0); cs(i) = r.getLong(1); i += 1 }
+        if (r.isNullAt(0) || r.isNullAt(1)) return None
+        vs(i) = r.getDouble(0)
+        val c = r.getDouble(1)
+        if (vs(i).isNaN || c != math.rint(c)) return None
+        cs(i) = c.toLong
+        i += 1
       }
-      if (!ok) None
-      else {
-        val ord = sortPerm(vs)
-        Some((ord.map(vs), ord.map(cs)))
-      }
+      val ord = sortPerm(vs)
+      Some((ord.map(vs), ord.map(cs)))
     }
-  }
 
   /** Exact quantile_cont over a sorted (values, counts) histogram held on
     * the driver — the same interpolation as Spark `percentile` / DuckDB
@@ -222,9 +173,7 @@ object Robust {
                              maxLocalCells: Int = MaxLocalCells): Array[Double] = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"$verb: percentiles must be in [0, 1], got ${ps.mkString(",")}")
-    // bounded driver collapse: collect the histogram once and interpolate
-    // in plain Scala — removes the RangeCumSum sort + per-rank jobs; the
-    // distributed prefix sum below stays authoritative past the bound
+    // bounded driver collapse (graft.stats.LocalCollapse)
     localHistOnCounts(byV, maxLocalCells) match {
       case Some((vs, cs)) => return quantilesOnLocalHist(vs, cs, ps, verb)
       case None => ()
@@ -312,13 +261,7 @@ object Robust {
                   pHi: Double = 0.95, exact: Boolean = false,
                   maxLocalCells: Int = MaxLocalCells): DataFrame = {
     if (exact) {
-      // bounded driver collapse: every output — the clip bounds AND the
-      // raw/winsorized/trimmed means and clip counts — is a pure function
-      // of the (value, count) histogram, so under the bound the verb
-      // costs ONE distributed pass (was: quantile machinery + a second
-      // row-scale moment pass). NaN values or an empty trim window bail
-      // to the distributed twin below (its null semantics stay
-      // authoritative).
+      // bounded driver collapse (graft.stats.LocalCollapse); an empty trim window bails
       val spark = df.sparkSession
       import spark.implicits._
       val xd = x.cast("double")
@@ -417,12 +360,7 @@ object Robust {
       // all-values aggregation buffer — the documented executor-OOM
       // hazard of the exact path on an all-distinct column at scale.
       val byV = base.groupBy(col("__x").as("v")).agg(count(lit(1)).as("c"))
-      // bounded driver collapse (see MaxLocalCells): the whole fence —
-      // median, deviation histogram, MAD, clip counts — is a pure
-      // function of the (value, count) cells, so under the bound ONE
-      // distributed pass plus plain Scala replaces the RangeCumSum
-      // machinery (2 prefix sums + a fence aggregate). Fallback below
-      // is byte-identical past the bound.
+      // bounded driver collapse (graft.stats.LocalCollapse)
       localHistOnCounts(byV, maxLocalCells) match {
         case Some((vs, cs)) =>
           val med = quantilesOnLocalHist(vs, cs, Seq(0.5), "mad_outliers")(0)
@@ -577,37 +515,20 @@ object Robust {
     val ti = t.cast("int")
     val base = df.filter(yd.isNotNull && ti.isNotNull)
     if (exact) {
-      // bounded driver collapse: the per-arm trim points AND the
-      // trimmed/winsorized moments are pure functions of the per-arm
-      // (value, count) histogram — ONE distributed pass (was two: an
-      // all-values exact-percentile cell pass + a moment pass). A NaN
-      // value, a treatment outside {0, 1}, or a missing arm bails to the
-      // distributed twin (its error/ordering semantics stay
-      // authoritative); forced via maxLocalCells = 0 in the spec.
+      // bounded driver collapse (graft.stats.LocalCollapse); NaN, a non-0/1 arm or a missing arm bails
       val byV = base.groupBy(yd.as("v")).agg(
         sum(when(ti === 0, 1L).otherwise(0L)).as("c0"),
         sum(when(ti === 1, 1L).otherwise(0L)).as("c1"),
         sum(when(ti =!= 0 && ti =!= 1, 1L).otherwise(0L)).as("cb"))
-      localCells(byV, maxLocalCells) match {
-        case Some(rows)
-            if rows.forall(r => !r.isNullAt(0) && !r.getDouble(0).isNaN) =>
+      graft.stats.LocalCollapse.collect(byV, maxLocalCells) match {
+        case Some(cells)
+            if cells.forall(r => !r.isNullAt(0) && !r.getDouble(0).isNaN) =>
+          val rows = sortRows(cells, 0)
           val m = rows.length
-          val keys = new Array[Double](m)
-          locally { var i0 = 0; while (i0 < m) { keys(i0) = rows(i0).getDouble(0); i0 += 1 } }
-          val ord = sortPerm(keys)
-          val vs = new Array[Double](m)
-          val c0 = new Array[Long](m); val c1 = new Array[Long](m)
-          var bad = 0L
-          var i = 0
-          while (i < m) {
-            val r = rows(ord(i))
-            vs(i) = r.getDouble(0)
-            c0(i) = r.getLong(1); c1(i) = r.getLong(2)
-            bad += r.getLong(3)
-            i += 1
-          }
+          val vs = rows.map(_.getDouble(0))
+          val c0 = rows.map(_.getLong(1)); val c1 = rows.map(_.getLong(2))
           val n0 = c0.sum; val n1 = c1.sum
-          if (bad == 0L && n0 > 0L && n1 > 0L) {
+          if (rows.forall(_.getLong(3) == 0L) && n0 > 0L && n1 > 0L) {
             (0 to 1).foreach { k =>
               require((if (k == 0) n0 else n1) >= 8,
                 s"yuen_test: arm $k needs >= 8 rows for a stable trimmed estimate")

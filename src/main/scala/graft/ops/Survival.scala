@@ -643,17 +643,8 @@ object Survival {
     base0.persist()
     try {
       val pairs = for { j <- 0 until k; l <- j until k } yield (j, l)
-      // low-cardinality design collapse (guide §1.2 step 1, the
-      // FitCells idiom): ONE groupBy probe pass; when the distinct
-      // (t, e, x…) rows fit in maxCells, the event-time grid, the
-      // bucketing, the score test, and every Newton pass run driver-side
-      // over weighted cells — zero distributed passes per iteration at
-      // any data scale. Past the bound, the row path below is untouched.
-      // The Cox-family default (32768) is higher than the GLM fits'
-      // 4096 because survival designs carry the TIME in the key (days ×
-      // event × bucketed x easily passes 4k while staying trivially
-      // driver-sized: 32k cells × ~10 doubles ≈ 2.6 MB, and the probe's
-      // head() bounds the collection before it happens).
+      // design collapse (graft.stats.LocalCollapse). The Cox-family bound
+      // (32768) is above the GLM fits' 4096 because the TIME rides the key.
       graft.stats.DesignCells.collect(base0, maxCells) match {
         case Some((dc, cnts)) =>
           val nAll = cnts.sum
@@ -1103,10 +1094,7 @@ object Survival {
       time.cast("double").as("__t") +: cause.cast("int").as("__c") +:
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
     base0.persist()
-    // low-cardinality design collapse (the coxPh idiom): with the
-    // distinct (t, cause, x…) rows in maxCells, the domain counts, the
-    // censoring KM, the role bucketing, AND every downstream cell pass
-    // run driver-side — the whole verb costs ONE distributed pass
+    // design collapse (graft.stats.LocalCollapse)
     graft.stats.DesignCells.collect(base0, maxCells) match {
       case Some((dc, cnts)) =>
         base0.unpersist()
@@ -1630,9 +1618,8 @@ object Survival {
     // 100M measured ~2x this pass's cost before this)
     base0.persist()
     try {
-    // the residual pass at β̂: driver arithmetic over collapsed design
-    // cells when the design fits (the coxPh idiom), else the distributed
-    // per-event-time cell aggregate
+    // the residual pass at β̂: design collapse (graft.stats.LocalCollapse),
+    // else the distributed per-event-time cell aggregate
     val (evTimes, cs) = graft.stats.DesignCells.collect(base0,
         maxCells) match {
       case Some((dc, cnts)) =>
@@ -1771,9 +1758,7 @@ object Survival {
     var base: DataFrame = null
     try {
       val pairs = for { j <- 0 until k; l <- j until k } yield (j, l)
-      // low-cardinality design collapse (the coxPh idiom with the
-      // stratum riding the cell key): one probe pass, then grids,
-      // bucketing, and every Newton pass in driver arithmetic
+      // design collapse (graft.stats.LocalCollapse), stratum in the key
       graft.stats.DesignCells.collectWithKey(base0, maxCells) match {
         case Some((keys, dc, cnts)) =>
           val nAll = cnts.sum
@@ -1892,8 +1877,7 @@ object Survival {
     val base0 = df.filter(complete).select(
       time.cast("double").as("__t") +: event.cast("int").as("__e") +:
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
-    // the one cell pass at β: driver arithmetic over collapsed design
-    // cells when the design fits (the coxPh idiom), else distributed
+    // the one cell pass at β: design collapse (graft.stats.LocalCollapse)
     val cs: Array[(Double, Double, Double)] = // (t, d, a0) time-DESC
       graft.stats.DesignCells.collect(base0, maxCells) match {
         case Some((dc, cnts)) =>

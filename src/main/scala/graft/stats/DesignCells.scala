@@ -1,152 +1,69 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-/** Low-cardinality design collapse for iterative fits (optimization
-  * guide §1.2 step 1: fix the distributed algorithm before the
-  * per-task work).
-  *
-  * Every iterative MLE in the library (IRLS GLMs, the damped-Newton
-  * AFT/ordinal/multinomial family) runs ONE distributed aggregate per
-  * iteration over a persisted slim projection. That shape is already
-  * minimal in passes — but when the design matrix is low-cardinality
-  * (bucketed covariates, binary indicators, integer outcomes: the
-  * normal case for experiment-analysis fits), every per-iteration pass
-  * re-scans n rows to recompute sums over at most a few hundred
-  * DISTINCT rows. At 100 TB that is billions of rows re-read ~10-25
-  * times; at bench scale it is ~10-25 fixed job/planning overheads per
-  * fit.
-  *
-  * [[collect]] replaces that with ONE groupBy-count pass: if the slim
-  * frame has at most `maxCells` distinct rows, the whole design
-  * collapses to (cell values, multiplicity) pairs on the driver and
-  * the fit loop runs in pure Scala over the cells — zero distributed
-  * passes per iteration, identical likelihood/gradient/Hessian math
-  * (each cell contributes its row formula times its count). When the
-  * design does not collapse (continuous covariates), the caller keeps
-  * the existing one-aggregate-per-iteration path, paying one extra
-  * cheap hash-aggregate scan for the probe.
-  *
-  * Cells are sorted lexicographically so driver-side summation order
-  * is deterministic across runs and partitionings. Any null or NaN
-  * cell value bails out (returns None) so the caller's existing
-  * null/NaN semantics stay authoritative.
+/** Low-cardinality design collapse for iterative fits: decoders over
+  * [[LocalCollapse]] (gate, bound and rationale live there). Each groups
+  * the slim frame once; when the design fits `maxCells`, the fit loop runs
+  * in plain Scala over (cell values, multiplicity) pairs with the identical
+  * per-row math times the count. Cells sort so driver-side summation order
+  * is deterministic across runs and partitionings; any null or NaN cell
+  * value returns None so the caller's row path (and its null/NaN
+  * semantics) stays authoritative.
   */
 object DesignCells {
 
-  /** The exact probe's groupBy-all-columns is cheap when the design
-    * collapses, but on a NON-collapsing design over a large input it
-    * hash-aggregates (and partially shuffles) up to one cell per row —
-    * measured 2–3× whole-fit regressions at the 100M-row probe
-    * (cox_ph_strat 21 → 68 s, fine_gray 19 → 36 s before this gate).
-    * So past `bigInputBytes` of estimated input, a constant-memory
-    * `approx_count_distinct` pass decides first: far past the bound
-    * (2× slack swamps the sketch's 5% rsd, so a truly-collapsing
-    * design is never misrouted) the caller's row path proceeds with no
-    * expensive probe. Under the size threshold the exact probe runs
-    * directly — worst case a few million distinct rows, bounded-cheap —
-    * so bench-scale fits pay NO extra pass. Unknown statistics read as
-    * big (safe side). */
-  private val bigInputBytes = BigInt(1L << 30)
+  private val seqOrd = scala.math.Ordering.Implicits.seqOrdering[Seq, Double]
 
-  private def farPastBound(slim: DataFrame, structCol: Column,
-                           maxCells: Int): Boolean = {
-    val big =
-      try slim.queryExecution.optimizedPlan.stats.sizeInBytes > bigInputBytes
-      catch { case _: Throwable => true }
-    big && {
-      val est = slim.agg(
-        approx_count_distinct(structCol).as("__d")).head().getLong(0)
-      est > 2L * maxCells
+  /** The shared numeric-cell decode: collapse `grouped` with columns
+    * [from, from + k) cast to double (the projection folds into the
+    * aggregate, so the gate still sees the grouping keys) and read them
+    * off every row. */
+  private def numericCells(grouped: DataFrame, from: Int, k: Int,
+                           maxCells: Int)
+      : Option[(Array[InternalRow], Array[Array[Double]])] = {
+    val cast = grouped.columns.zipWithIndex.map { case (c, i) =>
+      if (i >= from && i < from + k) col(c).cast("double").as(c) else col(c)
+    }
+    LocalCollapse.collect(grouped.select(cast: _*), maxCells).flatMap { rows =>
+      val cells = rows.map(r => Array.tabulate(k) { j =>
+        if (r.isNullAt(from + j)) Double.NaN else r.getDouble(from + j) })
+      if (cells.exists(_.exists(_.isNaN))) None else Some((rows, cells))
     }
   }
 
-  /** One pass over `slim` (all columns castable to double): Some(cells,
-    * counts) when the design has <= maxCells distinct rows, else None.
-    * `cells(i)` holds the column values of distinct row i in `slim`
-    * column order; `counts(i)` its multiplicity. */
+  /** Some(cells, counts) when `slim` (all columns numeric) has at most
+    * maxCells distinct rows, else None. `cells(i)` holds the column values
+    * of distinct row i in `slim` column order; `counts(i)` its
+    * multiplicity. */
   def collect(slim: DataFrame, maxCells: Int): Option[(Array[Array[Double]], Array[Long])] = {
-    val cols = slim.columns
-    if (maxCells <= 0) return None
-    if (farPastBound(slim, struct(cols.map(col): _*), maxCells)) return None
-    val grouped = slim.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__w"))
-    // head(maxCells + 1) stops the collection early on a non-collapsing
-    // design; the aggregate itself is one hash-agg pass either way
-    val rows = grouped.head(maxCells + 1)
-    if (rows.length > maxCells) return None
-    val k = cols.length
-    val cells = new Array[Array[Double]](rows.length)
-    val counts = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      val v = new Array[Double](k)
-      var j = 0
-      while (j < k) {
-        if (r.isNullAt(j)) return None // caller's null semantics apply
-        val d = r.get(j) match {
-          case x: java.lang.Double => x.doubleValue()
-          case x: java.lang.Number => x.doubleValue()
-          case _ => return None
-        }
-        if (d.isNaN) return None // caller's NaN semantics apply
-        v(j) = d
-        j += 1
-      }
-      cells(i) = v
-      counts(i) = r.getAs[Long]("__w")
-      i += 1
+    val k = slim.columns.length
+    numericCells(slim.groupBy(slim.columns.map(col): _*)
+      .agg(count(lit(1)).as("__w")), 0, k, maxCells).map { case (rows, cells) =>
+      val ord = cells.indices.sortBy(i => cells(i).toSeq)(seqOrd)
+      (ord.map(cells).toArray, ord.map(rows(_).getLong(k)).toArray)
     }
-    // deterministic driver-side order regardless of partitioning
-    val ord = (0 until rows.length).sortBy(i0 => cells(i0).toSeq)(
-      scala.math.Ordering.Implicits.seqOrdering[Seq, Double])
-    (Some((ord.map(cells).toArray, ord.map(counts).toArray)))
   }
 
   /** [[collect]] with a leading STRING key column (stratum idiom): groups
     * by ALL columns, reads column 0 as the string key and the rest as
-    * doubles. Cells sort by (key, values) so driver-side summation order
-    * is deterministic. Returns None past maxCells distinct rows or on a
-    * null key / null / NaN value (caller's row-path semantics apply). */
+    * doubles. Cells sort by (key, values). A null key also returns None. */
   def collectWithKey(slim: DataFrame, maxCells: Int)
       : Option[(Array[String], Array[Array[Double]], Array[Long])] = {
-    val cols = slim.columns
-    if (maxCells <= 0) return None
-    if (farPastBound(slim, struct(cols.map(col): _*), maxCells)) return None
-    val grouped = slim.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__w"))
-    val rows = grouped.head(maxCells + 1)
-    if (rows.length > maxCells) return None
-    val k = cols.length - 1
-    val keys = new Array[String](rows.length)
-    val cells = new Array[Array[Double]](rows.length)
-    val counts = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      if (r.isNullAt(0)) return None
-      keys(i) = r.getString(0)
-      val v = new Array[Double](k)
-      var j = 0
-      while (j < k) {
-        if (r.isNullAt(j + 1)) return None
-        val d = r.get(j + 1) match {
-          case x: java.lang.Number => x.doubleValue()
-          case _ => return None
-        }
-        if (d.isNaN) return None
-        v(j) = d
-        j += 1
+    val k = slim.columns.length - 1
+    numericCells(slim.groupBy(slim.columns.map(col): _*)
+      .agg(count(lit(1)).as("__w")), 1, k, maxCells).flatMap { case (rows, cells) =>
+      if (rows.exists(_.isNullAt(0))) None
+      else {
+        val keys = rows.map(_.getUTF8String(0).toString)
+        val ord = cells.indices.sortBy(i => (keys(i), cells(i).toSeq))(
+          scala.math.Ordering.Tuple2(implicitly[Ordering[String]], seqOrd))
+        Some((ord.map(keys).toArray, ord.map(cells).toArray,
+          ord.map(rows(_).getLong(k + 1)).toArray))
       }
-      cells(i) = v
-      counts(i) = r.getAs[Long]("__w")
-      i += 1
     }
-    val ord = (0 until rows.length).sortBy(i0 => (keys(i0), cells(i0).toSeq))(
-      scala.math.Ordering.Tuple2(implicitly[Ordering[String]],
-        scala.math.Ordering.Implicits.seqOrdering[Seq, Double]))
-    Some((ord.map(keys).toArray, ord.map(cells).toArray,
-      ord.map(counts).toArray))
   }
 
   /** A covariate cell of [[collectByX]]: the x values plus the y moments
@@ -159,49 +76,32 @@ object DesignCells {
     * fits whose per-iteration math is linear/quadratic in y given x
     * (log-link GLM IRLS: gamma, poisson, logistic working responses),
     * so a continuous outcome does not defeat the collapse. `yName` is
-    * the outcome column; every other column of `slim` is a key. Returns
-    * None past `maxCells` distinct x rows or on null/NaN key or moment
-    * values (the caller's row-path semantics then apply). */
+    * the outcome column; every other column of `slim` is a key.
+    * Also None on a null/NaN moment. */
   def collectByX(slim: DataFrame, yName: String,
                  maxCells: Int): Option[Array[XCell]] = {
     val keys = slim.columns.filterNot(_ == yName)
-    val yd = col(yName)
-    if (maxCells <= 0) return None
-    if (farPastBound(slim, struct(keys.map(col): _*), maxCells)) return None
+    val k = keys.length
+    val yd = col(yName).cast("double")
     val grouped = slim.groupBy(keys.map(col): _*).agg(
       count(lit(1)).as("__n"), sum(yd).as("__sy"),
       sum(yd * yd).as("__syy"),
       sum(when(yd <= 0.0, 1L).otherwise(0L)).as("__np"),
       sum(when(yd.isNull, 1L).otherwise(0L)).as("__nnull"))
-    val rows = grouped.head(maxCells + 1)
-    if (rows.length > maxCells) return None
-    val k = keys.length
-    val out = new Array[XCell](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i)
-      val v = new Array[Double](k)
-      var j = 0
-      while (j < k) {
-        if (r.isNullAt(j)) return None
-        val d = r.get(j) match {
-          case x: java.lang.Number => x.doubleValue()
-          case _ => return None
-        }
-        if (d.isNaN) return None
-        v(j) = d
-        j += 1
+    numericCells(grouped, 0, k, maxCells).flatMap { case (rows, cells) =>
+      val out = new Array[XCell](rows.length)
+      var i = 0
+      while (i < rows.length) {
+        val r = rows(i)
+        if (r.getLong(k + 4) != 0L || r.isNullAt(k + 1)) return None
+        val sy = r.getDouble(k + 1)
+        val syy = r.getDouble(k + 2)
+        if (sy.isNaN || syy.isNaN) return None
+        out(i) = XCell(cells(i), r.getLong(k), sy, syy, r.getLong(k + 3))
+        i += 1
       }
-      if (r.getAs[Long]("__nnull") != 0L) return None
-      if (r.isNullAt(r.fieldIndex("__sy"))) return None
-      val sy = r.getAs[Double]("__sy")
-      val syy = r.getAs[Double]("__syy")
-      if (sy.isNaN || syy.isNaN) return None
-      out(i) = XCell(v, r.getAs[Long]("__n"), sy, syy, r.getAs[Long]("__np"))
-      i += 1
+      val ord = out.indices.sortBy(i => out(i).xs.toSeq)(seqOrd)
+      Some(ord.map(out).toArray)
     }
-    val ord = out.indices.sortBy(i0 => out(i0).xs.toSeq)(
-      scala.math.Ordering.Implicits.seqOrdering[Seq, Double])
-    Some(ord.map(out).toArray)
   }
 }

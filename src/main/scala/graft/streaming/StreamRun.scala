@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -32,14 +34,21 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   */
 object StreamRun {
 
-  /** Best-effort size of one input file (local or hadoop-visible path);
-    * -1 when unknown (the partition derivation then keeps the session
+  /** Best-effort size of one local input: the file's length, or for a
+    * directory-shaped dataset the summed sizes of the regular files under
+    * it; -1 when unknown (the partition derivation then keeps the session
     * value). */
   def inputBytes(dir: String, file: String): Long =
     try {
-      val f = new java.io.File(dir, file)
-      if (f.exists) f.length else -1L
-    } catch { case _: Throwable => -1L }
+      val p = new java.io.File(dir, file).toPath
+      if (!java.nio.file.Files.exists(p)) -1L
+      else {
+        val walk = java.nio.file.Files.walk(p)
+        try walk.filter(java.nio.file.Files.isRegularFile(_))
+          .mapToLong(java.nio.file.Files.size(_)).sum()
+        finally walk.close()
+      }
+    } catch { case NonFatal(_) => -1L }
 
   /** Start `w` with AvailableNow, a tmpfs scratch checkpoint, and
     * size-derived stateful partitioning; block until completion. */
@@ -47,7 +56,7 @@ object StreamRun {
                          bytes: Long): Unit = {
     val conf = spark.conf
     val prev = conf.get("spark.sql.shuffle.partitions")
-    val sessionParts = try prev.toInt catch { case _: Throwable => 200 }
+    val sessionParts = try prev.toInt catch { case NonFatal(_) => 200 }
     val parts =
       if (bytes <= 0) sessionParts
       else math.max(1L, math.min(sessionParts.toLong,
@@ -74,7 +83,7 @@ object StreamRun {
         if (ch != null) ch.foreach(rm)
         f.delete(); ()
       }
-      try rm(ckpt) catch { case _: Throwable => () }
+      try rm(ckpt) catch { case NonFatal(_) => () }
     }
   }
 }

@@ -1,14 +1,20 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestSession
+import graft.stats.LocalCollapse
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-19 bounded DRIVER collapse of the exact order-statistic verbs
-  * (Robust.MaxLocalCells idiom) and the hash-encoded ngram_novelty:
-  * every fast path must equal its distributed twin, forced via
-  * maxLocalCells/maxLocalRows = 0 (the FitCellsSpec/CoxCellsSpec
-  * contract — any new driver fast path carries a forced-fallback spec). */
+/** The bounded DRIVER collapse primitive (graft.stats.LocalCollapse: one
+  * job, bound, no session conf writes), the exact order-statistic verbs
+  * built on it, and the hash-encoded ngram_novelty: every fast path must
+  * equal its distributed twin, forced via maxLocalCells/maxLocalRows = 0
+  * (the FitCellsSpec/CoxCellsSpec contract — any new driver fast path
+  * carries a forced-fallback spec). */
 class LocalCollapseSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -39,6 +45,116 @@ class LocalCollapseSpec extends AnyFunSuite {
         case (x, y) => assert(x == y, s"$x vs $y")
       }
     }
+  }
+
+  // ---- the LocalCollapse primitive itself ----
+
+  /** Jobs and tasks started by `body` on this thread (job group), counted
+    * by a listener; a sentinel job in a second group drains the listener
+    * bus (events on one queue arrive in order) before the counts are read. */
+  private def jobsDuring[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("lc-probe") =>
+            jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+          case Some("lc-drain") => drained.countDown()
+          case _ => ()
+        }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) { tasks.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("lc-probe", "LocalCollapseSpec")
+      val out = body
+      sc.setJobGroup("lc-drain", "LocalCollapseSpec")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get, tasks.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private lazy val forty = spark.range(0, 40, 1, 5).toDF("x")
+
+  test("LocalCollapse: under the bound, every row in exactly one job") {
+    val (rows, jobs, _) = jobsDuring(LocalCollapse.collect(forty, 40))
+    assert(rows.map(_.map(_.getLong(0)).sorted.toSeq) == Some(0L until 40L))
+    assert(jobs == 1, s"$jobs jobs")
+  }
+
+  test("LocalCollapse: over the bound returns None") {
+    assert(LocalCollapse.collect(forty, 39).isEmpty)
+  }
+
+  test("LocalCollapse: past the bound over many small partitions, the job stops early") {
+    // every partition (10 rows) fits the bound but the total (400) does
+    // not; the plan's size estimate is tiny, so no sketch runs and the
+    // collection job itself must bail. Tasks take ~200 ms, so the 40 of
+    // them would run in 10 waves on the session's 4 cores; the
+    // cancellation stops new launches after the first results arrive.
+    val slow = udf { (x: Long) => Thread.sleep(20); x }
+    val wide = spark.range(0, 400, 1, 40).select(slow(col("id")).as("x"))
+    val (rows, jobs, tasks) = jobsDuring(LocalCollapse.collect(wide, 15))
+    assert(rows.isEmpty)
+    assert(jobs == 1, s"$jobs jobs")
+    assert(tasks <= 20, s"$tasks of 40 tasks started")
+  }
+
+  test("LocalCollapse: maxCells = 0 returns None and runs no job") {
+    val (rows, jobs, _) = jobsDuring(LocalCollapse.collect(forty, 0))
+    assert(rows.isEmpty)
+    assert(jobs == 0, s"$jobs jobs")
+  }
+
+  test("LocalCollapse: the session conf is identical before and after") {
+    val before = spark.conf.getAll
+    assert(LocalCollapse.collect(forty, 40).isDefined)
+    assert(LocalCollapse.collect(forty, 3).isEmpty)
+    assert(spark.conf.getAll == before)
+  }
+
+  test("LocalCollapse: unknown plan size is sketch-gated on the grouping keys") {
+    // an RDD-backed frame has no size statistics (read as big), so the
+    // approx_count_distinct sketch decides before any cell aggregate runs
+    val rdd = spark.sparkContext.parallelize(0 until 3000, 4).map(i => (i % 100, i))
+    val cells = spark.createDataFrame(rdd).toDF("k", "v").groupBy("k").count()
+    assert(LocalCollapse.collect(cells, 10).isEmpty) // ~100 keys > 2 × 10
+    assert(LocalCollapse.collect(cells, 100).map(_.length) == Some(100))
+  }
+
+  test("library code under ops/ and stats/ never writes session conf") {
+    val roots = Seq("src/main/scala/graft/ops", "src/main/scala/graft/stats")
+    val files = roots.flatMap { r =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(r))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.nonEmpty)
+    val writes = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("conf.set(") || l.contains("conf.unset(") =>
+          s"$f:${i + 1}"
+      }
+    }
+    assert(writes.isEmpty, writes.mkString("session conf writes: ", ", ", ""))
+  }
+
+  test("exactQuantilesOnCounts: fractional counts == fallback (no truncation)") {
+    val byV = (1 to 6).map(i => (i.toDouble, Seq(0.5, 1.5, 2.5)(i % 3)))
+      .toDF("v", "c")
+    val ps = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
+    val fast = Robust.exactQuantilesOnCounts(byV, ps)
+    val dist = Robust.exactQuantilesOnCounts(byV, ps, maxLocalCells = 0)
+    fast.zip(dist).foreach { case (a, b) => assert(a == b, s"$a != $b") }
   }
 
   test("exactQuantiles: driver collapse == RangeCumSum fallback, bit-for-bit") {

@@ -8,6 +8,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  test("StreamRun.inputBytes sums the part files of a directory-shaped parquet") {
+    val tmp = java.nio.file.Files.createTempDirectory("inputbytes").toFile
+    try {
+      spark.range(0, 5000, 1, 3).toDF("x")
+        .write.parquet(new java.io.File(tmp, "events.parquet").getPath)
+      val files = new java.io.File(tmp, "events.parquet").listFiles()
+      assert(files.count(_.getName.endsWith(".parquet")) == 3)
+      assert(graft.streaming.StreamRun.inputBytes(tmp.getPath, "events.parquet")
+        == files.filter(_.isFile).map(_.length).sum)
+      assert(graft.streaming.StreamRun.inputBytes(tmp.getPath, "absent") == -1L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(tmp)
+    }
+  }
+
   test("windowedMetrics aggregates an event stream with watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
