@@ -48,7 +48,7 @@ object OptProbe {
 
     // job/task accounting listener
     object L extends SparkListener {
-      val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
       @volatile var jobs = 0
       @volatile var jobWallNs = 0L
       @volatile var taskNs = 0L

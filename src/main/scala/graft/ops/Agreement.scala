@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -115,9 +116,9 @@ object Agreement {
     * the common scikit convention).
     *
     * 100 TB shape: ONE (a, b) cell aggregate; the O(k²) close is
-    * driver-side over cells, guarded by `maxCells` BEFORE collection
-    * (the kendallTau idiom — the label space is bounded by construction;
-    * bucket continuous scores first). Returns one row:
+    * driver-side over cells, guarded by `maxCells` (the kendallTau idiom
+    * — the label space is bounded by construction; bucket continuous
+    * scores first). Returns one row:
     * (n, categories, weighting, po_w, pe_w, kappa_w, se, z, p_value). */
   def weightedKappa(df: DataFrame, a: Column, b: Column,
                     weighting: String = "quadratic",
@@ -132,13 +133,12 @@ object Agreement {
       .groupBy(coalesce(ad.cast("string"), as).as("a"),
         coalesce(bd.cast("string"), bs).as("b"))
       .agg(count(lit(1)).as("c"))
-    val cells = cellsDf.limit(maxCells + 1).collect()
-    require(cells.length <= maxCells,
+    val cells = LocalCollapse.within(cellsDf, maxCells)(
       s"weighted_kappa: more than $maxCells distinct (a, b) cells — " +
         "κ_w is for bounded label spaces; bucket continuous scores first")
     require(cells.nonEmpty, "weighted_kappa: no complete pairs")
     def key(s: String): (Double, String) = {
-      val d = try s.toDouble catch { case _: Throwable => Double.NaN }
+      val d = try s.toDouble catch { case _: NumberFormatException => Double.NaN }
       if (d.isNaN) (Double.MaxValue, s) else (d, "")
     }
     val cs = cells.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -409,18 +409,16 @@ object Agreement {
     // order cells by the NUMERIC value when castable, else lexically —
     // both sides of a pair use the same order so the choice only has to
     // be consistent
-    val cells = df.filter(xs.isNotNull && ys.isNotNull)
+    val cells = LocalCollapse.within(df.filter(xs.isNotNull && ys.isNotNull)
       .groupBy(coalesce(xd.cast("string"), xs).as("x"),
         coalesce(yd.cast("string"), ys).as("y"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1).collect()
-    require(cells.length <= maxCells,
+      .agg(count(lit(1)).as("c")), maxCells)(
       s"kendall_tau: more than $maxCells distinct (x, y) cells — τ-b is " +
         "for discrete columns; bucket continuous inputs first (or raise " +
         "maxCells knowingly)")
     require(cells.nonEmpty, "kendall_tau: no complete pairs")
     def key(s: String): (Double, String) = {
-      val d = try s.toDouble catch { case _: Throwable => Double.NaN }
+      val d = try s.toDouble catch { case _: NumberFormatException => Double.NaN }
       if (d.isNaN) (Double.MaxValue, s) else (d, "")
     }
     val cs = cells.map(r => (key(r.getString(0)), key(r.getString(1)),

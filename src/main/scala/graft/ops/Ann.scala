@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -199,12 +200,10 @@ object Ann {
       .filter(col("v").isNotNull)
       .select(col("neighbor_id"), posexplode(encodePq(index, col("v")))
         .as(Seq("sub", "code")))
-    val pRows = probes
+    val pRows = LocalCollapse.within(probes
       .select(probeId.cast("long").as("query_id"),
         probeVec.cast("array<double>").as("q"))
-      .filter(col("q").isNotNull)
-      .limit(maxProbes + 1).collect()
-    require(pRows.length <= maxProbes,
+      .filter(col("q").isNotNull), maxProbes)(
       s"pq_knn probe set exceeds $maxProbes rows: batch the probes or " +
         "raise maxProbes if probes x corpus ADC sums are really intended")
     val lutRows = pRows.flatMap { r =>
@@ -258,8 +257,7 @@ object Ann {
       .select(probeId.cast("long").as("query_id"),
         probeVec.cast("array<double>").as("q"))
       .filter(col("q").isNotNull)
-    val pRows = pSlim.limit(maxProbes + 1).collect()
-    require(pRows.length <= maxProbes,
+    val pRows = LocalCollapse.within(pSlim, maxProbes)(
       s"ivf_pq_knn probe set exceeds $maxProbes rows: batch the probes or " +
         "raise maxProbes")
     // probed cells per query (driver math over the collected probes — the
@@ -483,14 +481,12 @@ object Ann {
     import spark.implicits._
     val lab = corpus.select(id.cast("long").as("id"),
       label.cast("string").as("lbl"))
-    val cells = lloydAssign(corpus, id, vec, k, iters, 4000000L)
-      .join(lab, "id")
-      .filter(col("lbl").isNotNull)
-      .groupBy(col("cluster"), col("lbl")).agg(count(lit(1)).as("c"))
-      .orderBy(col("cluster"), col("lbl"))
-      .limit((maxCells + 1).toInt)
-      .collect()
-    require(cells.length <= maxCells,
+    val cells = LocalCollapse.within(
+      lloydAssign(corpus, id, vec, k, iters, 4000000L)
+        .join(lab, "id")
+        .filter(col("lbl").isNotNull)
+        .groupBy(col("cluster"), col("lbl")).agg(count(lit(1)).as("c"))
+        .orderBy(col("cluster"), col("lbl")), maxCells)(
       s"kmeans_eval: more than $maxCells (cluster x label) cells — the " +
         "label column is not categorical; bin it first")
     val n = cells.map(_.getAs[Long]("c")).sum.toDouble

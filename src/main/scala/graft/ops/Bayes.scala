@@ -99,7 +99,7 @@ object Bayes {
     * quadrature.
     *
     * 100 TB shape: ONE row-scale aggregate to (arm, n, s) cells with a
-    * take-ordered `maxArms` guard BEFORE collection; the quadrature is
+    * `maxArms` guard; the quadrature is
     * O(K² · grid) driver flops. Success values outside {0, 1} fail fast
     * in the same pass. Returns one row per arm, ordered:
     * (arm, n, s, rate, p_best, expected_loss). */
@@ -111,14 +111,12 @@ object Bayes {
     require(gridPoints >= 101 && gridPoints % 2 == 1,
       "bayes_best_arm: gridPoints must be odd and >= 101")
     val s = success.cast("long")
-    val cells = df.filter(arm.isNotNull && s.isNotNull)
-      .groupBy(arm.cast("string").as("arm"))
-      .agg(count(lit(1)).as("n"), sum(s).as("s"),
-        sum(when(s =!= 0 && s =!= 1, 1L).otherwise(0L)).as("bad"))
-      .orderBy(col("arm"))
-      .limit(maxArms + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cells.length <= maxArms,
+    val cells = graft.stats.LocalCollapse.within(
+      df.filter(arm.isNotNull && s.isNotNull)
+        .groupBy(arm.cast("string").as("arm"))
+        .agg(count(lit(1)).as("n"), sum(s).as("s"),
+          sum(when(s =!= 0 && s =!= 1, 1L).otherwise(0L)).as("bad"))
+        .orderBy(col("arm")), maxArms)(
       s"bayes_best_arm: more than $maxArms arms — this is not an " +
         "experiment arm column; raise maxArms if it is")
     require(cells.length >= 2, "bayes_best_arm: need at least 2 arms")

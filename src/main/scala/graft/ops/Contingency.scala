@@ -308,17 +308,13 @@ object Contingency {
     import spark.implicits._
     val xd = x.cast("double")
     val yd = y.cast("double")
-    // limit BEFORE collect so a mistakenly-continuous column pair bounds
-    // the driver collection itself, not just the post-hoc check
-    val cells = df.filter(xd.isNotNull && yd.isNotNull)
-      .groupBy(xd.as("x"), yd.as("y")).agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1)
-      .collect()
-    require(cells.length >= 2, "ordinal_assoc: need at least 2 distinct cells")
-    require(cells.length <= maxCells,
+    val cells = graft.stats.LocalCollapse.within(
+      df.filter(xd.isNotNull && yd.isNotNull)
+        .groupBy(xd.as("x"), yd.as("y")).agg(count(lit(1)).as("c")), maxCells)(
       s"ordinal_assoc: more than $maxCells distinct (x, y) cells — this " +
         "statistic is for ordinal domains; bin the columns first " +
         "(cut_bins) or raise maxCells")
+    require(cells.length >= 2, "ordinal_assoc: need at least 2 distinct cells")
     val cs = cells.map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
     val m = cs.length
     // per-cell concordant/discordant neighbor mass (A_ij / B_ij): each

@@ -92,9 +92,8 @@ object Drift {
     * enumeration on a tied fixture — the formula is checked, not
     * recalled). 100 TB shape: ONE row-scale aggregate to period cells;
     * the O(P²) sign sweep is driver-side over COLLECTED cells, and
-    * `maxPeriods` (checked with a cheap count BEFORE collection) names
-    * the calendar-bounded contract, as ewmaMonitor does. Returns one
-    * row: (n_periods, s, var_s, z, p_value). */
+    * `maxPeriods` names the calendar-bounded contract, as ewmaMonitor
+    * does. Returns one row: (n_periods, s, var_s, z, p_value). */
   def mannKendall(df: DataFrame, period: Column, value: Column,
                   maxPeriods: Int = 10000): DataFrame = {
     val spark = df.sparkSession
@@ -103,14 +102,13 @@ object Drift {
     val cellsDf = df.filter(period.isNotNull && v.isNotNull)
       .groupBy(period.cast("long").as("period"))
       .agg(avg(v).as("m"))
-    val nP = cellsDf.limit(maxPeriods + 1).count()
-    require(nP <= maxPeriods,
+    val cells = graft.stats.LocalCollapse.within(
+        cellsDf.orderBy(col("period")), maxPeriods)(
       s"mann_kendall: more than $maxPeriods periods — the sign sweep is " +
         "O(P²) on the driver; coarsen the period bucket (or raise " +
-        "maxPeriods knowingly)")
-    require(nP >= 4, s"mann_kendall: need at least 4 periods, got $nP")
-    val cells = cellsDf.orderBy(col("period")).collect()
-      .map(r => r.getDouble(1))
+        "maxPeriods knowingly)").map(r => r.getDouble(1))
+    require(cells.length >= 4,
+      s"mann_kendall: need at least 4 periods, got ${cells.length}")
     var s = 0L
     var i = 0
     while (i < cells.length) {
@@ -135,7 +133,7 @@ object Drift {
       else if (s < 0) (s + 1) / math.sqrt(varS)
       else 0.0
     val p = 2.0 * (1.0 - graft.stats.Dist.normCdf(math.abs(z)))
-    Seq((nP, s, varS, z, p))
+    Seq((cells.length.toLong, s, varS, z, p))
       .toDF("n_periods", "s", "var_s", "z", "p_value")
   }
 
@@ -282,9 +280,9 @@ object Drift {
     * 100 TB shape: ONE row-scale aggregate to per-period cells; the
     * recursion is inherently sequential, so it folds over the COLLECTED
     * cell frame — periods are time (hours/days), bounded by the calendar
-    * not the data, and the `maxPeriods` guard (checked with a cheap count
-    * BEFORE collection) names that contract. The exact recursion replays
-    * in SQL as a recursive CTE. Returns one row per period:
+    * not the data, and the `maxPeriods` guard names that contract. The
+    * exact recursion replays in SQL as a recursive CTE. Returns one row
+    * per period:
     * (period, metric, ewma, limit_lower, limit_upper, is_anomaly). */
   def ewmaMonitor(df: DataFrame, period: Column, value: Column,
                   lambda: Double = 0.2, l: Double = 3.0,
@@ -297,17 +295,18 @@ object Drift {
     val cells = df.filter(period.isNotNull && v.isNotNull)
       .groupBy(period.cast("long").as("period"))
       .agg(avg(v).as("metric"))
-    val st = cells.agg(count(lit(1)).as("t"), avg(col("metric")).as("mu"),
-      stddev_samp(col("metric")).as("sd")).head()
-    val tN = st.getAs[Long]("t")
-    require(tN >= 2, s"ewma: need at least 2 periods, got $tN")
-    require(tN <= maxPeriods,
-      s"ewma: $tN periods exceed maxPeriods=$maxPeriods — the recursion " +
-        "folds on the driver; coarsen the period bucket or raise the cap")
-    val mu = st.getAs[Double]("mu")
-    val sd = st.getAs[Double]("sd")
+    // the error path counts the periods to name them
+    val rows = graft.stats.LocalCollapse.within(
+        cells.orderBy(col("period")), maxPeriods)(
+      s"ewma: ${cells.count()} periods exceed maxPeriods=$maxPeriods — the " +
+        "recursion folds on the driver; coarsen the period bucket or raise " +
+        "the cap")
+    val xs = rows.map(_.getAs[Double]("metric"))
+    require(xs.length >= 2, s"ewma: need at least 2 periods, got ${xs.length}")
+    val mu = xs.sum / xs.length
+    // Welford's update, as stddev_samp: a constant series reads exactly 0
+    val sd = new org.apache.spark.util.StatCounter(xs).sampleStdev
     require(sd > 0, "ewma: the period metric is constant")
-    val rows = cells.orderBy(col("period")).collect()
     var z = mu
     val base = l * sd * math.sqrt(lambda / (2.0 - lambda))
     val out = rows.zipWithIndex.map { case (r, i) =>

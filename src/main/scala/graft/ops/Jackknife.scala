@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -16,12 +17,16 @@ import org.apache.spark.sql.types._
   * var = (G−1)/G · Σᵢ (θ̂₍ᵢ₎ − θ̄₍·₎)², CI from the t distribution with
   * G−1 degrees of freedom.
   *
-  * 100 TB shape: ONE row-scale aggregate to G bucket cells (take-ordered,
+  * 100 TB shape: ONE row-scale aggregate to G bucket cells (ordered,
   * maxBuckets-guarded); the G leave-one-out evaluations are driver
   * arithmetic over those cells — never a second data pass, never G scans
   * (the naive implementation's trap).
   */
 object Jackknife {
+
+  private def tooManyBuckets(maxBuckets: Int): String =
+    s"jackknife produced more than $maxBuckets buckets: coarsen the " +
+      "bucket column or raise maxBuckets"
 
   /** Two-sample bucketed jackknife for the ratio-mean difference
     * D = Σy₁/Σx₁ − Σy₀/Σx₀. Returns ONE row:
@@ -31,19 +36,14 @@ object Jackknife {
                 maxBuckets: Int = 100000): DataFrame = {
     require(alpha > 0 && alpha < 1, s"jackknife: alpha in (0,1), got $alpha")
     val y = num.cast("double"); val x = den.cast("double")
-    val cells = df
+    val cells = LocalCollapse.within(df
       .filter(bucket.isNotNull && t.isNotNull && y.isNotNull && x.isNotNull)
       .groupBy(bucket.cast("long").as("b"))
       .agg(sum(when(t === 1, y).otherwise(0.0)).as("y1"),
         sum(when(t === 1, x).otherwise(0.0)).as("x1"),
         sum(when(t === 0, y).otherwise(0.0)).as("y0"),
         sum(when(t === 0, x).otherwise(0.0)).as("x0"))
-      .orderBy(col("b"))
-      .limit(maxBuckets + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cells.length <= maxBuckets,
-      s"jackknife produced more than $maxBuckets buckets: coarsen the " +
-        "bucket column or raise maxBuckets")
+      .orderBy(col("b")), maxBuckets)(tooManyBuckets(maxBuckets))
     val g = cells.length
     require(g >= 2, s"jackknife: need >= 2 buckets, got $g")
     val s1 = cells.map(_.getDouble(1)).sum; val t1 = cells.map(_.getDouble(2)).sum
@@ -81,16 +81,11 @@ object Jackknife {
             alpha: Double = 0.05, maxBuckets: Int = 100000): DataFrame = {
     val y = num.cast("double"); val x = den.cast("double")
     require(alpha > 0 && alpha < 1, s"jackknife: alpha in (0,1), got $alpha")
-    val cells = df
+    val cells = LocalCollapse.within(df
       .filter(bucket.isNotNull && y.isNotNull && x.isNotNull)
       .groupBy(bucket.cast("long").as("b"))
       .agg(sum(y).as("sy"), sum(x).as("sx"))
-      .orderBy(col("b"))
-      .limit(maxBuckets + 1)
-      .collect()
-    require(cells.length <= maxBuckets,
-      s"jackknife produced more than $maxBuckets buckets: coarsen the " +
-        "bucket column or raise maxBuckets")
+      .orderBy(col("b")), maxBuckets)(tooManyBuckets(maxBuckets))
     val g = cells.length
     require(g >= 2, s"jackknife: need >= 2 buckets, got $g")
     val s = cells.map(_.getDouble(1)).sum; val tt = cells.map(_.getDouble(2)).sum

@@ -76,14 +76,12 @@ object Matching {
     val spark = df.sparkSession
     // the driver prefix sum is O(cells) — bounded by the covariate-cell
     // cardinality by design. A micro-caliper on a continuous score makes
-    // cells ~ rows, so fail fast (one cheap count on the checkpointed cell
-    // table) before collecting a row-scale table onto the driver.
-    val nCells = cellAgg.count()
-    require(nCells <= maxCells,
-      s"caliper matching produced $nCells matchable cells (max $maxCells): " +
-        "the caliper is too fine for this score's range — increase the " +
-        "caliper, use coarser exact buckets, or raise maxCells")
-    val collected = cellAgg.collect()
+    // cells ~ rows, so fail fast instead of collecting a row-scale table
+    // onto the driver (the error path counts the cells to name them).
+    val collected = graft.stats.LocalCollapse.within(cellAgg, maxCells)(
+      s"caliper matching produced ${cellAgg.count()} matchable cells " +
+        s"(max $maxCells): the caliper is too fine for this score's range " +
+        "— increase the caliper, use coarser exact buckets, or raise maxCells")
       // deterministic driver order independent of cluster layout
       .sortBy(_.getStruct(0).toSeq.map(String.valueOf).mkString("\u0000"))
     var running = 0L

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -209,26 +210,21 @@ object MlEval {
     val spark = df.sparkSession
     import spark.implicits._
     val y = label.cast("double"); val f = forecast.cast("double")
-    val cells = df.filter(y.isNotNull && f.isNotNull &&
+    val cells = LocalCollapse.within(df.filter(y.isNotNull && f.isNotNull &&
         f >= 0.0 && f <= 1.0)
       .groupBy(f.as("f"))
-      .agg(count(lit(1)).as("nf"), avg(y).as("of"))
-    val kCells = cells.limit((maxForecasts + 1).toInt).count()
-    require(kCells <= maxForecasts,
+      .agg(count(lit(1)).as("nf"), avg(y).as("of")), maxForecasts)(
       s"brier_decomposition: more than $maxForecasts distinct forecast " +
         "values — the exact Murphy decomposition is for DISCRETE " +
         "forecasts; bucket a continuous score first (cut_bins)")
-    require(kCells > 0, "brier_decomposition: no rows in [0, 1]")
-    val tot = cells.agg(sum(col("nf")).as("n"),
-      (sum(col("of") * col("nf")) / sum(col("nf"))).as("obar")).head()
-    val n = tot.getAs[Long]("n")
-    val obar = tot.getAs[Double]("obar")
-    val terms = cells.agg(
-      (sum(col("nf") * pow(col("f") - col("of"), 2)) / n.toDouble).as("rel"),
-      (sum(col("nf") * pow(col("of") - obar, 2)) / n.toDouble).as("res"))
-      .head()
-    val rel = terms.getAs[Double]("rel")
-    val res = terms.getAs[Double]("res")
+      .map(r => (r.getDouble(0), r.getLong(1), r.getDouble(2)))
+    require(cells.nonEmpty, "brier_decomposition: no rows in [0, 1]")
+    val n = cells.map(_._2).sum
+    val obar = cells.map { case (_, nf, of) => of * nf }.sum / n
+    val rel = cells.map { case (fc, nf, of) =>
+      nf * math.pow(fc - of, 2) }.sum / n
+    val res = cells.map { case (_, nf, of) =>
+      nf * math.pow(of - obar, 2) }.sum / n
     val unc = obar * (1.0 - obar)
     Seq((n, rel - res + unc, rel, res, unc, obar))
       .toDF("n", "brier", "reliability", "resolution", "uncertainty",
@@ -389,9 +385,9 @@ object MlEval {
     *
     * 100 TB shape: ONE groupBy to (distinct score) cells — n and the
     * positive count per cell — then the weighted PAVA runs on the
-    * DRIVER over cells, guarded by `maxCells` BEFORE collection (the
-    * ordinalAssoc idiom: isotonic regression is over score LEVELS;
-    * bucket a continuous score first, or raise maxCells knowingly).
+    * DRIVER over cells, guarded by `maxCells` (the ordinalAssoc idiom:
+    * isotonic regression is over score LEVELS; bucket a continuous score
+    * first, or raise maxCells knowingly).
     * PAVA itself is the textbook stack algorithm, O(cells). Label
     * domain outside {0, 1} is a named error riding the cell pass.
     * Returns the mapping, one row per distinct score ascending:
@@ -408,8 +404,7 @@ object MlEval {
       .agg(count(lit(1)).as("n"),
         sum(when(y === 1, 1L).otherwise(0L)).as("pos"),
         sum(when(y =!= 0 && y =!= 1, 1L).otherwise(0L)).as("bad"))
-    val cells = cellsDf.limit(maxCells + 1).collect()
-    require(cells.length <= maxCells,
+    val cells = LocalCollapse.within(cellsDf, maxCells)(
       s"isotonic_calibrate: more than $maxCells distinct scores — " +
         "bucket the score first (or raise maxCells knowingly)")
     require(cells.nonEmpty, "isotonic_calibrate: no complete rows")

@@ -54,17 +54,8 @@ object Multinomial {
     try {
       // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
       val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
-      val levels = cellsOpt match {
-        case Some((cells, _)) =>
-          cells.map(_(0)).distinct.sorted.take(maxLevels + 1)
-        case None =>
-          base.select(col("__y")).distinct()
-            .orderBy(col("__y")).limit(maxLevels + 1).collect()
-            .map(_.getDouble(0))
-      }
-      require(levels.length >= 2,
-        s"multinomial_logit: need >= 2 outcome levels, got ${levels.length}")
-      require(levels.length <= maxLevels,
+      val levels = graft.stats.DesignCells.outcomeLevels(base, cellsOpt,
+          maxLevels, "multinomial_logit")(
         s"multinomial_logit: more than $maxLevels distinct outcome " +
           "levels — bucket the outcome first (or raise maxLevels knowingly)")
       val nJ = levels.length

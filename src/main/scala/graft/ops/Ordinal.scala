@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * `sum()` (O((J+k)²) of them), and an accepted line-search trial's
   * stats row doubles as the next iteration's aggregate (the Aft
   * idiom). O((J+k)³) driver solve. Levels are the sorted distinct
-  * numeric values of y, bounded by maxLevels BEFORE collection.
+  * numeric values of y, bounded by maxLevels.
   */
 object Ordinal {
 
@@ -56,17 +56,8 @@ object Ordinal {
     try {
       // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
       val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
-      val levels = cellsOpt match {
-        case Some((cells, _)) =>
-          cells.map(_(0)).distinct.sorted.take(maxLevels + 1)
-        case None =>
-          base.select(col("__y")).distinct()
-            .orderBy(col("__y")).limit(maxLevels + 1).collect()
-            .map(_.getDouble(0))
-      }
-      require(levels.length >= 2,
-        s"ordinal_logit: need >= 2 outcome levels, got ${levels.length}")
-      require(levels.length <= maxLevels,
+      val levels = graft.stats.DesignCells.outcomeLevels(base, cellsOpt,
+          maxLevels, "ordinal_logit")(
         s"ordinal_logit: more than $maxLevels distinct outcome levels — " +
           "this is not an ordinal outcome (bucket it first, or raise " +
           "maxLevels knowingly)")

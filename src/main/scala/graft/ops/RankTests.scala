@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.agg.{KsResult, MannWhitneyResult}
-import graft.stats.{Dist, TtestCommon}
+import graft.stats.{Dist, LocalCollapse, TtestCommon}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -88,7 +88,7 @@ object RankTests {
         !isnan(y.cast("double")))
       .select(x.cast("double").as("__x"), y.cast("double").as("__y"))
     // bounded driver collapse (graft.stats.LocalCollapse)
-    graft.stats.LocalCollapse.collect(base.groupBy(col("__x"), col("__y"))
+    LocalCollapse.collect(base.groupBy(col("__x"), col("__y"))
         .agg(count(lit(1)).as("c")), maxLocalCells) match {
       case Some(rows) =>
         val m = rows.length
@@ -255,7 +255,7 @@ object RankTests {
       .agg(sum(when(col("t") === 0, 1L).otherwise(0L)).as("c0"),
         sum(when(col("t") =!= 0, 1L).otherwise(0L)).as("c1"))
     // bounded driver collapse (graft.stats.LocalCollapse)
-    graft.stats.LocalCollapse.collect(byValue, maxLocalCells).foreach { cells =>
+    LocalCollapse.collect(byValue, maxLocalCells).foreach { cells =>
       val rows = Robust.sortRows(cells, 0)
       val m = rows.length
       val tn0 = rows.map(_.getLong(1)).sum; val tn1 = rows.map(_.getLong(2)).sum
@@ -485,13 +485,13 @@ object RankTests {
       val byV = byVG.groupBy(col("v")).agg(sum(col("cg")).as("cnt"))
       val ranks = avgRankCells(byV)
       try {
-        val perG = byVG.join(ranks, "v")
+        val perG = LocalCollapse.within(byVG.join(ranks, "v")
           .groupBy(col("g"))
           .agg(sum(col("cg")).as("ng"),
             sum(col("cg") * col("avg_rank")).as("rg"))
-          .orderBy(col("g"))
-          .limit(maxGroups + 1)
-          .collect()
+          .orderBy(col("g")), maxGroups)(
+          s"dunn_test: more than $maxGroups groups — k² pairwise comparisons " +
+            "is not a post-hoc anymore; raise maxGroups if really intended")
         // double before cubing — same Long-overflow guard as kruskalWallis
         val tn = ranks
           .agg(sum(col("cnt").cast("double") * col("cnt") * col("cnt") -
@@ -501,9 +501,6 @@ object RankTests {
       } finally graft.Ckpt.release(ranks)
     } finally { byVG.unpersist(); () }
     require(cells.length >= 2, "dunn_test: need at least 2 groups")
-    require(cells.length <= maxGroups,
-      s"dunn_test: more than $maxGroups groups — k² pairwise comparisons " +
-        "is not a post-hoc anymore; raise maxGroups if really intended")
     val n = cells.map(_.getAs[Long]("ng")).sum.toDouble
     val varBase = n * (n + 1) / 12.0 - tieNum / (12.0 * (n - 1))
     require(varBase > 0, "dunn_test: all values identical")

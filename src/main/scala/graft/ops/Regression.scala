@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.agg.{OlsAgg, OlsBuf, OlsFinalizer, OlsSummary}
-import graft.stats.{Dist, LinAlg}
+import graft.stats.{Dist, LinAlg, LocalCollapse}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
@@ -427,8 +427,8 @@ object Regression {
     *
     * 100 TB shape: the estimator is INHERENTLY O(n²) pairs — this
     * operator is for series-sized inputs (a metric by day, a per-cohort
-    * aggregate), so n is guarded at `maxRows` (cheap count first, error
-    * names the pre-aggregation escape). Within the cap everything stays
+    * aggregate), so n is guarded at `maxRows` (the error names the
+    * pre-aggregation escape). Within the cap everything stays
     * distributed: the pair frame is a self-join on a RangeCumSum row id,
     * the two medians are exact `percentile` aggregates — no driver
     * materialization of pairs. Returns one row:
@@ -439,11 +439,11 @@ object Regression {
     import spark.implicits._
     val base = df.filter(x.isNotNull && y.isNotNull)
       .select(x.cast("double").as("__x"), y.cast("double").as("__y"))
-    val n = base.limit((maxRows + 1).toInt).count()
-    require(n <= maxRows,
+    val rows = LocalCollapse.within(base, maxRows)(
       s"theil_sen: more than $maxRows rows — the pairwise-slope median " +
         "is O(n²); pre-aggregate to period cells (the metric-by-day " +
         "shape this estimator is for) or raise maxRows")
+    val n = rows.length.toLong
     require(n >= 3, s"theil_sen: need at least 3 rows, got $n")
     // bounded driver collapse (the Robust.MaxLocalCells idiom): the verb
     // is already O(n²) with n capped at `maxRows`, so under a tighter
@@ -455,48 +455,46 @@ object Regression {
     // values bail to the distributed twin (Spark percentile's NaN
     // ordering stays authoritative); forced via maxLocalRows = 0 in the
     // spec.
-    if (n <= maxLocalRows) {
-      val rows = base.collect()
-      if (rows.forall(r => !r.getDouble(0).isNaN && !r.getDouble(1).isNaN)) {
-        val ni = rows.length
-        val xs = new Array[Double](ni); val ys = new Array[Double](ni)
-        var i = 0
-        while (i < ni) { xs(i) = rows(i).getDouble(0); ys(i) = rows(i).getDouble(1); i += 1 }
-        var np = 0L
-        i = 0
-        while (i < ni) {
-          var j = i + 1
-          while (j < ni) { if (xs(i) != xs(j)) np += 1; j += 1 }
-          i += 1
-        }
-        require(np > 0, "theil_sen: x is constant — no defined pair slopes")
-        val slopes = new Array[Double](np.toInt)
-        var w = 0
-        i = 0
-        while (i < ni) {
-          var j = i + 1
-          while (j < ni) {
-            if (xs(i) != xs(j)) {
-              slopes(w) = (ys(j) - ys(i)) / (xs(j) - xs(i)); w += 1
-            }
-            j += 1
-          }
-          i += 1
-        }
-        // median with Spark `percentile` / quantile_cont interpolation
-        def medianOf(a: Array[Double]): Double = {
-          java.util.Arrays.sort(a)
-          val pos = 0.5 * (a.length - 1)
-          val l = math.floor(pos).toInt; val h = math.ceil(pos).toInt
-          if (l == h) a(l) else (h - pos) * a(l) + (pos - l) * a(h)
-        }
-        val slope = medianOf(slopes)
-        val resid = new Array[Double](ni)
-        i = 0
-        while (i < ni) { resid(i) = ys(i) - slope * xs(i); i += 1 }
-        val icept = medianOf(resid)
-        return Seq((n, np, slope, icept)).toDF("n", "n_pairs", "slope", "intercept")
+    if (n <= maxLocalRows &&
+        rows.forall(r => !r.getDouble(0).isNaN && !r.getDouble(1).isNaN)) {
+      val ni = rows.length
+      val xs = new Array[Double](ni); val ys = new Array[Double](ni)
+      var i = 0
+      while (i < ni) { xs(i) = rows(i).getDouble(0); ys(i) = rows(i).getDouble(1); i += 1 }
+      var np = 0L
+      i = 0
+      while (i < ni) {
+        var j = i + 1
+        while (j < ni) { if (xs(i) != xs(j)) np += 1; j += 1 }
+        i += 1
       }
+      require(np > 0, "theil_sen: x is constant — no defined pair slopes")
+      val slopes = new Array[Double](np.toInt)
+      var w = 0
+      i = 0
+      while (i < ni) {
+        var j = i + 1
+        while (j < ni) {
+          if (xs(i) != xs(j)) {
+            slopes(w) = (ys(j) - ys(i)) / (xs(j) - xs(i)); w += 1
+          }
+          j += 1
+        }
+        i += 1
+      }
+      // median with Spark `percentile` / quantile_cont interpolation
+      def medianOf(a: Array[Double]): Double = {
+        java.util.Arrays.sort(a)
+        val pos = 0.5 * (a.length - 1)
+        val l = math.floor(pos).toInt; val h = math.ceil(pos).toInt
+        if (l == h) a(l) else (h - pos) * a(l) + (pos - l) * a(h)
+      }
+      val slope = medianOf(slopes)
+      val resid = new Array[Double](ni)
+      i = 0
+      while (i < ni) { resid(i) = ys(i) - slope * xs(i); i += 1 }
+      val icept = medianOf(resid)
+      return Seq((n, np, slope, icept)).toDF("n", "n_pairs", "slope", "intercept")
     }
     RangeCumSum.withRowNumber(base, Seq(col("__x").asc, col("__y").asc),
         "__i") { (ranked, _) =>

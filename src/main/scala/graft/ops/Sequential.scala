@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -22,8 +23,7 @@ import org.apache.spark.sql.types._
   * (bucket × arm) moment cells; the cumulative scan, likelihood ratio,
   * and running-max inversion run over those cells on the driver — the
   * bounded-metadata idiom (ROC suffix sums, RangeCumSum offsets). The
-  * bucket count is guarded: a take-ordered of maxBuckets+1 cells bounds
-  * driver memory BEFORE anything is collected, and overflow fails fast
+  * bucket count is guarded: overflow past maxBuckets cells fails fast
   * naming the knob. Buckets before both arms reach 2 cumulative
   * observations are not emitted (their variance is undefined).
   *
@@ -35,7 +35,7 @@ object Sequential {
     require(tau > 0, s"msprt: tau must be positive, got $tau")
     require(maxBuckets > 0, "msprt: maxBuckets must be positive")
     val yd = y.cast("double")
-    val cellRows = df
+    val cellRows = LocalCollapse.within(df
       .filter(yd.isNotNull && t.isNotNull && bucket.isNotNull)
       .groupBy(bucket.cast("long").as("bucket"))
       .agg(
@@ -45,10 +45,7 @@ object Sequential {
         sum(when(t === 0, 1L).otherwise(0L)).as("n0"),
         sum(when(t === 0, yd).otherwise(0.0)).as("s0"),
         sum(when(t === 0, yd * yd).otherwise(0.0)).as("q0"))
-      .orderBy(col("bucket"))
-      .limit(maxBuckets + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cellRows.length <= maxBuckets,
+      .orderBy(col("bucket")), maxBuckets)(
       s"msprt produced more than $maxBuckets time buckets: coarsen the " +
         "bucket column or raise maxBuckets if the driver can hold the cells")
     var cn1 = 0L; var cs1 = 0.0; var cq1 = 0.0
@@ -97,7 +94,7 @@ object Sequential {
     * the verdict so a dashboard reads correctly).
     *
     * 100 TB shape: ONE row-scale aggregate to per-look cells
-    * (take-ordered, maxBuckets-guarded — the [[msprt]] idiom); the scan
+    * (maxBuckets-guarded — the [[msprt]] idiom); the scan
     * is driver arithmetic over looks. Everything replays in windowed
     * SQL. Returns one row per look: (bucket, n, successes, llr,
     * lower_bound, upper_bound, decision). */
@@ -110,15 +107,12 @@ object Sequential {
     require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1,
       s"sprt: alpha and beta in (0, 1), got $alpha, $beta")
     val yi = y.cast("int")
-    val cells = df.filter(yi.isNotNull && bucket.isNotNull)
+    val cells = LocalCollapse.within(df.filter(yi.isNotNull && bucket.isNotNull)
       .groupBy(bucket.cast("long").as("bucket"))
       .agg(count(lit(1)).as("n"),
         sum(when(yi === 1, 1L).otherwise(0L)).as("s"),
         sum(when(yi =!= 0 && yi =!= 1, 1L).otherwise(0L)).as("bad"))
-      .orderBy(col("bucket"))
-      .limit(maxBuckets + 1)
-      .collect()
-    require(cells.length <= maxBuckets,
+      .orderBy(col("bucket")), maxBuckets)(
       s"sprt produced more than $maxBuckets looks: coarsen the bucket " +
         "column or raise maxBuckets")
     require(cells.forall(_.getAs[Long]("bad") == 0L),
@@ -169,7 +163,7 @@ object Sequential {
     * the null, later detection but tighter E under H0).
     *
     * 100 TB shape: ONE row-scale aggregate to (bucket × K-arm count)
-    * cells (take-ordered, maxBuckets-guarded); cumulative scan and the
+    * cells (maxBuckets-guarded); cumulative scan and the
     * e-process run over those cells on the driver — the [[msprt]] idiom.
     * Arm values outside 0..K−1 fail fast in the same pass.
     *
@@ -187,14 +181,11 @@ object Sequential {
     val counts = (0 until k).map(a =>
       sum(when(armI === a, 1L).otherwise(0L)).as(s"c$a"))
     val bad = sum(when(armI < 0 || armI >= k, 1L).otherwise(0L)).as("bad")
-    val cellRows = df
+    val cellRows = LocalCollapse.within(df
       .filter(bucket.isNotNull && armI.isNotNull)
       .groupBy(bucket.cast("long").as("bucket"))
       .agg(counts.head, (counts.tail :+ bad): _*)
-      .orderBy(col("bucket"))
-      .limit(maxBuckets + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cellRows.length <= maxBuckets,
+      .orderBy(col("bucket")), maxBuckets)(
       s"srm_sequential produced more than $maxBuckets time buckets: " +
         "coarsen the bucket column or raise maxBuckets")
     val nBad = cellRows.map(_.getLong(k + 1)).sum
@@ -354,7 +345,7 @@ object Sequential {
     // (coarsen the bucket column rather than raising this)
     val spark = df.sparkSession
     val yd = y.cast("double")
-    val cellRows = df
+    val cellRows = LocalCollapse.within(df
       .filter(yd.isNotNull && t.isNotNull && bucket.isNotNull)
       .groupBy(bucket.cast("long").as("bucket"))
       .agg(
@@ -364,10 +355,7 @@ object Sequential {
         sum(when(t === 0, 1L).otherwise(0L)).as("n0"),
         sum(when(t === 0, yd).otherwise(0.0)).as("s0"),
         sum(when(t === 0, yd * yd).otherwise(0.0)).as("q0"))
-      .orderBy(col("bucket"))
-      .limit(maxBuckets + 1)
-      .collect()
-    require(cellRows.length <= maxBuckets,
+      .orderBy(col("bucket")), maxBuckets)(
       s"group_sequential produced more than $maxBuckets time buckets: " +
         "coarsen the bucket column or raise maxBuckets")
     var cn1 = 0L; var cs1 = 0.0; var cq1 = 0.0
@@ -404,8 +392,8 @@ object Sequential {
     * experiment, not one): identical math to [[msprt]], cells keyed by
     * (experiment, bucket) in ONE row-scale aggregate, the cumulative scan
     * restarting at each experiment boundary of the ordered cell array.
-    * The take-ordered guard bounds TOTAL (experiment × bucket) cells
-    * BEFORE collection and the error names both knobs. Returns
+    * The guard bounds TOTAL (experiment × bucket) cells and the error
+    * names both knobs. Returns
     * (experiment, bucket, n1, n0, estimate, lambda, p_always_valid). */
   def msprtBy(df: DataFrame, experiment: Column, bucket: Column, y: Column,
               t: Column, tau: Double = 1.0,
@@ -413,7 +401,7 @@ object Sequential {
     require(tau > 0, s"msprt_by: tau must be positive, got $tau")
     require(maxCells > 0, "msprt_by: maxCells must be positive")
     val yd = y.cast("double")
-    val cellRows = df
+    val cellRows = LocalCollapse.within(df
       .filter(yd.isNotNull && t.isNotNull && bucket.isNotNull &&
         experiment.isNotNull)
       .groupBy(experiment.cast("string").as("experiment"),
@@ -425,10 +413,7 @@ object Sequential {
         sum(when(t === 0, 1L).otherwise(0L)).as("n0"),
         sum(when(t === 0, yd).otherwise(0.0)).as("s0"),
         sum(when(t === 0, yd * yd).otherwise(0.0)).as("q0"))
-      .orderBy(col("experiment"), col("bucket"))
-      .limit(maxCells + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cellRows.length <= maxCells,
+      .orderBy(col("experiment"), col("bucket")), maxCells)(
       s"msprt_by produced more than $maxCells (experiment x bucket) cells: " +
         "coarsen the bucket column, filter the experiment set, or raise " +
         "maxCells if the driver can hold the cells")

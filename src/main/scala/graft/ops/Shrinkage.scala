@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -19,8 +20,8 @@ import org.apache.spark.sql.types._
   * τ² = 0 (no real between-group spread) collapses every group to μ.
   *
   * 100 TB shape: ONE aggregate pass to ≤ maxGroups per-group moment cells
-  * (take-ordered guard BEFORE collection — a report's segment count is
-  * bounded by definition); μ, τ², and the shrinkage finish on the driver.
+  * (a report's segment count is bounded by definition); μ, τ², and the
+  * shrinkage finish on the driver.
   * Groups with n < 2 carry an undefined s² and shrink fully to μ
   * (B = 1), the honest treatment of a one-observation segment.
   *
@@ -30,13 +31,10 @@ object Shrinkage {
   def ebShrinkMeans(df: DataFrame, group: Column, y: Column,
                     maxGroups: Int = 100000): DataFrame = {
     val yd = y.cast("double")
-    val cells = df.filter(yd.isNotNull && group.isNotNull)
+    val cells = LocalCollapse.within(df.filter(yd.isNotNull && group.isNotNull)
       .groupBy(group.cast("string").as("__g"))
       .agg(count(lit(1)).as("n"), avg(yd).as("m"), var_samp(yd).as("v"))
-      .orderBy(col("__g"))
-      .limit(maxGroups + 1)
-      .collect()
-    require(cells.length <= maxGroups,
+      .orderBy(col("__g")), maxGroups)(
       s"eb_shrink_means: more than $maxGroups groups — raise maxGroups " +
         "if the driver can hold the cells")
     require(cells.length >= 2,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.stats.Dist
+import graft.stats.{Dist, LocalCollapse}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -65,13 +65,11 @@ object SimpleTests {
     val spark = df.sparkSession
     import spark.implicits._
     val yd = value.cast("double")
-    val cells = df.filter(yd.isNotNull && arm.isNotNull)
+    // ordered by arm: deterministic driver summation order
+    val cells = LocalCollapse.within(df.filter(yd.isNotNull && arm.isNotNull)
       .groupBy(arm.cast("string").as("__arm"))
       .agg(count(lit(1)).as("n"), avg(yd).as("m"), var_samp(yd).as("v"))
-      .orderBy(col("__arm")) // deterministic driver summation order
-      .limit(maxArms + 1)
-      .collect()
-    require(cells.length <= maxArms,
+      .orderBy(col("__arm")), maxArms)(
       s"anova: more than $maxArms arms — that is not an experiment " +
         "assignment column; raise maxArms if it really is")
     require(cells.length >= 2, s"anova: need at least 2 arms, got ${cells.length}")
@@ -98,8 +96,8 @@ object SimpleTests {
     * contingency companion to [[graft.agg]]'s SRM goodness-of-fit (the
     * reference has only the latter): χ² = Σ (obs − exp)²/exp over the
     * r×c table, dof = (r−1)(c−1). ONE aggregate pass to ≤ maxCells
-    * contingency cells (take-ordered guard BEFORE collection — two
-    * genuinely-categorical columns are cell-bounded by definition);
+    * contingency cells (two genuinely-categorical columns are
+    * cell-bounded by definition);
     * expected counts and the statistic finish on the driver. Null in
     * either column drops the row. Returns one row:
     * (n, n_rows, n_cols, dof, chisq, p_value). */
@@ -107,15 +105,12 @@ object SimpleTests {
                         maxCells: Int = 100000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cells = df.filter(a.isNotNull && b.isNotNull)
+    val cells = LocalCollapse.within(df.filter(a.isNotNull && b.isNotNull)
       .groupBy(a.cast("string").as("__a"), b.cast("string").as("__b"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    require(cells.length <= maxCells,
+      .agg(count(lit(1)).as("c")), maxCells)(
       s"chisq_independence: more than $maxCells contingency cells — these " +
         "are not categorical columns; raise maxCells if they really are")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val rowT = cells.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
     val colT = cells.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum }
     val n = cells.map(_._3).sum
@@ -152,21 +147,18 @@ object SimpleTests {
     *   ~ χ²((r−1)(c−1))
     *
     * Same cell shape and guards as chisqIndependence — ONE groupBy to
-    * contingency cells, maxCells BEFORE collection, O(r·c) driver close.
+    * contingency cells bounded by maxCells, O(r·c) driver close.
     * Returns one row: (n, n_rows, n_cols, dof, g2, p_value). */
   def gTest(df: DataFrame, a: Column, b: Column,
             maxCells: Int = 100000): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cells = df.filter(a.isNotNull && b.isNotNull)
+    val cells = LocalCollapse.within(df.filter(a.isNotNull && b.isNotNull)
       .groupBy(a.cast("string").as("__a"), b.cast("string").as("__b"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxCells + 1)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    require(cells.length <= maxCells,
+      .agg(count(lit(1)).as("c")), maxCells)(
       s"g_test: more than $maxCells contingency cells — these are not " +
         "categorical columns; raise maxCells if they really are")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val rowT = cells.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum }
     val colT = cells.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum }
     val n = cells.map(_._3).sum
@@ -760,11 +752,9 @@ object SimpleTests {
       sum(when(wd < 0, 1L).otherwise(0L)).as("bad"))
     val rows = group match {
       case Some(g) =>
-        val collected = base0.filter(g.isNotNull)
+        val collected = LocalCollapse.within(base0.filter(g.isNotNull)
           .groupBy(g.cast("string").as("g"))
-          .agg(aggs.head, aggs.tail: _*).orderBy(col("g"))
-          .limit(10001).collect() // take-ordered: bounded BEFORE collect
-        require(collected.length <= 10000,
+          .agg(aggs.head, aggs.tail: _*).orderBy(col("g")), 10000)(
           "design_effect: more than 10000 groups — this is a per-cell " +
             "metric at that cardinality; aggregate upstream instead")
         collected.map(r => (Some(r.getString(0)), r)).toSeq

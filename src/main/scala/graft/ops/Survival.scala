@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -607,10 +608,10 @@ object Survival {
     * codegen projection; state is 2 + 2k + k(k+1)/2 doubles per cell,
     * map-side combined). Because the risk set at t is every subject with
     * time ≥ t, the needed S0/S1/S2 are SUFFIX sums over the time cells —
-    * accumulated on the driver over ≤ `maxTimes` cells (take-ordered
-    * guard BEFORE collection; the KM/log-rank pair probes this cell shape
-    * at 10k times / 100M rows). The gradient and Hessian also close over
-    * the cells, so each iteration is exactly one distributed pass.
+    * accumulated on the driver over ≤ `maxTimes` cells (the KM/log-rank
+    * pair probes this cell shape at 10k times / 100M rows). The gradient
+    * and Hessian also close over the cells, so each iteration is exactly
+    * one distributed pass.
     *
     * The partial likelihood only LOOKS at event times, so censored
     * subjects are pre-bucketed to the greatest event time ≤ their own
@@ -662,16 +663,12 @@ object Survival {
           // n counts ALL complete rows — including subjects censored
           // before the first event, who are in no cell
           val nAll = base0.count()
-          // distinct EVENT times only — the take-ordered guard bounds the
-          // collection BEFORE it happens, and bounds what the message names
-          val evTimes = base0.filter(col("__e") === 1)
-            .select(col("__t")).distinct()
-            .orderBy(col("__t"))
-            .limit(maxTimes + 1)
-            .collect().map(_.getDouble(0))
-          require(evTimes.length <= maxTimes,
+          // distinct EVENT times only
+          val evTimes = LocalCollapse.within(base0.filter(col("__e") === 1)
+              .select(col("__t")).distinct().orderBy(col("__t")), maxTimes)(
             s"cox_ph: more than $maxTimes distinct event times — coarsen the " +
               "time column or raise maxTimes if the driver can hold the cells")
+            .map(_.getDouble(0))
           require(evTimes.nonEmpty, "cox_ph: no events")
           // bucketed view over the persisted base: greatest event time <= t
           // via the codegen binary-search expression (the referenced array
@@ -743,12 +740,11 @@ object Survival {
       cluster.cast("string").as("__c") +: time.cast("double").as("__t") +:
         event.cast("int").as("__e") +:
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
-    val evTimes = base0.filter(col("__e") === 1)
-      .select(col("__t")).distinct().orderBy(col("__t"))
-      .limit(maxTimes + 1).collect().map(_.getDouble(0))
-    require(evTimes.length <= maxTimes,
+    val evTimes = LocalCollapse.within(base0.filter(col("__e") === 1)
+        .select(col("__t")).distinct().orderBy(col("__t")), maxTimes)(
       s"cox_ph_cluster: more than $maxTimes distinct event times — " +
         "coarsen the time column or raise maxTimes knowingly")
+      .map(_.getDouble(0))
     require(evTimes.nonEmpty, "cox_ph_cluster: no events")
     val m = evTimes.length
     val base = base0.withColumn("__tb",
@@ -1181,12 +1177,11 @@ object Survival {
       s"$verb: ${counts.getAs[Long]("bad")} rows have a negative " +
         "cause (0 = censored, 1 = modeled event, >= 2 = competing)")
     require(counts.getAs[Long]("n1") > 0, s"$verb: no cause-1 events")
-    val evTimes = base0.filter(col("__c") === 1)
-      .select(col("__t")).distinct().orderBy(col("__t"))
-      .limit(maxTimes + 1).collect().map(_.getDouble(0))
-    require(evTimes.length <= maxTimes,
+    val evTimes = LocalCollapse.within(base0.filter(col("__c") === 1)
+        .select(col("__t")).distinct().orderBy(col("__t")), maxTimes)(
       s"$verb: more than $maxTimes distinct cause-1 event times — " +
         "coarsen the time column or raise maxTimes knowingly")
+      .map(_.getDouble(0))
     // censoring KM left limit Ĝ(u−) at every DISTINCT ROW TIME u, as a
     // distributed cell frame: n_at_risk by RangeCumSum, the ln(1−dc/n)
     // prefix by a second RangeCumSum, exclusive (strictly earlier
@@ -1468,15 +1463,14 @@ object Survival {
                maxCells: Int = 32768): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val groups = df.filter(time.isNotNull && cause.isNotNull &&
-        group.isNotNull)
+    val groups = LocalCollapse.within(df.filter(time.isNotNull &&
+        cause.isNotNull && group.isNotNull)
       .select(group.cast("string").as("g")).distinct()
-      .orderBy(col("g")).limit(maxGroups + 1).collect().map(_.getString(0))
+      .orderBy(col("g")), maxGroups)(
+      s"gray_test: more than $maxGroups distinct groups — coarsen the " +
+        "group column or raise maxGroups knowingly").map(_.getString(0))
     require(groups.length >= 2,
       s"gray_test: need at least 2 groups, got ${groups.length}")
-    require(groups.length <= maxGroups,
-      s"gray_test: more than $maxGroups distinct groups — coarsen the " +
-        "group column or raise maxGroups knowingly")
     val kG = groups.length
     val gIdxCol = (array_position(typedLit(groups.toSeq),
       group.cast("string")) - 1).cast("double")
@@ -1632,15 +1626,14 @@ object Survival {
         (ev, localCoxCells(dc, cnts, tbIdx, ev, k, pairs, beta,
           efron = false))
       case None =>
-        val ev = base0.filter(col("__e") === 1)
-          .select(col("__t")).distinct().orderBy(col("__t"))
-          .limit(maxTimes + 1).collect().map(_.getDouble(0))
         // local contract (the preceding coxPh call already enforced it,
         // but this collect must not depend on a sibling's guard staying
         // upstream)
-        require(ev.length <= maxTimes,
+        val ev = LocalCollapse.within(base0.filter(col("__e") === 1)
+            .select(col("__t")).distinct().orderBy(col("__t")), maxTimes)(
           s"cox_zph: more than $maxTimes distinct event times — bucket the " +
             "time column first (or raise maxTimes knowingly)")
+          .map(_.getDouble(0))
         val base = base0.withColumn("__tb",
             graft.expr.SearchExprs.sortedFloorLookup(col("__t"), ev))
           .filter(col("__tb").isNotNull)
@@ -1788,12 +1781,9 @@ object Survival {
             stratified = true, maxIter, tol, nAll, "cox_ph_strat")
         case None =>
           val nAll = base0.count()
-          val evRows = base0.filter(col("__e") === 1)
-            .select(col("__s"), col("__t")).distinct()
-            .orderBy(col("__s"), col("__t"))
-            .limit(maxTimes + 1)
-            .collect()
-          require(evRows.length <= maxTimes,
+          val evRows = LocalCollapse.within(base0.filter(col("__e") === 1)
+              .select(col("__s"), col("__t")).distinct()
+              .orderBy(col("__s"), col("__t")), maxTimes)(
             s"cox_ph_strat: more than $maxTimes distinct (stratum, event " +
               "time) cells — coarsen the time column or raise maxTimes if " +
               "the driver can hold the cells")
@@ -1906,12 +1896,11 @@ object Survival {
           }
           Array.tabulate(m)(r => (ev(m - 1 - r), d(m - 1 - r), a0(m - 1 - r)))
         case None =>
-          val evTimes = base0.filter(col("__e") === 1)
-            .select(col("__t")).distinct().orderBy(col("__t"))
-            .limit(maxTimes + 1).collect().map(_.getDouble(0))
-          require(evTimes.length <= maxTimes,
+          val evTimes = LocalCollapse.within(base0.filter(col("__e") === 1)
+              .select(col("__t")).distinct().orderBy(col("__t")), maxTimes)(
             s"cox_survival: more than $maxTimes distinct event times — coarsen " +
               "the time column or raise maxTimes knowingly")
+            .map(_.getDouble(0))
           require(evTimes.nonEmpty, "cox_survival: no events")
           val base = base0.withColumn("__tb",
               graft.expr.SearchExprs.sortedFloorLookup(col("__t"), evTimes))
@@ -2203,8 +2192,8 @@ object Survival {
     * tied on time are NOT comparable — the lifelines/standard convention.
     *
     * 100 TB shape: NO pair expansion — rows collapse to (time, score)
-    * cells in ONE groupBy, the cell frame is guarded by `maxCells`
-    * BEFORE collection, and the pair counts come from an O(C log C)
+    * cells in ONE groupBy, the cell frame is guarded by `maxCells`,
+    * and the pair counts come from an O(C log C)
     * driver sweep: times descending, a Fenwick tree over score ranks
     * counts how many already-seen (i.e. later-time) cells sit below /
     * at / above each event cell's score. Continuous production scores
@@ -2219,14 +2208,13 @@ object Survival {
       .filter(time.isNotNull && event.isNotNull && score.isNotNull)
       .groupBy(time.cast("double").as("t"), score.cast("double").as("s"))
       .agg(sum(event.cast("int")).as("nEvent"), count(lit(1)).as("nAll"))
-    val nCells = cellsDf.limit(maxCells + 1).count()
-    require(nCells <= maxCells,
+    val cells = LocalCollapse.within(cellsDf, maxCells)(
       s"c_index: more than $maxCells distinct (time, score) cells — round " +
         "the score (or raise maxCells knowingly); the cell sweep is " +
-        "driver-side")
-    require(nCells >= 2, s"c_index: need at least 2 cells, got $nCells")
-    val cells = cellsDf.collect().map(r => (r.getDouble(0), r.getDouble(1),
+        "driver-side").map(r => (r.getDouble(0), r.getDouble(1),
       r.getLong(2), r.getLong(3)))
+    require(cells.length >= 2,
+      s"c_index: need at least 2 cells, got ${cells.length}")
     // score ranks for the Fenwick tree
     val ranks = cells.map(_._2).distinct.sorted.zipWithIndex.toMap
     val m = ranks.size

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.LocalCollapse
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,9 +14,9 @@ import org.apache.spark.sql.types._
   * matching / DML / DID — nothing for comparative case studies).
   *
   * 100 TB shape: the panel collapses to (unit, period) mean-outcome cells
-  * in ONE row-scale aggregate with a take-ordered `maxCells` guard BEFORE
-  * collection (units × periods is report-sized by definition — a unit is
-  * a region/product/cohort, not a row id). The simplex-constrained
+  * in ONE row-scale aggregate with a `maxCells` guard (units × periods
+  * is report-sized by definition — a unit is a region/product/cohort,
+  * not a row id). The simplex-constrained
   * quadratic then solves on the driver by Frank–Wolfe with EXACT line
   * search — deterministic (no RNG, no solver library): at each step the
   * gradient's best vertex is the move direction and the optimal step for
@@ -46,14 +47,11 @@ object SynthControl {
   private def collectPanel(df: DataFrame, unit: Column, period: Column,
                            y: Column, treatedUnit: String, preEnd: Double,
                            maxCells: Int): Panel = {
-    val cells = df
+    val cells = LocalCollapse.within(df
       .filter(unit.isNotNull && period.isNotNull && y.isNotNull)
       .groupBy(unit.cast("string").as("u"), period.cast("double").as("p"))
       .agg(avg(y.cast("double")).as("v"))
-      .orderBy(col("u"), col("p"))
-      .limit(maxCells + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cells.length <= maxCells,
+      .orderBy(col("u"), col("p")), maxCells)(
       s"synth_control produced more than $maxCells (unit x period) cells — " +
         "these are not panel units/periods; raise maxCells if they are")
     val byUnit = cells.groupBy(_.getString(0))
@@ -294,9 +292,8 @@ object SynthControl {
     * for ANY time weights.
     *
     * 100 TB shape: the [[synthControl]] contract — ONE distributed
-    * (unit, period) cell collapse with a take-ordered maxCells guard
-    * BEFORE collection; every weight fit and replicate is driver
-    * arithmetic over those cells.
+    * (unit, period) cell collapse with a maxCells guard; every weight fit
+    * and replicate is driver arithmetic over those cells.
     *
     * @param treated 0/1 flag; a unit is treated when it is flagged on
     *                any row (the treated block = treated units × periods
@@ -309,15 +306,12 @@ object SynthControl {
                maxCells: Int = 200000, maxPlacebos: Int = 50): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cells = df
+    val cells = LocalCollapse.within(df
       .filter(unit.isNotNull && period.isNotNull && y.isNotNull &&
         treated.isNotNull)
       .groupBy(unit.cast("string").as("u"), period.cast("double").as("p"))
       .agg(avg(y.cast("double")).as("v"), max(treated.cast("int")).as("tr"))
-      .orderBy(col("u"), col("p"))
-      .limit(maxCells + 1) // take-ordered: bounded BEFORE collection
-      .collect()
-    require(cells.length <= maxCells,
+      .orderBy(col("u"), col("p")), maxCells)(
       s"synth_did produced more than $maxCells (unit x period) cells — " +
         "these are not panel units/periods; raise maxCells if they are")
     val periods = cells.map(_.getDouble(1)).distinct.sorted

@@ -40,13 +40,12 @@ object TextOps {
   }
 
   /** Collect a merge table (rank, left, right) into the rank-ordered
-    * merge list [[bpeTokenCount]] wants — bounded BEFORE collection. */
+    * merge list [[bpeTokenCount]] wants. */
   def bpeMergesFrom(df: DataFrame, rank: Column, left: Column, right: Column,
                     maxMerges: Int = 200000): Seq[(String, String)] = {
-    val rows = df.select(rank.cast("long").as("r"),
-        left.cast("string").as("l"), right.cast("string").as("t"))
-      .orderBy(col("r")).limit(maxMerges + 1).collect()
-    require(rows.length <= maxMerges,
+    val rows = graft.stats.LocalCollapse.within(df.select(
+        rank.cast("long").as("r"), left.cast("string").as("l"),
+        right.cast("string").as("t")).orderBy(col("r")), maxMerges)(
       s"bpe_merges: more than $maxMerges merges — raise maxMerges if the " +
         "plan-shipped size is acceptable")
     rows.toSeq.map(r => (r.getString(1), r.getString(2)))

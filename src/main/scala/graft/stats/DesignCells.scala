@@ -66,6 +66,29 @@ object DesignCells {
     }
   }
 
+  /** The sorted distinct values of `slim`'s column 0 (a model's outcome
+    * levels): read off the cells of [[collect]] when it returned them,
+    * else one bounded distinct read. Raises `tooMany` past `maxLevels`,
+    * and names `verb` when there are fewer than 2. */
+  def outcomeLevels(slim: DataFrame,
+                    cells: Option[(Array[Array[Double]], Array[Long])],
+                    maxLevels: Int, verb: String)(
+      tooMany: => String): Array[Double] = {
+    val levels = cells match {
+      case Some((cs, _)) =>
+        val distinct = cs.map(_(0)).distinct.sorted
+        require(distinct.length <= maxLevels, tooMany)
+        distinct
+      case None =>
+        val y = col(slim.columns.head)
+        LocalCollapse.within(slim.select(y).distinct().orderBy(y), maxLevels)(
+          tooMany).map(_.getDouble(0))
+    }
+    require(levels.length >= 2,
+      s"$verb: need >= 2 outcome levels, got ${levels.length}")
+    levels
+  }
+
   /** A covariate cell of [[collectByX]]: the x values plus the y moments
     * every GLM working response needs (z linear in y per x-cell): count,
     * Σy, Σy², and the count of nonpositive y (domain checks). */

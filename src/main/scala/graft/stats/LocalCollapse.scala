@@ -9,10 +9,10 @@ import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
 import org.apache.spark.FutureAction
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Sort}
 import org.apache.spark.sql.functions.{approx_count_distinct, struct}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.Platform
@@ -51,16 +51,52 @@ import org.apache.spark.unsafe.Platform
   * `maxCells` kept plus the results of the tasks in flight when the bound
   * is passed, each at most `maxCells + 1` rows (those results also count
   * against `spark.driver.maxResultSize`).
+  *
+  * Hard limits. [[within]] is the same read for a frame the caller needs
+  * whole: no sketch gate, raises past the bound, sorts on the driver.
+  * Every bounded driver read under `graft.ops` goes through one of the
+  * two entry points (LocalCollapseSpec scans for hand-written
+  * `limit(max + 1)` bounds).
   */
 object LocalCollapse {
 
   private val bigInputBytes = BigInt(1L << 30)
 
-  def collect(cells: DataFrame, maxCells: Int): Option[Array[InternalRow]] = {
-    if (maxCells <= 0 || farPastBound(cells, maxCells)) return None
-    val rdd = cells.queryExecution.toRdd
-    val width = cells.schema.length
-    val limit = maxCells + 1
+  def collect(cells: DataFrame, maxCells: Int): Option[Array[InternalRow]] =
+    if (maxCells <= 0 || farPastBound(cells, maxCells)) None
+    else read(cells, maxCells)
+
+  /** Every row of `frame` when it holds at most `max` rows, else an
+    * `IllegalArgumentException("requirement failed: " + tooMany)` — the
+    * hard-limit twin of [[collect]] for callers that need the rows either
+    * way (group tables, event-time grids, probe sets): no sketch gate,
+    * the same one-job read, and no fallback. `max = 0` still runs the
+    * read, so an empty frame returns empty and any row raises. A frame
+    * whose optimized plan ends in a global `Sort` reads the sort's child
+    * and sorts the ≤ `max` rows on the driver with Spark's ordering over
+    * the same `SortOrder`s, so the rows keep the frame's order without a
+    * range-partitioning job. */
+  def within(frame: DataFrame, max: Long)(tooMany: => String): Array[Row] = {
+    val (input, order) = frame.queryExecution.optimizedPlan match {
+      case s: Sort if s.global =>
+        (ColumnBridge.ofRows(frame.sparkSession, s.child),
+          Some(new InterpretedOrdering(s.order, s.child.output)))
+      case _ => (frame, None)
+    }
+    // a driver array holds fewer than Int.MaxValue rows, whatever `max` says
+    val bound = math.min(max, Int.MaxValue - 1L).toInt
+    val rows = if (max < 0) None else read(input, bound)
+    require(rows.isDefined, tooMany)
+    val toRow = CatalystTypeConverters.createToScalaConverter(frame.schema)
+    order.fold(rows.get)(rows.get.sorted(_)).map(toRow(_).asInstanceOf[Row])
+  }
+
+  /** The one bounded read behind [[collect]] and [[within]]: `Some(rows)`
+    * iff `frame` holds at most `max` rows. */
+  private def read(frame: DataFrame, max: Int): Option[Array[InternalRow]] = {
+    val rdd = frame.queryExecution.toRdd
+    val width = frame.schema.length
+    val limit = max + 1
     val parts = new Array[(Int, Array[Byte])](rdd.getNumPartitions)
     var total = 0L
     // the handler runs on the scheduler thread, possibly before submitJob
@@ -71,14 +107,17 @@ object LocalCollapse {
       (it: Iterator[InternalRow]) => encode(it, limit), parts.indices,
       (i: Int, part: (Int, Array[Byte])) => {
         total += part._1
-        if (total <= maxCells) parts(i) = part
+        if (total <= max) parts(i) = part
         else if (!over.getAndSet(true)) Option(job.get).foreach(_.cancel())
       }, ()))
     if (over.get) job.get.cancel()
     try Await.result(job.get, Duration.Inf)
     catch { case NonFatal(_) if over.get => () } // our own cancellation
     if (over.get) None
-    else Some(parts.flatMap { case (n, bytes) => decode(n, bytes, width) })
+    else {
+      ColumnBridge.doCheckpoint(rdd)
+      Some(parts.flatMap { case (n, bytes) => decode(n, bytes, width) })
+    }
   }
 
   /** Up to `limit` rows as length-prefixed UnsafeRow bytes, the encoding

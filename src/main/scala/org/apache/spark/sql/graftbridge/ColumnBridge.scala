@@ -25,6 +25,14 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Finish the pending (lazy) checkpoints under `rdd` after a job run by
+    * `SparkContext.submitJob`. `runJob` does this after every job and
+    * `submitJob` does not; a `localCheckpoint` left pending is finished by
+    * the next `runJob` instead, and two of those at once (the two
+    * broadcast builds of one join query) deadlock the DAG scheduler on
+    * the RDD and checkpoint-state locks. */
+  def doCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit = rdd.doCheckpoint()
+
   /** Unpersist the checkpointed RDD behind a `localCheckpoint`ed frame
     * (its plan is a LogicalRDD leaf). Iterative algorithms that re-
     * checkpoint per round use this to release the superseded round's

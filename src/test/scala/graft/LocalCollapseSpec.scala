@@ -131,6 +131,92 @@ class LocalCollapseSpec extends AnyFunSuite {
     assert(LocalCollapse.collect(cells, 100).map(_.length) == Some(100))
   }
 
+  test("LocalCollapse.within: under the bound, every row in exactly one job") {
+    val (rows, jobs, _) = jobsDuring(LocalCollapse.within(forty, 40)("unused"))
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 40L))
+    assert(jobs == 1, s"$jobs jobs")
+    // an ordered frame sorts on the driver: still one job, no range sampling
+    val (desc, sortJobs, _) = jobsDuring(
+      LocalCollapse.within(forty.orderBy(col("x").desc), 40)("unused"))
+    assert(desc.map(_.getLong(0)).toSeq == (39L to 0L by -1L))
+    assert(sortJobs == 1, s"$sortJobs jobs")
+  }
+
+  test("LocalCollapse: a read finishes the lazy localCheckpoint under it") {
+    // as SparkContext.runJob does: a checkpoint left pending would be
+    // finished by the next jobs instead, racing when two run at once
+    val ckpt = forty.localCheckpoint(eager = false)
+    val rdd = ckpt.queryExecution.analyzed.collectLeaves().collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.get
+    assert(!rdd.isCheckpointed)
+    assert(LocalCollapse.within(ckpt, 40)("unused").length == 40)
+    assert(rdd.isCheckpointed)
+  }
+
+  test("LocalCollapse.within: over the bound raises the caller's message") {
+    val e = intercept[IllegalArgumentException] {
+      LocalCollapse.within(forty, 39)("more than 39 rows — raise the cap")
+    }
+    assert(e.getMessage == "requirement failed: more than 39 rows — raise the cap")
+  }
+
+  test("LocalCollapse.within: max = 0 keeps an empty frame, raises on a row") {
+    assert(LocalCollapse.within(forty.filter(col("x") < 0), 0)("unused").isEmpty)
+    val e = intercept[IllegalArgumentException] {
+      LocalCollapse.within(forty.filter(col("x") === 7), 0)("no rows allowed")
+    }
+    assert(e.getMessage == "requirement failed: no rows allowed")
+  }
+
+  test("LocalCollapse.within: an ordered frame keeps Spark's order " +
+    "(NaN, null, non-ASCII keys)") {
+    val keyed = Seq[(String, java.lang.Double, Int)](
+      ("b", 1.0, 0), (null, 2.0, 1), ("é", Double.NaN, 2), ("中", -0.5, 3),
+      ("Z", null, 4), ("", 3.0, 5), ("b", Double.NaN, 6), (null, null, 7),
+      ("a", Double.NegativeInfinity, 8), ("é", 0.0, 9), ("ß", 1.0, 10),
+      ("b", -1.0, 11)).toDF("s", "d", "id").repartition(3)
+    Seq(
+      keyed.orderBy(col("s"), col("d"), col("id")),
+      keyed.orderBy(col("d").desc, col("s").asc_nulls_last, col("id")),
+      keyed.orderBy(col("s").desc_nulls_first, col("d").asc_nulls_last,
+        col("id"))
+    ).foreach { ordered =>
+      val ref = ordered.limit(13).collect().map(_.mkString("|")).toSeq
+      val got = LocalCollapse.within(ordered, 12)("unused")
+        .map(_.mkString("|")).toSeq
+      assert(got == ref)
+    }
+  }
+
+  test("theilSen: one bounded read on the local path, equal to the pair path") {
+    val small = spark.range(0, 300, 1, 3).select(
+      (col("id") * 0.7 + (col("id") % 5) * 11.0).as("xx"),
+      (col("id") % 17 - col("id") * 0.25).as("yy"))
+    val (fast, jobs, _) = jobsDuring(
+      rowsOf(Regression.theilSen(small, col("xx"), col("yy"))))
+    assert(jobs == 1, s"$jobs jobs")
+    val dist = rowsOf(Regression.theilSen(small, col("xx"), col("yy"),
+      maxLocalRows = 0))
+    assertClose(fast, dist, 0.0)
+  }
+
+  test("library code under ops/ has no hand-written limit(max + 1) bound") {
+    val walk = java.nio.file.Files.walk(
+      java.nio.file.Paths.get("src/main/scala/graft/ops"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.nonEmpty)
+    val bound = """\.limit\(\(?\w+ \+ 1\)?""".r
+    val hits = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if bound.findFirstIn(l).isDefined => s"$f:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("use LocalCollapse.within: ", ", ", ""))
+  }
+
   test("library code under ops/ and stats/ never writes session conf") {
     val roots = Seq("src/main/scala/graft/ops", "src/main/scala/graft/stats")
     val files = roots.flatMap { r =>
