@@ -463,9 +463,12 @@ object GraftGateway {
           a.drop(2).map(g => name(g) -> c(g)))
       case "boot_strap" =>
         // any inner aggregate expression — the reference's
-        // BootStrap('aggName', ...) generality (BootStrap.h:375-497)
+        // BootStrap('aggName', ...) generality (BootStrap.h:375-497);
+        // avg/mean/sum/count run as weighted sums, without the explode
         require(a.length >= 2, "boot_strap(aggExpr, B)")
-        Bootstrap.bootstrapAny(df, num(a(1)).toInt)(Seq("stat" -> c(a(0))))
+        val b = num(a(1)).toInt
+        Bootstrap.bootstrapMoment(df, b, c(a(0)))
+          .getOrElse(Bootstrap.bootstrapAny(df, b)(Seq("stat" -> c(a(0)))))
       case "permutation" =>
         require(a.length >= 3, "permutation(y, t, B[, mde, mde_type])")
         val (obs, p, _) = Bootstrap.permutationTest(df, c(a(0)), c(a(1)),
@@ -1579,7 +1582,8 @@ object GraftGateway {
         val m = Dml.nonParamDml(df, c(a(0)), c(a(1)), a.drop(2).map(c))
         Seq((m.ate, m.ateStderr, m.atePValue)).toDF("ate", "stderr", "p_value")
       case "mann_whitney_utest" | "mann_whitney_u_test" =>
-        // top-level SQL auto-routes to the range-partitioned path — the
+        // top-level SQL auto-routes to RankTests — tie cells collapsed to
+        // the driver under its bound, range-partitioned past it — where the
         // O(distinct)-state histogram aggregate (still used for grouped /
         // nested calls via the function registry) OOMs on all-distinct
         // continuous columns at scale; this path never does

@@ -1,9 +1,14 @@
 package graft.agg
 
+import java.io.{DataInputStream, DataOutputStream}
+
+import scala.collection.mutable
+
 import graft.expr.ExprTree
 import graft.stats.{DeltaStats, TtestCommon}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Result row of a one-sample t-test (reference ttest_1samp.h:201-255
   * emits the same six fields as a formatted text block; we emit a typed
@@ -19,48 +24,49 @@ case class Ttest2Result(mean0: Double, mean1: Double, estimate: Double,
 /** Two-group delta-method state. */
 case class Ttest2Buf(s0: DeltaStats, s1: DeltaStats)
 
-object AggEncoders {
-  implicit val deltaStatsEnc: Encoder[DeltaStats] = Encoders.product[DeltaStats]
-  implicit val t2BufEnc: Encoder[Ttest2Buf] = Encoders.product[Ttest2Buf]
-  implicit val t1ResEnc: Encoder[Ttest1Result] = Encoders.product[Ttest1Result]
-  implicit val t2ResEnc: Encoder[Ttest2Result] = Encoders.product[Ttest2Result]
-  implicit val doubleEnc: Encoder[Double] = Encoders.scalaDouble
+/** Kernels over a DeltaStats buffer of the `k` leading double inputs
+  * (delta_method, ttest_1samp, matrix_multiplication): a row with a null
+  * input is skipped. */
+abstract class DeltaKernel(k: Int) extends Kernel[DeltaStats] {
+  def zero: DeltaStats = DeltaStats.zero(k)
+  def reduce(b: DeltaStats, in: Array[Expression], row: InternalRow): DeltaStats = {
+    val xs = Kernel.doubles(in, row, k)
+    if (xs != null) b.update(xs)
+    b
+  }
+  def merge(b: DeltaStats, o: DeltaStats): DeltaStats = b.merge(o)
+  def write(b: DeltaStats, out: DataOutputStream): Unit = Kernel.writeStats(out, b)
+  def read(in: DataInputStream): DeltaStats = Kernel.readStats(in)
 }
-import AggEncoders._
+
+object DeltaKernel {
+  val Ttest2Type: DataType = Kernel.doubleStruct("mean0", "mean1", "estimate", "stderr",
+    "t_statistic", "p_value", "lower", "upper")
+}
 
 /** `delta_method('x1/x2', isStd)(cols…)` — variance (or std) of a smooth
   * function of per-column means, single pass, O(k²) state.
   * Spark-side re-expression of the reference aggregate
   * (/root/reference/src/udf/starrocks/be/src/exprs/agg/delta_method.h:348-444):
-  * partial aggregation + buffer serialization are what Spark's Aggregator
-  * contract already provides, so only the state math is custom.
+  * partial aggregation and buffer serialization are [[NativeAgg]]'s, so
+  * only the state math is custom.
   */
-class DeltaMethodAgg(expr: String, isStd: Boolean, k: Int)
-    extends Aggregator[Array[Double], DeltaStats, Double] {
+class DeltaMethodAgg(expr: String, isStd: Boolean, k: Int) extends DeltaKernel(k) {
   @transient private lazy val tree = ExprTree(expr, k)
-  def zero: DeltaStats = DeltaStats.zero(k)
-  def reduce(b: DeltaStats, a: Array[Double]): DeltaStats = {
-    if (a != null && a.length == k) b.update(a)
-    b
-  }
-  def merge(b1: DeltaStats, b2: DeltaStats): DeltaStats = b1.merge(b2)
+  def dataType: DataType = DoubleType
   def finish(s: DeltaStats): Double =
     if (s.count <= 1) Double.NaN
     else DeltaStats.calcDeltaMethod(tree, s.count, s.means, s.covMatrix, isStd)
-  def bufferEncoder: Encoder[DeltaStats] = deltaStatsEnc
-  def outputEncoder: Encoder[Double] = doubleEnc
 }
 
 /** `ttest_1samp('x1/x2', alternative, mu, cuped, alpha)(cols…)` — one-sample
   * t-test of f(means) against mu, optional CUPED covariate adjustment.
   * Port of ttest_1samp.h:201-255; p-value vs normal, CI vs Student-t. */
 class Ttest1SampAgg(expr: String, alternativeStr: String, mu: Double,
-                    cuped: String, alpha: Double, k: Int)
-    extends Aggregator[Array[Double], DeltaStats, Ttest1Result] {
+                    cuped: String, alpha: Double, k: Int) extends DeltaKernel(k) {
   @transient private lazy val alt = TtestCommon.alternative(alternativeStr)
-  def zero: DeltaStats = DeltaStats.zero(k)
-  def reduce(b: DeltaStats, a: Array[Double]): DeltaStats = { if (a != null) b.update(a); b }
-  def merge(b1: DeltaStats, b2: DeltaStats): DeltaStats = b1.merge(b2)
+  def dataType: DataType =
+    Kernel.doubleStruct("estimate", "stderr", "t_statistic", "p_value", "lower", "upper")
   def finish(s: DeltaStats): Ttest1Result = {
     if (s.count <= 1)
       return Ttest1Result(Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN)
@@ -78,27 +84,34 @@ class Ttest1SampAgg(expr: String, alternativeStr: String, mu: Double,
     val (lo, hi) = TtestCommon.confidenceInterval(estimate, stderr, s.count, alpha, alt)
     Ttest1Result(estimate, stderr, t, p, lo, hi)
   }
-  def bufferEncoder: Encoder[DeltaStats] = deltaStatsEnc
-  def outputEncoder: Encoder[Ttest1Result] = t1ResEnc
 }
 
 /** `ttest_2samp('x1/x2', index, alternative, cuped, alpha)(cols…, treatment)` —
   * two-sample t-test of f(means) between treatment groups 0/1, optional
   * CUPED with θ estimated on the pooled sample.
   * Port of ttest_2samp.h:359-430 (non-PSE path; post-stratification is
-  * provided by [[Ttest2SampPseAgg]]). */
+  * provided by [[Ttest2SampPseAgg]]). Inputs: the `k` doubles, then the
+  * int treatment (0 = control, anything else = treatment). */
 class Ttest2SampAgg(expr: String, alternativeStr: String, cuped: String,
-                    alpha: Double, k: Int, mu: Double = 0.0)
-    extends Aggregator[(Array[Double], Int), Ttest2Buf, Ttest2Result] {
+                    alpha: Double, k: Int, mu: Double = 0.0) extends Kernel[Ttest2Buf] {
   @transient private lazy val alt = TtestCommon.alternative(alternativeStr)
+  def dataType: DataType = DeltaKernel.Ttest2Type
   def zero: Ttest2Buf = Ttest2Buf(DeltaStats.zero(k), DeltaStats.zero(k))
-  def reduce(b: Ttest2Buf, a: (Array[Double], Int)): Ttest2Buf = {
-    if (a._1 != null) { if (a._2 == 0) b.s0.update(a._1) else b.s1.update(a._1) }
+  def reduce(b: Ttest2Buf, in: Array[Expression], row: InternalRow): Ttest2Buf = {
+    val xs = Kernel.doubles(in, row, k)
+    val t = in(k).eval(row)
+    if (xs != null && t != null) {
+      if (t.asInstanceOf[Int] == 0) b.s0.update(xs) else b.s1.update(xs)
+    }
     b
   }
   def merge(b1: Ttest2Buf, b2: Ttest2Buf): Ttest2Buf = {
     b1.s0.merge(b2.s0); b1.s1.merge(b2.s1); b1
   }
+  def write(b: Ttest2Buf, out: DataOutputStream): Unit = {
+    Kernel.writeStats(out, b.s0); Kernel.writeStats(out, b.s1)
+  }
+  def read(in: DataInputStream): Ttest2Buf = Ttest2Buf(Kernel.readStats(in), Kernel.readStats(in))
   def finish(b: Ttest2Buf): Ttest2Result = {
     val nan = Double.NaN
     if (b.s0.count <= 1 || b.s1.count <= 1)
@@ -116,24 +129,40 @@ class Ttest2SampAgg(expr: String, alternativeStr: String, cuped: String,
       estimate, stderr, b.s0.count + b.s1.count, alpha, alt)
     Ttest2Result(m0, m1, estimate, stderr, t, p, lo, hi)
   }
-  def bufferEncoder: Encoder[Ttest2Buf] = t2BufEnc
-  def outputEncoder: Encoder[Ttest2Result] = t2ResEnc
 }
 
 /** Post-stratified (PSE) two-sample t-test: per-stratum delta states are
   * kept in a map keyed by the stratum value; stratum estimates recombine
-  * weighted by stratum share (ttest_2samp.h:292-357). */
-case class Ttest2PseBuf(groups: scala.collection.mutable.HashMap[(Long, Int), DeltaStats])
+  * weighted by stratum share (ttest_2samp.h:292-357). Inputs: the `k`
+  * doubles, the int treatment, the long stratum. */
+case class Ttest2PseBuf(groups: mutable.HashMap[(Long, Int), DeltaStats])
 
 class Ttest2SampPseAgg(expr: String, alternativeStr: String, cuped: String,
-                       alpha: Double, k: Int)
-    extends Aggregator[(Array[Double], Int, Long), Ttest2PseBuf, Ttest2Result] {
+                       alpha: Double, k: Int) extends Kernel[Ttest2PseBuf] {
   @transient private lazy val alt = TtestCommon.alternative(alternativeStr)
-  def zero: Ttest2PseBuf = Ttest2PseBuf(scala.collection.mutable.HashMap.empty)
-  def reduce(b: Ttest2PseBuf, a: (Array[Double], Int, Long)): Ttest2PseBuf = {
-    if (a._1 != null) {
-      val key = (a._3, if (a._2 == 0) 0 else 1)
-      b.groups.getOrElseUpdate(key, DeltaStats.zero(k)).update(a._1)
+  def dataType: DataType = DeltaKernel.Ttest2Type
+  def zero: Ttest2PseBuf = Ttest2PseBuf(mutable.HashMap.empty)
+  def reduce(b: Ttest2PseBuf, in: Array[Expression], row: InternalRow): Ttest2PseBuf = {
+    val xs = Kernel.doubles(in, row, k)
+    val t = in(k).eval(row)
+    val stratum = in(k + 1).eval(row)
+    if (xs != null && t != null && stratum != null) {
+      val key = (stratum.asInstanceOf[Long], if (t.asInstanceOf[Int] == 0) 0 else 1)
+      b.groups.getOrElseUpdate(key, DeltaStats.zero(k)).update(xs)
+    }
+    b
+  }
+  def write(b: Ttest2PseBuf, out: DataOutputStream): Unit = {
+    out.writeInt(b.groups.size)
+    b.groups.foreach { case ((stratum, t), s) =>
+      out.writeLong(stratum); out.writeInt(t); Kernel.writeStats(out, s)
+    }
+  }
+  def read(in: DataInputStream): Ttest2PseBuf = {
+    val b = zero
+    for (_ <- 0 until in.readInt()) {
+      val key = (in.readLong(), in.readInt())
+      b.groups.put(key, Kernel.readStats(in))
     }
     b
   }
@@ -175,6 +204,4 @@ class Ttest2SampPseAgg(expr: String, alternativeStr: String, cuped: String,
     val (lo, hi) = TtestCommon.confidenceInterval(estimate, stderr, totalCount, alpha, alt)
     Ttest2Result(mean0, mean1, estimate, stderr, t, p, lo, hi)
   }
-  def bufferEncoder: Encoder[Ttest2PseBuf] = Encoders.kryo[Ttest2PseBuf]
-  def outputEncoder: Encoder[Ttest2Result] = t2ResEnc
 }

@@ -1,8 +1,11 @@
 package graft.agg
 
+import java.io.{DataInputStream, DataOutputStream}
+
 import graft.stats.{DeltaStats, Dist, LinAlg, TtestCommon}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import scala.collection.mutable
 
 /** Sample-ratio-mismatch chi-square (reference srm.h:51-258): per-group
@@ -11,16 +14,33 @@ import scala.collection.mutable
 case class SrmResult(groups: Array[String], observed: Array[Double],
                      expected: Array[Double], chisq: Double, p_value: Double)
 
-class SrmAgg(ratios: Array[Double])
-    extends Aggregator[(String, Double), mutable.HashMap[String, Double], SrmResult] {
+/** Inputs: the string group (null skips the row), the double value. */
+class SrmAgg(ratios: Array[Double]) extends Kernel[mutable.HashMap[String, Double]] {
+  def dataType: DataType = Kernel.struct("groups" -> ArrayType(StringType, containsNull = true),
+    "observed" -> Kernel.Doubles, "expected" -> Kernel.Doubles,
+    "chisq" -> DoubleType, "p_value" -> DoubleType)
   def zero: mutable.HashMap[String, Double] = mutable.HashMap.empty
-  def reduce(b: mutable.HashMap[String, Double], a: (String, Double)): mutable.HashMap[String, Double] = {
-    if (a._1 != null) b(a._1) = b.getOrElse(a._1, 0.0) + a._2
+  def reduce(b: mutable.HashMap[String, Double], in: Array[Expression],
+             row: InternalRow): mutable.HashMap[String, Double] = {
+    val g = in(0).eval(row)
+    if (g != null) {
+      val key = g.toString
+      b(key) = b.getOrElse(key, 0.0) + in(1).eval(row).asInstanceOf[Double]
+    }
     b
   }
   def merge(b1: mutable.HashMap[String, Double], b2: mutable.HashMap[String, Double]): mutable.HashMap[String, Double] = {
     b2.foreach { case (k, v) => b1(k) = b1.getOrElse(k, 0.0) + v }
     b1
+  }
+  def write(b: mutable.HashMap[String, Double], out: DataOutputStream): Unit = {
+    out.writeInt(b.size)
+    b.foreach { case (k, v) => Kernel.writeString(out, k); out.writeDouble(v) }
+  }
+  def read(in: DataInputStream): mutable.HashMap[String, Double] = {
+    val b = zero
+    for (_ <- 0 until in.readInt()) b(Kernel.readString(in)) = in.readDouble()
+    b
   }
   def finish(b: mutable.HashMap[String, Double]): SrmResult = {
     val groups = b.keys.toArray.sorted
@@ -36,8 +56,6 @@ class SrmAgg(ratios: Array[Double])
     val p = if (dof <= 0) Double.NaN else 1.0 - Dist.chiSqCdf(chisq, dof)
     SrmResult(groups, obs, exp, chisq, p)
   }
-  def bufferEncoder: Encoder[mutable.HashMap[String, Double]] = Encoders.kryo
-  def outputEncoder: Encoder[SrmResult] = Encoders.product[SrmResult]
 }
 
 /** Two-sample value→count histogram shared by the rank tests. State is
@@ -101,6 +119,15 @@ case class TwoSampleHist(m: mutable.HashMap[Double, Array[Long]]) {
 }
 object TwoSampleHist {
   def empty: TwoSampleHist = TwoSampleHist(mutable.HashMap.empty)
+  def write(h: TwoSampleHist, out: DataOutputStream): Unit = {
+    out.writeInt(h.m.size)
+    h.m.foreach { case (v, c) => out.writeDouble(v); out.writeLong(c(0)); out.writeLong(c(1)) }
+  }
+  def read(in: DataInputStream): TwoSampleHist = {
+    val h = empty
+    for (_ <- 0 until in.readInt()) h.m.put(in.readDouble(), Array(in.readLong(), in.readLong()))
+    h
+  }
   /** Per-buffer distinct-value cap before [[TwoSampleHist.add]] fails fast
     * with a pointer to the distributed path (~1M entries ≈ 80 MB of boxed
     * HashMap per partial buffer — beyond this the aggregate is the wrong
@@ -108,23 +135,32 @@ object TwoSampleHist {
   @volatile var maxDistinct: Int = 1 << 20
 }
 
+/** Kernels over the two-sample histogram. Inputs: the double value (NaN
+  * when the value or the treatment is null), the int treatment; `keep`
+  * says which values enter the histogram. */
+abstract class TwoSampleKernel extends Kernel[TwoSampleHist] {
+  protected def keep(v: Double): Boolean
+  def zero: TwoSampleHist = TwoSampleHist.empty
+  def reduce(b: TwoSampleHist, in: Array[Expression], row: InternalRow): TwoSampleHist = {
+    val v = in(0).eval(row).asInstanceOf[Double]
+    if (keep(v)) b.add(v, in(1).eval(row).asInstanceOf[Int])
+    b
+  }
+  def merge(b1: TwoSampleHist, b2: TwoSampleHist): TwoSampleHist = b1.mergeIn(b2)
+  def write(b: TwoSampleHist, out: DataOutputStream): Unit = TwoSampleHist.write(b, out)
+  def read(in: DataInputStream): TwoSampleHist = TwoSampleHist.read(in)
+}
+
 case class MannWhitneyResult(u_statistic: Double, p_value: Double)
 
 /** Mann-Whitney U (mann_whitney.h:90-175): average ranks with tie
   * correction, optional continuity correction, normal approximation. */
-class MannWhitneyAgg(alternativeStr: String, continuity: Boolean)
-    extends Aggregator[(Double, Int), TwoSampleHist, MannWhitneyResult] {
+class MannWhitneyAgg(alternativeStr: String, continuity: Boolean) extends TwoSampleKernel {
   @transient private lazy val alt = TtestCommon.alternative(alternativeStr)
-  def zero: TwoSampleHist = TwoSampleHist.empty
-  def reduce(b: TwoSampleHist, a: (Double, Int)): TwoSampleHist = {
-    if (!a._1.isNaN && !a._1.isInfinite) b.add(a._1, a._2)
-    b
-  }
-  def merge(b1: TwoSampleHist, b2: TwoSampleHist): TwoSampleHist = b1.mergeIn(b2)
+  def dataType: DataType = Kernel.doubleStruct("u_statistic", "p_value")
+  protected def keep(v: Double): Boolean = !v.isNaN && !v.isInfinite
   def finish(b: TwoSampleHist): MannWhitneyResult =
     MannWhitneyMath.testHist(b, alt, continuity)
-  def bufferEncoder: Encoder[TwoSampleHist] = Encoders.kryo
-  def outputEncoder: Encoder[MannWhitneyResult] = Encoders.product[MannWhitneyResult]
 }
 
 object MannWhitneyMath {
@@ -138,34 +174,43 @@ object MannWhitneyMath {
     testHist(h, alt, continuity)
   }
 
-  /** Returns (u2, p) exactly like the reference's [u2, p_value] JSON.
-    * Average ranks over value groups: a group spanning 0-based positions
-    * [left, right) has average rank (left + right + 1)/2. */
   def testHist(h: TwoSampleHist, alt: TtestCommon.Alternative,
                continuity: Boolean): MannWhitneyResult = {
-    val (vs, c0s, c1s) = h.sortedEntries
-    var n1L = 0L; var n2L = 0L
-    var i = 0
-    while (i < vs.length) { n1L += c0s(i); n2L += c1s(i); i += 1 }
-    val n1 = n1L.toDouble
-    val n2 = n2L.toDouble
-    val size = n1L + n2L
-    if (n1L == 0 || n2L == 0) return MannWhitneyResult(Double.NaN, Double.NaN)
+    val (_, c0s, c1s) = h.sortedEntries
+    rankSum(c0s, c1s, alt, continuity)
+  }
+
+  /** The test from tie groups in ascending value order (count in sample 0
+    * and in sample 1 per distinct value). A group spanning 0-based
+    * positions [left, right) has average rank (left + right + 1)/2. */
+  def rankSum(c0s: Array[Long], c1s: Array[Long], alt: TtestCommon.Alternative,
+              continuity: Boolean): MannWhitneyResult = {
+    var n = 0L; var n1 = 0L; var maxTie = 0L
     var r1 = 0.0
     var tieNum = 0.0
-    var left = 0L
-    i = 0
-    while (i < vs.length) {
-      val countEqual = (c0s(i) + c1s(i)).toDouble
-      if (countEqual == size) return MannWhitneyResult(Double.NaN, Double.NaN)
-      val right = left + c0s(i) + c1s(i)
-      val adjusted = (left + right + 1) / 2.0
-      tieNum += countEqual * countEqual * countEqual - countEqual
-      r1 += c0s(i) * adjusted
-      left = right
+    var i = 0
+    while (i < c0s.length) {
+      val cnt = c0s(i) + c1s(i)
+      val right = n + cnt
+      r1 += c0s(i) * ((n + right + 1) / 2.0)
+      tieNum += cnt.toDouble * cnt * cnt - cnt
+      n = right; n1 += c0s(i); maxTie = math.max(maxTie, cnt)
       i += 1
     }
-    val tieCorrection = 1.0 - tieNum / (size.toDouble * size * size - size)
+    fromRankSum(r1, n1, n - n1, tieNum, maxTie == n, alt, continuity)
+  }
+
+  /** Returns (u2, p) exactly like the reference's [u2, p_value] JSON, from
+    * sample 0's rank sum `r1`, the sample sizes and Σ(t³ − t) over tie
+    * groups; NaN when a sample is empty or every value is tied. Shared
+    * with the distributed [[graft.ops.RankTests.mannWhitneyU]] path. */
+  def fromRankSum(r1: Double, n1L: Long, n2L: Long, tieNum: Double, allTied: Boolean,
+                  alt: TtestCommon.Alternative, continuity: Boolean): MannWhitneyResult = {
+    if (n1L == 0 || n2L == 0 || allTied) return MannWhitneyResult(Double.NaN, Double.NaN)
+    val n1 = n1L.toDouble
+    val n2 = n2L.toDouble
+    val size = n1 + n2
+    val tieCorrection = 1.0 - tieNum / (size * size * size - size)
     val u1 = n1 * n2 + n1 * (n1 + 1.0) / 2.0 - r1
     val u2 = n1 * n2 - u1
     val meanrank = n1 * n2 / 2.0 + (if (continuity) 0.5 else 0.0)
@@ -191,18 +236,11 @@ case class KsResult(d_statistic: Double, p_value: Double)
   * D = sup |F1−F2| via sorted co-walk; exact Schröer-Trenkler recursion for
   * max(n1,n2) ≤ 10000, else Durbin (two-sided) / Hodges (one-sided)
   * asymptotics. */
-class KsAgg(alternativeStr: String, methodStr: String = "auto")
-    extends Aggregator[(Double, Int), TwoSampleHist, KsResult] {
+class KsAgg(alternativeStr: String, methodStr: String = "auto") extends TwoSampleKernel {
   @transient private lazy val alt = TtestCommon.alternative(alternativeStr)
-  def zero: TwoSampleHist = TwoSampleHist.empty
-  def reduce(b: TwoSampleHist, a: (Double, Int)): TwoSampleHist = {
-    if (!a._1.isNaN) b.add(a._1, a._2)
-    b
-  }
-  def merge(b1: TwoSampleHist, b2: TwoSampleHist): TwoSampleHist = b1.mergeIn(b2)
+  def dataType: DataType = Kernel.doubleStruct("d_statistic", "p_value")
+  protected def keep(v: Double): Boolean = !v.isNaN
   def finish(b: TwoSampleHist): KsResult = KsMath.testHist(b, alt, methodStr)
-  def bufferEncoder: Encoder[TwoSampleHist] = Encoders.kryo
-  def outputEncoder: Encoder[KsResult] = Encoders.product[KsResult]
 }
 
 object KsMath {
@@ -352,14 +390,9 @@ object KsMath {
   * (matrix_multiplication.h:162-189). Powers the IRLS logistic loop. */
 case class MatrixResult(matrix: Array[Array[Double]])
 
-class MatrixMulAgg(k: Int, invert: Boolean)
-    extends Aggregator[Array[Double], DeltaStats, MatrixResult] {
-  def zero: DeltaStats = DeltaStats.zero(k)
-  def reduce(b: DeltaStats, a: Array[Double]): DeltaStats = {
-    if (a != null && a.length == k) b.update(a)
-    b
-  }
-  def merge(b1: DeltaStats, b2: DeltaStats): DeltaStats = b1.merge(b2)
+class MatrixMulAgg(k: Int, invert: Boolean) extends DeltaKernel(k) {
+  def dataType: DataType =
+    Kernel.struct("matrix" -> ArrayType(Kernel.Doubles, containsNull = true))
   def finish(s: DeltaStats): MatrixResult = {
     val xtx = s.xtx
     if (!invert) MatrixResult(xtx)
@@ -368,6 +401,4 @@ class MatrixMulAgg(k: Int, invert: Boolean)
       MatrixResult(inv)
     }
   }
-  def bufferEncoder: Encoder[DeltaStats] = AggEncoders.deltaStatsEnc
-  def outputEncoder: Encoder[MatrixResult] = Encoders.product[MatrixResult]
 }

@@ -1,8 +1,11 @@
 package graft.agg
 
+import java.io.{DataInputStream, DataOutputStream}
+
 import graft.stats.{DeltaStats, Dist, LinAlg}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType}
 
 /** OLS/WLS sufficient statistics: Gram matrix of X (via DeltaStats), Xᵀy,
   * and the scalar y stats. Port of OlsStats
@@ -99,6 +102,30 @@ object OlsBuf {
     OlsBuf(DeltaStats.zero(k), DeltaStats.zero(1), new Array[Double](k), 0.0)
 }
 
+/** Kernels over an OlsBuf. Inputs: y, the `k` regressors, the weight — all
+  * doubles; a row with any null is skipped (listwise, R lm na.omit). */
+abstract class OlsKernel(k: Int, useBias: Boolean) extends Kernel[OlsBuf] {
+  private val kb = k + (if (useBias) 1 else 0)
+  def zero: OlsBuf = OlsBuf.zero(kb)
+  def reduce(b: OlsBuf, in: Array[Expression], row: InternalRow): OlsBuf = {
+    val v = Kernel.doubles(in, row, k + 2)
+    if (v != null) {
+      val xs = new Array[Double](kb)
+      System.arraycopy(v, 1, xs, 0, k)
+      if (useBias) xs(k) = 1.0
+      b.update(v(0), xs, v(k + 1))
+    }
+    b
+  }
+  def merge(b1: OlsBuf, b2: OlsBuf): OlsBuf = b1.merge(b2)
+  def write(b: OlsBuf, out: DataOutputStream): Unit = {
+    Kernel.writeStats(out, b.x); Kernel.writeStats(out, b.y)
+    Kernel.writeDoubles(out, b.xty); out.writeDouble(b.weightSum)
+  }
+  def read(in: DataInputStream): OlsBuf =
+    OlsBuf(Kernel.readStats(in), Kernel.readStats(in), Kernel.readDoubles(in), in.readDouble())
+}
+
 /** Full inference output — the typed equivalent of the reference's R-style
   * `lm` summary text (ols.h:508-547). `coefficients` ordering matches the
   * input X columns; when useBias, the intercept is LAST (reference appends
@@ -118,21 +145,13 @@ case class OlsSummary(
   * β = (XᵀX)⁻¹Xᵀy; σ² = (yᵀy − 2βᵀXᵀy + βᵀXᵀXβ)/df with df = n−k−1;
   * se = sqrt(diag((XᵀX)⁻¹)σ²); p via Student-t(df); R² from
   * βᵀ Cov(X) β / Var(y); F = (R²-num/k)/(SSE/df) with p via F(k, df). */
-class OlsAgg(k: Int, useBias: Boolean)
-    extends Aggregator[(Double, Array[Double], Double), OlsBuf, OlsSummary] {
-  private val kb = k + (if (useBias) 1 else 0)
-  def zero: OlsBuf = OlsBuf.zero(kb)
-  def reduce(b: OlsBuf, a: (Double, Array[Double], Double)): OlsBuf = {
-    if (a._2 != null && a._2.length == k) {
-      val xs = if (useBias) a._2 :+ 1.0 else a._2
-      b.update(a._1, xs, a._3)
-    }
-    b
-  }
-  def merge(b1: OlsBuf, b2: OlsBuf): OlsBuf = b1.merge(b2)
+class OlsAgg(k: Int, useBias: Boolean) extends OlsKernel(k, useBias) {
+  def dataType: DataType = Kernel.struct("n" -> LongType, "k" -> IntegerType,
+    "use_bias" -> BooleanType, "coefficients" -> Kernel.Doubles, "stderr" -> Kernel.Doubles,
+    "t_values" -> Kernel.Doubles, "p_values" -> Kernel.Doubles,
+    "residual_stderr" -> DoubleType, "r2" -> DoubleType, "adj_r2" -> DoubleType,
+    "f_statistic" -> DoubleType, "f_pvalue" -> DoubleType)
   def finish(b: OlsBuf): OlsSummary = OlsFinalizer.summary(b, k, useBias)
-  def bufferEncoder: Encoder[OlsBuf] = Encoders.product[OlsBuf]
-  def outputEncoder: Encoder[OlsSummary] = Encoders.product[OlsSummary]
 }
 
 object OlsFinalizer {

@@ -1,8 +1,11 @@
 package graft.agg
 
+import java.io.{DataInputStream, DataOutputStream}
+
 import graft.stats.{DeltaStats, Dist, TtestCommon}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 import scala.collection.mutable
 
 /** Experiment-platform two-sample t-test (WeChat "xexpt"), port of
@@ -49,20 +52,33 @@ object XexptAgg {
   }
 }
 
+/** Inputs: the `numVars` doubles, the long uin, the long treatment. */
 class XexptAgg(numVars: Int, cuped: String, alpha: Double, mde: Double,
                power: Double, metricType: String, ratios: Array[Double])
-    extends Aggregator[(Array[Double], Long, Long), XexptBuf, XexptResult] {
+    extends Kernel[XexptBuf] {
   import XexptAgg._
   require(numVars == 2 || numVars == 4, "xexpt takes (num, den[, num_pre, den_pre])")
   require(cuped.isEmpty || cuped == "x3/x4", "xexpt cuped must be x3/x4 (reference convention)")
 
+  def dataType: DataType = Kernel.struct(
+    Seq("groupname0" -> LongType, "groupname1" -> LongType) ++
+      Seq("numerator0", "numerator1", "denominator0", "denominator1",
+        "numerator_pre0", "numerator_pre1", "denominator_pre0", "denominator_pre1",
+        "mean0", "mean1", "std_samp0", "std_samp1",
+        "diff_relative", "lower_relative", "upper_relative",
+        "p_value", "t_statistic", "diff", "lower", "upper",
+        "power", "recommend_samples", "mde").map(_ -> DoubleType): _*)
+
   def zero: XexptBuf = XexptBuf(mutable.HashMap.empty)
 
-  def reduce(b: XexptBuf, a: (Array[Double], Long, Long)): XexptBuf = {
-    val (xs, uin, treatment) = a
-    if (xs != null && xs.length == numVars) {
-      val g = b.groups.getOrElseUpdate(treatment, XexptGroup(0L, new Array[Double](numVars * NumBuckets)))
-      val bucket = bucketOf(uin)
+  def reduce(b: XexptBuf, in: Array[Expression], row: InternalRow): XexptBuf = {
+    val xs = Kernel.doubles(in, row, numVars)
+    val uin = in(numVars).eval(row)
+    val treatment = in(numVars + 1).eval(row)
+    if (xs != null && uin != null && treatment != null) {
+      val g = b.groups.getOrElseUpdate(treatment.asInstanceOf[Long],
+        XexptGroup(0L, new Array[Double](numVars * NumBuckets)))
+      val bucket = bucketOf(uin.asInstanceOf[Long])
       var i = 0
       while (i < numVars) { g.buckets(i * NumBuckets + bucket) += xs(i); i += 1 }
       g.count += 1
@@ -81,6 +97,22 @@ class XexptAgg(numVars: Int, cuped: String, alpha: Double, mde: Double,
       }
     }
     b1
+  }
+
+  def write(b: XexptBuf, out: DataOutputStream): Unit = {
+    out.writeInt(b.groups.size)
+    b.groups.foreach { case (k, g) =>
+      out.writeLong(k); out.writeLong(g.count); Kernel.writeDoubles(out, g.buckets)
+    }
+  }
+
+  def read(in: DataInputStream): XexptBuf = {
+    val b = zero
+    for (_ <- 0 until in.readInt()) {
+      val k = in.readLong()
+      b.groups.put(k, XexptGroup(in.readLong(), Kernel.readDoubles(in)))
+    }
+    b
   }
 
   def finish(b: XexptBuf): XexptResult = {
@@ -195,7 +227,4 @@ class XexptAgg(numVars: Int, cuped: String, alpha: Double, mde: Double,
       pValue, tStat, estimate, lower, upper,
       powerOut, math.floor(recommend + 0.5), mdeOut)
   }
-
-  def bufferEncoder: Encoder[XexptBuf] = Encoders.kryo
-  def outputEncoder: Encoder[XexptResult] = Encoders.product[XexptResult]
 }

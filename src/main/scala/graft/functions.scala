@@ -2,7 +2,6 @@ package graft
 
 import graft.agg._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 /** Public Column builders — the Spark-native surface replacing the
@@ -14,38 +13,27 @@ import org.apache.spark.sql.functions._
   */
 object functions {
 
-  /** Pack the argument columns as array<double>, NULL when any component
-    * (or any `extra` column) is null — the aggregates skip null inputs, so
-    * incomplete rows are dropped listwise exactly like the reference
-    * engines' aggregate NULL-skipping (and R's lm na.omit). Without the
-    * guard a null component would decode as 0.0 and contaminate the fit. */
-  private def doublesRequiring(cols: Seq[Column], extra: Column*): Column = {
-    val arr = array(cols.map(_.cast("double")): _*)
-    val conds = cols.map(_.cast("double").isNotNull) ++ extra.map(_.isNotNull)
-    if (conds.isEmpty) arr else when(conds.reduce(_ && _), arr)
-  }
-  private def doubles(cols: Seq[Column]): Column = doublesRequiring(cols)
+  /** The argument columns cast to double: the leading inputs of every
+    * kernel, which skips a row when any of them (or any other input it
+    * requires) is null — incomplete rows drop listwise, exactly like the
+    * reference engines' aggregate NULL-skipping (and R's lm na.omit). */
+  private def doubles(cols: Seq[Column]): Seq[Column] = cols.map(_.cast("double"))
 
   private val DefaultAlpha = graft.stats.TtestCommon.DefaultAlpha
 
   /** Variance (isStd=false) or standard error (isStd=true) of
     * f(x̄₁..x̄ₖ) by the delta method — single pass, O(k²) state. */
-  def delta_method(expr: String, isStd: Boolean, cols: Seq[Column]): Column = {
-    val agg = udaf(new DeltaMethodAgg(expr, isStd, cols.length),
-      ExpressionEncoder[Array[Double]]())
-    agg(doubles(cols))
-  }
+  def delta_method(expr: String, isStd: Boolean, cols: Seq[Column]): Column =
+    Kernel.column(new DeltaMethodAgg(expr, isStd, cols.length), doubles(cols): _*)
 
   /** One-sample t-test of f(means) against mu; optional CUPED expression
     * over the same x1..xk symbols, e.g. "x3/x4" or "x3+x4". Returns a
     * struct (estimate, stderr, t_statistic, p_value, lower, upper). */
   def ttest_1samp(expr: String, alternative: String = "two-sided", mu: Double = 0.0,
                   cuped: String = "", alpha: Double = DefaultAlpha)
-                 (cols: Column*): Column = {
-    val agg = udaf(new Ttest1SampAgg(expr, alternative, mu, cuped, alpha, cols.length),
-      ExpressionEncoder[Array[Double]]())
-    agg(doubles(cols))
-  }
+                 (cols: Column*): Column =
+    Kernel.column(new Ttest1SampAgg(expr, alternative, mu, cuped, alpha, cols.length),
+      doubles(cols): _*)
 
   /** Two-sample t-test of f(means) between treatment==0 and ==1. Returns a
     * struct (mean0, mean1, estimate, stderr, t_statistic, p_value, lower,
@@ -53,50 +41,48 @@ object functions {
   def ttest_2samp(expr: String, treatment: Column, alternative: String = "two-sided",
                   cuped: String = "", alpha: Double = DefaultAlpha,
                   mu: Double = 0.0)
-                 (cols: Column*): Column = {
-    val agg = udaf(new Ttest2SampAgg(expr, alternative, cuped, alpha, cols.length, mu),
-      ExpressionEncoder[(Array[Double], Int)]())
-    agg(doublesRequiring(cols, treatment), treatment.cast("int"))
-  }
+                 (cols: Column*): Column =
+    Kernel.column(new Ttest2SampAgg(expr, alternative, cuped, alpha, cols.length, mu),
+      doubles(cols) :+ treatment.cast("int"): _*)
 
   /** Post-stratified two-sample t-test; `stratum` is the PSE column. */
   def ttest_2samp_pse(expr: String, treatment: Column, stratum: Column,
                       alternative: String = "two-sided", cuped: String = "",
-                      alpha: Double = DefaultAlpha)(cols: Column*): Column = {
-    val agg = udaf(new Ttest2SampPseAgg(expr, alternative, cuped, alpha, cols.length),
-      ExpressionEncoder[(Array[Double], Int, Long)]())
-    agg(doublesRequiring(cols, treatment, stratum), treatment.cast("int"),
-      stratum.cast("long"))
-  }
+                      alpha: Double = DefaultAlpha)(cols: Column*): Column =
+    Kernel.column(new Ttest2SampPseAgg(expr, alternative, cuped, alpha, cols.length),
+      doubles(cols) ++ Seq(treatment.cast("int"), stratum.cast("long")): _*)
 
   /** Sample-ratio-mismatch chi-square (reference `SRM(x, groupby, ratio)`).
     * Returns struct(groups, observed, expected, chisq, p_value). */
-  def srm(value: Column, group: Column, ratios: Seq[Double]): Column = {
-    val agg = udaf(new SrmAgg(ratios.toArray), ExpressionEncoder[(String, Double)]())
-    agg(when(value.isNotNull, group.cast("string")), value.cast("double"))
-  }
+  def srm(value: Column, group: Column, ratios: Seq[Double]): Column =
+    Kernel.column(new SrmAgg(ratios.toArray),
+      when(value.isNotNull, group.cast("string")), value.cast("double"))
 
   /** Mann-Whitney U test (reference `mann_whitney_utest`). Returns
     * struct(u_statistic, p_value). Aggregate state is a value→count
-    * histogram (O(distinct), not O(n)); ops.RankTests.mannWhitneyU is the
-    * range-partitioned alternative for all-distinct continuous data. */
+    * histogram (O(distinct), not O(n)). For a whole table,
+    * ops.RankTests.mannWhitneyU is the frame-level form (the gateway's
+    * top-level `mann_whitney_utest`): it collapses the tie cells to the
+    * driver when they fit `Robust.MaxLocalCells` and ranks them with the
+    * same [[graft.agg.MannWhitneyMath.rankSum]], and falls back to a
+    * range-partitioned cumulative sum past that bound. */
   def mann_whitney_utest(value: Column, treatment: Column,
                          alternative: String = "two-sided",
-                         continuityCorrection: Boolean = true): Column = {
-    val agg = udaf(new MannWhitneyAgg(alternative, continuityCorrection),
-      ExpressionEncoder[(Double, Int)]())
-    agg(when(value.isNotNull && treatment.isNotNull, value.cast("double"))
-      .otherwise(lit(Double.NaN)), treatment.cast("int"))
-  }
+                         continuityCorrection: Boolean = true): Column =
+    Kernel.column(new MannWhitneyAgg(alternative, continuityCorrection),
+      rankInput(value, treatment), treatment.cast("int"))
+
+  /** The rank tests' value input: NaN (skipped) when value or treatment is null. */
+  private def rankInput(value: Column, treatment: Column): Column =
+    when(value.isNotNull && treatment.isNotNull, value.cast("double"))
+      .otherwise(lit(Double.NaN))
 
   /** Two-sample Kolmogorov-Smirnov test. Returns struct(d_statistic, p_value). */
   def kolmogorov_smirnov_test(value: Column, treatment: Column,
                               alternative: String = "two-sided",
-                              method: String = "auto"): Column = {
-    val agg = udaf(new KsAgg(alternative, method), ExpressionEncoder[(Double, Int)]())
-    agg(when(value.isNotNull && treatment.isNotNull, value.cast("double"))
-      .otherwise(lit(Double.NaN)), treatment.cast("int"))
-  }
+                              method: String = "auto"): Column =
+    Kernel.column(new KsAgg(alternative, method),
+      rankInput(value, treatment), treatment.cast("int"))
 
   /** Pearson correlation with its two-sided t-test p-value (reference
     * `Pearsonr(x, y)`, AggregateFunctionPearsonr.h:56-72: t = r·√df/√(1−r²),
@@ -122,11 +108,8 @@ object functions {
 
   /** One-pass Gram matrix XᵀX, optionally inverted (reference
     * `matrix_multiplication([cols], std, invert)`). */
-  def matrix_multiplication(cols: Seq[Column], invert: Boolean = false): Column = {
-    val agg = udaf(new MatrixMulAgg(cols.length, invert),
-      ExpressionEncoder[Array[Double]]())
-    agg(doubles(cols))
-  }
+  def matrix_multiplication(cols: Seq[Column], invert: Boolean = false): Column =
+    Kernel.column(new MatrixMulAgg(cols.length, invert), doubles(cols): _*)
 
   /** Experiment-platform t-test (reference `xexpt_ttest_2samp`): avg or sum
     * metric over (numerator, denominator[, numerator_pre, denominator_pre]),
@@ -135,12 +118,10 @@ object functions {
                         cuped: String = "", alpha: Double = 0.05,
                         mde: Double = 0.005, power: Double = 0.8,
                         metricType: String = "avg",
-                        ratios: (Double, Double) = (1.0, 1.0)): Column = {
-    val agg = udaf(new XexptAgg(cols.length, cuped, alpha, mde, power, metricType,
-      Array(ratios._1, ratios._2)), ExpressionEncoder[(Array[Double], Long, Long)]())
-    agg(doublesRequiring(cols, uin, treatment), uin.cast("long"),
-      treatment.cast("long"))
-  }
+                        ratios: (Double, Double) = (1.0, 1.0)): Column =
+    Kernel.column(new XexptAgg(cols.length, cuped, alpha, mde, power, metricType,
+      Array(ratios._1, ratios._2)), doubles(cols) ++ Seq(uin.cast("long"),
+      treatment.cast("long")): _*)
 
   /** One-pass OLS with full inference; returns the summary struct.
     * `use_bias` appends an intercept as the LAST coefficient (reference

@@ -1,8 +1,12 @@
 package graft.ops
 
+import graft.agg.{Kernel, ReplicateKernel}
 import graft.stats.Dist
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedStar}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed bootstrap / permutation engine.
@@ -21,9 +25,15 @@ import org.apache.spark.sql.functions._
   * by O(√n), irrelevant at scale and already accepted by the reference's
   * binomial-splitting approach).
   *
-  * Cost model: explode(B) amplifies rows B× before the aggregate, but
-  * map-side partial aggregation reduces each partition to B×k cells, so
-  * the shuffle is tiny; the scan stays single-pass.
+  * Cost model. Statistics that are ratios of weighted sums — the
+  * ate/ipw/aipw estimators and the gateway's `boot_strap` over
+  * avg/mean/sum/count — never amplify rows: one [[graft.agg.ReplicateKernel]]
+  * aggregate draws each row's B + 1 weights inside its update and adds the
+  * row to B + 1 moment buffers, so the pass reads every row once and ships
+  * (B + 1) × k doubles per partition. Every other verb (`replicated` under
+  * [[bootstrapAgg]]/[[bootstrapOls]], [[bootstrapAny]], [[permutationTest]])
+  * explodes each row B× before the aggregate; map-side partial aggregation
+  * still reduces each partition to B×k cells, so the shuffle stays tiny.
   */
 object Bootstrap {
 
@@ -35,17 +45,9 @@ object Bootstrap {
     * inverse CDF (closed thresholds computed on the driver; tail clamped
     * at mean+10σ). Stays inside whole-stage codegen. */
   def poissonMultiplicity(u: Column, lambda: Double): Column = {
-    require(lambda > 0 && lambda <= 100, "lambda in (0, 100]")
-    val maxK = math.max(8, (lambda + 10 * math.sqrt(lambda)).toInt)
-    var cdf = math.exp(-lambda)
-    var pk = cdf
-    var c: Column = when(u < cdf, 0)
-    for (k <- 1 to maxK) {
-      pk = pk * lambda / k
-      cdf += pk
-      c = c.when(u < cdf, k)
-    }
-    c.otherwise(maxK + 1)
+    val cdf = ReplicateKernel.poissonThresholds(lambda)
+    (1 until cdf.length).foldLeft(when(u < cdf(0), 0)) { (c, k) => c.when(u < cdf(k), k) }
+      .otherwise(cdf.length)
   }
 
   /** Deterministic Poisson bootstrap weight for (idCols, rep, seed) — the
@@ -126,6 +128,55 @@ object Bootstrap {
     rep.groupBy(col("rep")).agg(named.head, named.tail: _*)
   }
 
+  /** [[bootstrapAny]] of one `avg`/`mean`/`sum`/`count` aggregate — the
+    * gateway's `boot_strap(agg, B)` — without exploding rows: one
+    * [[ReplicateKernel]] pass sums each replicate's weighted moments, and
+    * the B-row (rep, stat) frame is built on the driver from them. Row
+    * identities, weights and output columns are [[bootstrapAny]]'s; a
+    * replicate that drew no row is absent, as there. None for any other
+    * aggregate (DISTINCT, FILTER, other functions, `avg` of decimals, `sum`
+    * of integers or decimals — whose exact integer/decimal result a double
+    * sum would not keep), which stays on [[bootstrapAny]]. */
+  private[graft] def bootstrapMoment(df: DataFrame, b: Int, agg: Column,
+                                     seed: Long = 42L): Option[DataFrame] = {
+    val call = ColumnBridge.expression(agg) match {
+      case f: UnresolvedFunction if b >= 1 && f.nameParts.length == 1 &&
+          f.arguments.length == 1 && !f.isDistinct && f.filter.isEmpty =>
+        val x = f.arguments.head match {
+          case UnresolvedStar(None) => lit(1)
+          case e => ColumnBridge.column(e)
+        }
+        Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT), x))
+      case _ => None
+    }
+    val present = (x: Column) => when(x.isNotNull, 1.0)
+    val plan: Option[(Seq[Column], DataType, Array[Double] => Any)] = call.flatMap {
+      case (fn, x) =>
+        val floating = df.select(x).schema.head.dataType match {
+          case _: DecimalType => None
+          case _: FloatType | _: DoubleType => Some(true)
+          case _: NumericType => Some(false)
+          case _ => None
+        }
+        (fn, floating) match {
+          case ("avg" | "mean", Some(_)) =>
+            Some((Seq(x, present(x)), DoubleType, s => if (s(1) > 0) s(0) / s(1) else null))
+          case ("sum", Some(true)) =>
+            Some((Seq(x, present(x)), DoubleType, s => if (s(1) > 0) s(0) else null))
+          case ("count", _) => Some((Seq(present(x)), LongType, s => s(0).toLong))
+          case _ => None
+        }
+    }
+    plan.map { case (sums, statType, stat) =>
+      val rows = replicateSums(df, Seq.empty, b, seed, 1.0, sums).zipWithIndex.tail.collect {
+        case (s, i) if s.last > 0 => Row(i - 1, stat(s))
+      }
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("rep", IntegerType, nullable = false),
+        StructField("stat", statType, nullable = statType != LongType))))
+    }
+  }
+
   /** `BootStrapOls` equivalent (AggregateFunctionBootStrap.h:375-497): the
     * bootstrap distribution of OLS coefficients in ONE pass, by feeding the
     * replicate weight into the weighted OLS aggregate (WLS with integer
@@ -149,14 +200,34 @@ object Bootstrap {
     }
 
   /** Bootstrap mean/std/percentile CI of a statistic column from the
-    * per-replicate frame. */
+    * per-replicate frame (B rows, collected; nulls are left out). */
   case class BootSummary(mean: Double, std: Double, lower: Double, upper: Double)
-  def summarize(reps: DataFrame, statCol: String, alpha: Double = 0.05): BootSummary = {
-    val r = reps.agg(
-      avg(col(statCol)).as("m"), stddev_samp(col(statCol)).as("s"),
-      expr(s"percentile($statCol, array(${alpha / 2}, ${1 - alpha / 2}))").as("ci")).head()
-    val ci = r.getSeq[Double](2)
-    BootSummary(r.getDouble(0), r.getDouble(1), ci(0), ci(1))
+  def summarize(reps: DataFrame, statCol: String, alpha: Double = 0.05): BootSummary =
+    summarizeValues(reps.select(col(statCol).cast("double")).collect()
+      .collect { case r if !r.isNullAt(0) => r.getDouble(0) }, alpha)
+
+  /** [[summarize]] over the replicate values on the driver, with the
+    * arithmetic of Spark's `avg`, `stddev_samp` (Welford updates) and
+    * exact `percentile` (linear interpolation between order statistics). */
+  private[graft] def summarizeValues(values: Array[Double], alpha: Double): BootSummary = {
+    var n = 0.0; var mean = 0.0; var m2 = 0.0
+    values.foreach { v =>
+      n += 1
+      val delta = v - mean
+      val deltaN = delta / n
+      mean += deltaN
+      m2 += delta * (delta - deltaN)
+    }
+    val sorted = values.sorted(Ordering.Double.TotalOrdering)
+    def percentile(p: Double): Double = {
+      if (sorted.isEmpty) return Double.NaN
+      val position = (sorted.length - 1) * p
+      val (lo, hi) = (position.floor.toInt, position.ceil.toInt)
+      if (lo == hi || sorted(lo) == sorted(hi)) sorted(lo)
+      else (hi - position) * sorted(lo) + (position - lo) * sorted(hi)
+    }
+    BootSummary(values.sum / n, math.sqrt(m2 / (n - 1)),
+      percentile(alpha / 2), percentile(1 - alpha / 2))
   }
 
   // ---------------------------------------------------------------- permutation
@@ -247,52 +318,51 @@ object Bootstrap {
     (narrowed.filter(complete), idNamed.indices.map(i => col(s"__id_$i")))
   }
 
-  /** ONE distributed job for observed + B bootstrap replicates of a
-    * weighted aggregate statistic: the observed value rides the replicate
-    * pass as rep = -1 with weight 1 (the [[permutationTest]] scan-economy
-    * idiom), so no separate full scan computes it. Returns (observed,
-    * B-row local reps frame). */
-  private def repsWithObserved(base00: DataFrame, idCols: Seq[Column], b: Int,
-                               seed: Long, frac: Double = 1.0)
-                              (stat: Column => Column): (Double, DataFrame) = {
+  /** Weighted column sums of the observed sample (replicate −1, weight 1)
+    * and of B bootstrap replicates, from ONE [[ReplicateKernel]] aggregate
+    * over `base` — no row is exploded. `idCols` empty → stable ids. The
+    * i-th array holds replicate i − 1's Σw·x per column of `sums`, then Σw;
+    * a replicate that drew no row has Σw = 0. */
+  private def replicateSums(base00: DataFrame, idCols: Seq[Column], b: Int, seed: Long,
+                            frac: Double, sums: Seq[Column]): Array[Array[Double]] = {
     val (base0, ids) =
       if (idCols.nonEmpty) (base00, idCols) else withStableIds(base00)
     val base = ensureParallel(base0, ids)
-    val statRows = base
-      .withColumn("rep", explode(sequence(lit(-1), lit(b - 1))))
-      .withColumn("weight", when(col("rep") === -1, 1)
-        .otherwise(poissonMultiplicity(uniform(ids, col("rep"), seed), frac)))
-      .filter(col("weight") > 0)
-      .groupBy(col("rep"))
-      .agg(stat(col("weight").cast("double")).as("stat"))
-      .collect() // B+1 tiny rows
-    def statOf(r: org.apache.spark.sql.Row): Double =
-      if (r.isNullAt(1)) Double.NaN else r.getDouble(1)
-    val observed = statRows.find(_.getInt(0) == -1).map(statOf).getOrElse(Double.NaN)
-    val permuted = statRows.filter(_.getInt(0) >= 0)
-    val spark = base0.sparkSession
-    val reps = spark.createDataFrame(
-      java.util.Arrays.asList(permuted: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("rep", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("stat", org.apache.spark.sql.types.DoubleType))))
-    (observed, reps)
+    val kernel = new ReplicateKernel(b, seed, frac, ids.length, sums.length)
+    val flat = base.select(Kernel.column(kernel, ids ++ sums.map(_.cast("double")): _*))
+      .head().getSeq[Double](0).toArray
+    flat.grouped(sums.length + 1).toArray
+  }
+
+  /** Observed + B bootstrap replicates of a statistic that is a function
+    * of weighted column sums, in ONE distributed job ([[replicateSums]]):
+    * `stat` maps the sums of `sums` (in order) to the statistic. Returns
+    * (observed, the B replicate values); a replicate that drew no row, or
+    * whose statistic is NaN (a group without rows), is left out, as the
+    * exploded pass had no row or a null statistic for it. */
+  private def repsWithObserved(base: DataFrame, idCols: Seq[Column], b: Int, seed: Long,
+                               sums: Seq[Column])
+                              (stat: Array[Double] => Double): (Double, Array[Double]) = {
+    val all = replicateSums(base, idCols, b, seed, 1.0, sums)
+    def statOf(s: Array[Double]): Double = if (s.last > 0) stat(s) else Double.NaN
+    (statOf(all(0)), all.tail.map(statOf).filterNot(_.isNaN))
   }
 
   /** Difference-in-means ATE with bootstrap CI (statistics.py:1054-1119's
     * ATEestimator over BootStrapMulti sums). Pass a real row key in
     * `idCols` to skip the stable-id derivation (a full-frame hash +
     * row_number window shuffle). Observed + replicates share ONE scan
-    * ([[repsWithObserved]]): the observed stat is the same weighted
-    * aggregate at weight 1. */
+    * ([[repsWithObserved]]): the observed stat is the same ratio of
+    * weighted sums at weight 1. */
   def ateEstimator(df: DataFrame, y: Column, treatment: Column, b: Int = 500,
                    alpha: Double = 0.05, seed: Long = 42L,
                    idCols: Seq[Column] = Seq.empty): EffectEstimate = {
     val (base, ids) = narrowWithIds(df,
       Seq(y.cast("double").as("y"), treatment.cast("int").as("t")), idCols)
-    val (obs, reps) = repsWithObserved(base, ids, b, seed) { w =>
-      (sum(when(col("t") === 1, col("y") * w)) / sum(when(col("t") === 1, w))) -
-        (sum(when(col("t") === 0, col("y") * w)) / sum(when(col("t") === 0, w)))
+    val (obs, reps) = repsWithObserved(base, ids, b, seed, Seq(
+      when(col("t") === 1, col("y")), when(col("t") === 1, 1.0),
+      when(col("t") === 0, col("y")), when(col("t") === 0, 1.0))) { s =>
+      s(0) / s(1) - s(2) / s(3)
     }
     finishEffect(obs, reps, alpha)
   }
@@ -307,10 +377,11 @@ object Bootstrap {
     val (base, ids) = narrowWithIds(df,
       Seq(y.cast("double").as("y"), treatment.cast("int").as("t"),
         propensity.cast("double").as("e")), idCols)
-    def ipw(w: Column): Column =
-      sum(col("t") * col("y") * w / col("e")) / sum(w) -
-        sum((lit(1) - col("t")) * col("y") * w / (lit(1) - col("e"))) / sum(w)
-    val (obs, reps) = repsWithObserved(base, ids, b, seed)(ipw)
+    val (obs, reps) = repsWithObserved(base, ids, b, seed, Seq(
+      col("t") * col("y") / col("e"),
+      (lit(1) - col("t")) * col("y") / (lit(1) - col("e")))) { s =>
+      s(0) / s(2) - s(1) / s(2)
+    }
     finishEffect(obs, reps, alpha)
   }
 
@@ -331,18 +402,15 @@ object Bootstrap {
       Seq(y.cast("double").as("y"), treatment.cast("int").as("t"),
         propensity.cast("double").as("e"), mu1.cast("double").as("m1"),
         mu0.cast("double").as("m0")), idCols)
-    def aipw(w: Column): Column = {
-      val psi = col("m1") - col("m0") +
-        col("t") * (col("y") - col("m1")) / col("e") -
-        (lit(1) - col("t")) * (col("y") - col("m0")) / (lit(1) - col("e"))
-      sum(psi * w) / sum(w)
-    }
-    val (obs, reps) = repsWithObserved(base, ids, b, seed)(aipw)
+    val psi = col("m1") - col("m0") +
+      col("t") * (col("y") - col("m1")) / col("e") -
+      (lit(1) - col("t")) * (col("y") - col("m0")) / (lit(1) - col("e"))
+    val (obs, reps) = repsWithObserved(base, ids, b, seed, Seq(psi))(s => s(0) / s(1))
     finishEffect(obs, reps, alpha)
   }
 
-  private def finishEffect(obs: Double, reps: DataFrame, alpha: Double): EffectEstimate = {
-    val s = summarize(reps, "stat", alpha)
+  private def finishEffect(obs: Double, reps: Array[Double], alpha: Double): EffectEstimate = {
+    val s = summarizeValues(reps, alpha)
     val z = obs / s.std
     val p = if (z.isNaN) Double.NaN else 2.0 * (1.0 - Dist.normCdf(math.abs(z)))
     EffectEstimate(obs, s.std, s.lower, s.upper, p)

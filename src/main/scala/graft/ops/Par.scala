@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioningLike, RangePartitioning,
+  RoundRobinPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Input-parallelism guard for operators whose per-row work is AMPLIFIED
   * (B× bootstrap replicates, T× tree memberships, k× hash signatures) or
@@ -18,22 +21,35 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Par {
   /** Repartition `df` to the session default parallelism when it has fewer
     * partitions — by hash of `keys` when given (co-locates downstream
-    * keyed work), round-robin otherwise.
-    *
-    * Partition count comes from `queryExecution.toRdd` — the memoized
-    * internal-row RDD of the plan the action will actually run — not
-    * `df.rdd`, which builds a SEPARATE deserializing physical plan on
-    * every call just to be counted. Callers that already know the
+    * keyed work), round-robin otherwise. Callers that already know the
     * input's partition count (e.g. a loop re-scoring the same cached
     * frame) pass it via `knownPartitions` and skip planning entirely. */
   def ensure(df: DataFrame, keys: Seq[Column] = Seq.empty,
              knownPartitions: Int = -1): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val current =
-      if (knownPartitions >= 0) knownPartitions
-      else df.queryExecution.toRdd.getNumPartitions
+    val current = if (knownPartitions >= 0) knownPartitions else partitions(df)
     if (current >= target) df
     else if (keys.nonEmpty) df.repartition(target, keys: _*)
     else df.repartition(target)
+  }
+
+  /** Partition count of the plan an action on `df` runs, found by planning
+    * alone when the plan ends in a shuffle: its output partitioning names
+    * the count. `queryExecution.toRdd` would, under adaptive execution,
+    * run the input's shuffle stages just to learn it, and the caller then
+    * re-plans the repartitioned frame and runs them again. Any other plan
+    * (a scan, whose splits only the RDD knows) is counted through `toRdd`,
+    * the memoized internal-row RDD of that plan — not `df.rdd`, which
+    * plans a separate deserializing copy. */
+  private def partitions(df: DataFrame): Int = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.outputPartitioning match {
+      case p @ (_: HashPartitioningLike | _: RangePartitioning |
+                _: RoundRobinPartitioning | SinglePartition) => p.numPartitions
+      case _ => df.queryExecution.toRdd.getNumPartitions
+    }
   }
 }

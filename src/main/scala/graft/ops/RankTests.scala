@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.agg.{KsResult, MannWhitneyResult}
+import graft.agg.{KsResult, MannWhitneyMath, MannWhitneyResult}
 import graft.stats.{Dist, LocalCollapse, TtestCommon}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -9,19 +9,27 @@ import org.apache.spark.sql.functions._
   *
   * Unlike the reference's collect-all-samples aggregate states
   * (mann_whitney.h:60-68), these compute ranks with a shuffle-by-value
-  * aggregation: group rows by distinct value (combining both samples), then
-  * a two-phase range-partitioned cumulative sum ([[RangeCumSum]]) yields
-  * global cumulative counts with full parallelism — O(distinct values)
-  * state, no driver collection, no single-partition sort. The final
-  * statistic reduces a handful of scalars. Identical math to
+  * aggregation: group rows by distinct value (combining both samples).
+  * Tie cells that fit a bounded driver collapse are ranked on the driver;
+  * otherwise a two-phase range-partitioned cumulative sum
+  * ([[RangeCumSum]]) yields global cumulative counts with full
+  * parallelism — O(distinct values) state, no single-partition sort. The
+  * final statistic reduces a handful of scalars. Identical math to
   * [[graft.agg.MannWhitneyAgg]] / [[graft.agg.KsAgg]] (verified in tests).
   */
 object RankTests {
 
-  /** Mann-Whitney U with average ranks + tie correction + normal approx. */
+  /** Mann-Whitney U with average ranks + tie correction + normal approx.
+    * The (value → n, n0) tie cells collapse to the driver when at most
+    * `maxLocalCells` ([[graft.stats.LocalCollapse]]), where the sorted
+    * cells feed [[graft.agg.MannWhitneyMath.rankSum]], the aggregate's own
+    * rank math; past the bound a range-partitioned cumulative count
+    * ([[RangeCumSum]]) yields the rank sum. `maxLocalCells = 0` forces
+    * that path. */
   def mannWhitneyU(df: DataFrame, value: Column, treatment: Column,
                    alternative: String = "two-sided",
-                   continuityCorrection: Boolean = true): MannWhitneyResult = {
+                   continuityCorrection: Boolean = true,
+                   maxLocalCells: Int = Robust.MaxLocalCells): MannWhitneyResult = {
     val alt = TtestCommon.alternative(alternative)
     val byValue = df
       .filter(!isnan(value) && value.isNotNull && treatment.isNotNull)
@@ -29,6 +37,14 @@ object RankTests {
       .groupBy(col("v"))
       .agg(count(lit(1)).as("cnt"),
         sum(when(col("t") === 0, 1L).otherwise(0L)).as("cnt0"))
+    LocalCollapse.collect(byValue, maxLocalCells) match {
+      case Some(rows) =>
+        val cells = Robust.sortRows(rows, 0)
+        val c0s = cells.map(_.getLong(2))
+        val c1s = cells.indices.map(i => cells(i).getLong(1) - c0s(i)).toArray
+        return MannWhitneyMath.rankSum(c0s, c1s, alt, continuityCorrection)
+      case None => ()
+    }
     // avg rank of a tie-group = (left + right + 1)/2 with left = rows before,
     // right = rows through this group (1-based)
     val agg = RangeCumSum.withCumSums(byValue, Seq(col("v")), Seq("cnt")) { (cum, _) =>
@@ -42,28 +58,10 @@ object RankTests {
             col("cnt")).as("tieNum"),
           max(col("cnt")).as("maxTie")).head()
     }
-    val r1 = agg.getAs[Double]("r1")
-    val n = agg.getAs[Long]("n").toDouble
-    val n1 = agg.getAs[Long]("n1").toDouble
-    val n2 = n - n1
-    if (n1 == 0 || n2 == 0 || agg.getAs[Long]("maxTie") == agg.getAs[Long]("n"))
-      return MannWhitneyResult(Double.NaN, Double.NaN)
-    val tieCorrection = 1.0 - agg.getAs[Double]("tieNum") / (n * n * n - n)
-    val u1 = n1 * n2 + n1 * (n1 + 1.0) / 2.0 - r1
-    val u2 = n1 * n2 - u1
-    val meanrank = n1 * n2 / 2.0 + (if (continuityCorrection) 0.5 else 0.0)
-    val sd = math.sqrt(tieCorrection * n1 * n2 * (n1 + n2 + 1) / 12.0)
-    if (sd.isNaN || sd.isInfinite || math.abs(sd) < 1e-7) return MannWhitneyResult(u2, Double.NaN)
-    val u = alt match {
-      case TtestCommon.TwoSided => math.max(u1, u2)
-      case TtestCommon.Less => u1
-      case TtestCommon.Greater => u2
-    }
-    var z = (u - meanrank) / sd
-    if (alt == TtestCommon.TwoSided) z = math.abs(z)
-    val cdf = Dist.normCdf(z)
-    val p = if (alt == TtestCommon.TwoSided) 2.0 - 2.0 * cdf else 1.0 - cdf
-    MannWhitneyResult(u2, p)
+    val n = agg.getAs[Long]("n")
+    val n1 = agg.getAs[Long]("n1")
+    MannWhitneyMath.fromRankSum(agg.getAs[Double]("r1"), n1, n - n1,
+      agg.getAs[Double]("tieNum"), agg.getAs[Long]("maxTie") == n, alt, continuityCorrection)
   }
 
   /** Spearman rank correlation (with average-rank tie handling — the

@@ -1,11 +1,10 @@
 package graft.ops
 
-import graft.agg.{OlsAgg, OlsBuf, OlsFinalizer, OlsSummary}
+import graft.agg.{Kernel, OlsAgg, OlsBuf, OlsFinalizer, OlsKernel, OlsSummary}
 import graft.stats.{Dist, LinAlg, LocalCollapse}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Fitted linear model carried as a plain value — the Spark equivalent of
   * the reference's model-as-aggregate-state (`OlsState(...)` consumed by
@@ -20,18 +19,14 @@ case class OlsModel(summary: OlsSummary, xtxInv: Array[Array[Double]]) {
 }
 
 object Regression {
-  import graft.agg.AggEncoders._
 
   /** One-pass OLS with full inference. `ols(y, xs…, useBias)`. */
   def olsAggColumn(y: Column, xs: Seq[Column], useBias: Boolean = true,
-                   weight: Column = lit(1.0)): Column = {
-    val agg = udaf(new OlsAgg(xs.length, useBias),
-      ExpressionEncoder[(Double, Array[Double], Double)]())
-    agg(y.cast("double"), olsInput(y, xs, weight), weight.cast("double"))
-  }
+                   weight: Column = lit(1.0)): Column =
+    Kernel.column(new OlsAgg(xs.length, useBias), olsInput(y, xs, weight): _*)
 
   /** Unweighted [[olsAggColumn]] as PLAIN declarative sums — the 100 TB
-    * hot path behind `functions.ols`. The typed OlsAgg aggregator rides
+    * hot path behind `functions.ols`. The OlsAgg kernel rides
     * ObjectHashAggregate (per-row object churn, outside whole-stage
     * codegen); the identical sufficient statistics — n, Σx, the packed
     * ΣxᵢxⱼGram triangle, Σxy, Σy, Σy² — are expressible as native sum()
@@ -74,25 +69,18 @@ object Regression {
     solve(moments)
   }
 
-  /** xs packed as array<double>, NULL when y, weight, or any x is null —
-    * the aggregate skips null arrays, so incomplete rows drop listwise
-    * (R lm na.omit; the reference engines skip aggregate NULL inputs).
-    * Unguarded, a null would decode as 0.0 and contaminate the fit. */
-  private def olsInput(y: Column, xs: Seq[Column], weight: Column): Column = {
-    val all = (y +: xs) :+ weight
-    when(all.map(_.cast("double").isNotNull).reduce(_ && _),
-      array(xs.map(_.cast("double")): _*))
-  }
+  /** The OLS kernels' inputs: y, xs, weight as doubles. A row with a null
+    * among them is skipped, so incomplete rows drop listwise (R lm
+    * na.omit; the reference engines skip aggregate NULL inputs). */
+  private def olsInput(y: Column, xs: Seq[Column], weight: Column): Seq[Column] =
+    ((y +: xs) :+ weight).map(_.cast("double"))
 
   /** Raw OlsBuf aggregate as a Column (struct output) — the building block
     * shared by [[fitOls]], [[fitOlsMulti]], and Longterm's per-replicate
     * grouped refits. */
   private[graft] def olsBufColumn(y: Column, xs: Seq[Column], useBias: Boolean = true,
-                                  weight: Column = lit(1.0)): Column = {
-    val bufAgg = udaf(new OlsBufAgg(xs.length, useBias),
-      ExpressionEncoder[(Double, Array[Double], Double)]())
-    bufAgg(y.cast("double"), olsInput(y, xs, weight), weight.cast("double"))
-  }
+                                  weight: Column = lit(1.0)): Column =
+    Kernel.column(new OlsBufAgg(xs.length, useBias), olsInput(y, xs, weight): _*)
 
   /** Decode an OlsBufOut struct row back into the buffer. */
   private[graft] def bufFromRow(row: org.apache.spark.sql.Row): OlsBuf = OlsBuf(
@@ -127,10 +115,10 @@ object Regression {
   def fitOlsMultiWeighted(df: DataFrame, targets: Seq[(Column, Seq[Column], Column)],
                           useBias: Boolean = true): Seq[OlsModel] = {
     require(targets.nonEmpty, "need at least one target")
-    // DECLARATIVE moments instead of the typed OlsBufAgg: the buffer's
+    // DECLARATIVE moments instead of the OlsBufAgg kernel: the buffer's
     // sufficient statistics are plain sums — x-side Σ√w·xᵢ and the
     // packed Σw·xᵢxⱼ triangle, y-side Σ√w·y and Σw·y², Σw·y·xᵢ, Σw, n —
-    // which stay inside whole-stage codegen where the Aggregator rides
+    // which stay inside whole-stage codegen where the kernel rides
     // ObjectHashAggregate (~3x at the 100M probe; IRLS loops pay this
     // once per iteration). The one collected row per target is rebuilt
     // into the exact OlsBuf the finalizer already consumes, so model
@@ -1120,22 +1108,13 @@ object Regression {
 
 /** Internal: surfaces the raw OlsBuf as a struct so the driver can rebuild
   * the model with (XᵀX)⁻¹ (needed for intervals/IV), not just the summary. */
-private[graft] class OlsBufAgg(k: Int, useBias: Boolean)
-    extends Aggregator[(Double, Array[Double], Double), OlsBuf, OlsBufOut] {
-  private val kb = k + (if (useBias) 1 else 0)
-  def zero: OlsBuf = OlsBuf.zero(kb)
-  def reduce(b: OlsBuf, a: (Double, Array[Double], Double)): OlsBuf = {
-    if (a._2 != null && a._2.length == k) {
-      val xs = if (useBias) a._2 :+ 1.0 else a._2
-      b.update(a._1, xs, a._3)
-    }
-    b
-  }
-  def merge(b1: OlsBuf, b2: OlsBuf): OlsBuf = b1.merge(b2)
+private[graft] class OlsBufAgg(k: Int, useBias: Boolean) extends OlsKernel(k, useBias) {
+  def dataType: DataType = Kernel.struct("xn" -> LongType, "xSumX" -> Kernel.Doubles,
+    "xSumXY" -> Kernel.Doubles, "yn" -> LongType, "ySumX" -> Kernel.Doubles,
+    "ySumXY" -> Kernel.Doubles, "xty" -> Kernel.Doubles,
+    "weightSum" -> DoubleType)
   def finish(b: OlsBuf): OlsBufOut = OlsBufOut(
     b.x.count, b.x.sumX, b.x.sumXY, b.y.count, b.y.sumX, b.y.sumXY, b.xty, b.weightSum)
-  def bufferEncoder: Encoder[OlsBuf] = Encoders.product[OlsBuf]
-  def outputEncoder: Encoder[OlsBufOut] = Encoders.product[OlsBufOut]
 }
 
 private[graft] case class OlsBufOut(

@@ -7,8 +7,8 @@ import graft.expr.ExprTree
   *
   * Re-expression of the reference's DeltaMethodStats
   * (/root/reference/src/udf/starrocks/be/src/exprs/agg/delta_method.h:103-266).
-  * This is a mutable case class on purpose: it is the Spark Aggregator
-  * reduction buffer, and Spark serializes it only at partial-aggregation
+  * This is a mutable case class on purpose: it is the aggregation buffer
+  * of the graft.agg kernels, serialized only at partial-aggregation
   * boundaries — exactly the C++ serialize/merge contract.
   *
   * Scale note: the buffer is O(k²) doubles regardless of row count, so a

@@ -184,4 +184,15 @@ class BootstrapSpec extends AnyFunSuite {
       Seq("s" -> sum($"id" * w))).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(a == b2, "bootstrap sums drift with input layout")
   }
+
+  test("Par.ensure counts a shuffled frame's partitions without running a job") {
+    // the stable-id frame ends in the row_number window's hash exchange:
+    // its partition count comes from planning, where toRdd ran the
+    // exchange's map stage under adaptive execution
+    val d = (1 to 1000).map(i => (i.toLong, i % 7)).toDF("a", "b")
+    val (stable, ids) = Bootstrap.withStableIds(d)
+    val (out, jobs) = JobCount.during(spark)(graft.ops.Par.ensure(stable, ids))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(out eq stable) // its shuffle already has defaultParallelism partitions
+  }
 }

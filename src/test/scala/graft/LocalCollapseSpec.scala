@@ -217,6 +217,24 @@ class LocalCollapseSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("use LocalCollapse.within: ", ", ", ""))
   }
 
+  test("statistics kernels build no encoder and extend no Aggregator") {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/agg"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val scanned = files ++ Seq("src/main/scala/graft/functions.scala",
+      "src/main/scala/graft/ops/Regression.scala").map(java.nio.file.Paths.get(_))
+    assert(files.nonEmpty)
+    val banned = Seq("ExpressionEncoder[", "Encoders.product", "Encoders.kryo",
+      "extends Aggregator")
+    val hits = scanned.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if banned.exists(l.contains) => s"$f:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("use a graft.agg.Kernel: ", ", ", ""))
+  }
+
   test("library code under ops/ and stats/ never writes session conf") {
     val roots = Seq("src/main/scala/graft/ops", "src/main/scala/graft/stats")
     val files = roots.flatMap { r =>
