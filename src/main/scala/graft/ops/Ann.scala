@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.stats.LocalCollapse
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -42,19 +44,15 @@ object Ann {
     val p0 = probes.select(probeId.cast("long").as("query_id"),
       probeVec.cast("array<double>").as("q"))
       .filter(col("q").isNotNull)
-    // guard count scans the probe projection once; the broadcast build
-    // below re-reads it (column-pruned, filter-pushed) rather than paying
-    // a session-lifetime persist — a cached probe block would otherwise
-    // leak across calls, since this method never sees materialization
-    val nProbes =
-      p0.limit(math.min(maxBroadcastProbes + 1, Int.MaxValue.toLong).toInt).count()
-    require(nProbes <= maxBroadcastProbes,
+    // one bounded read both guards the probe set and builds the broadcast
+    val probeRows = LocalCollapse.within(p0, maxBroadcastProbes)(
       s"brute_force_knn probe set has > $maxBroadcastProbes rows " +
         "(the broadcast nested-loop product cap): " +
         "use ivfKnn for large probe sets, shrink the probes, or raise " +
         "maxBroadcastProbes if probes x corpus kernels is really intended")
+    val p = corpus.sparkSession.createDataFrame(probeRows.toSeq.asJava, p0.schema)
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(p0), col("neighbor_id") =!= col("query_id"))
+    c.join(broadcast(p), col("neighbor_id") =!= col("query_id"))
       .withColumn("sim", cosine(col("q"), col("v")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)

@@ -1,10 +1,16 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
+import graft.stats.DesignCells
+import graft.stats.DesignCells.XCell
+import org.apache.commons.math3.special.Gamma.logGamma
 import org.apache.spark.ml.classification.{LogisticRegression => MlLogisticRegression}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{LinearRegression => MlLinearRegression}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Gradient-based / regularized model fits.
   *
@@ -102,98 +108,212 @@ object MlWrappers {
     LogisticFit(m.coefficients.toArray, m.intercept, m.summary.totalIterations, true)
   }
 
-  /** IRLS logistic with the reference's loop shape (regression.py:143-200):
-    * each iteration is ONE weighted-OLS aggregate pass — working response
-    * z = η + (y−p)/(p(1−p)), weight w = p(1−p), both codegen'd expressions.
-    *
-    * The iterate's coefficients enter as a broadcast one-row frame, NOT as
-    * inline literals: inlined doubles change the generated source every
-    * iteration, so a D-iteration fit would janino-compile D distinct
-    * stages (measured 17 s cold vs 2.4 s warm on 6M rows before this).
-    * With the coefficients behind an attribute reference the iteration
-    * plan's source is identical every pass and the whole loop compiles
-    * once. (A foldable typedLit would not work: element_at(literal,
-    * literal) constant-folds back to an inlined double.) */
+  // ------------------------------------------------------------ GLM IRLS
+  //
+  // Logistic, Poisson, Gamma and NB2 are one Fisher-scoring algorithm
+  // (McCullagh & Nelder 1989 §2.5) parameterized by the mean function and
+  // the working weight: each fit slices its input once, collapses it once,
+  // and runs the shared loop [[irls]] over the design cells or the rows.
+
+  /** A GLM family of [[irls]]: the clamped mean μ(η), the Fisher weight
+    * w(μ) and the link slope g′(μ) = dη/dμ, each as a Double (cells) and
+    * as a Column (rows). The working response z = η + (y − μ)·g′(μ) is
+    * linear in y — z = a + b·y with b = g′(μ), a = η − μ·b — and w depends
+    * on x only, so per-x-cell y moments give the exact weighted-OLS pass. */
+  private final case class Family(mean: Double => Double, meanCol: Column => Column,
+                                  weight: Double => Double, weightCol: Column => Column,
+                                  slope: Double => Double, slopeCol: Column => Column)
+
+  /** Log link: μ = exp(η) clamped to [lo, hi] — away from 0 so the weight
+    * stays positive-definite, and from overflow while the iterate is far
+    * from the optimum — with g′(μ) = 1/μ. */
+  private def logLink(lo: Double, hi: Double)(weight: Double => Double,
+                                              weightCol: Column => Column): Family =
+    Family(eta => math.min(math.max(math.exp(eta), lo), hi),
+      eta => least(greatest(exp(eta), lit(lo)), lit(hi)),
+      weight, weightCol, 1.0 / _, lit(1.0) / _)
+
+  /** Logit link: p = σ(η) clamped away from 0/1, w = p(1 − p) = 1/g′(p). */
+  private val logisticFamily = Family(
+    eta => math.min(math.max(1.0 / (1.0 + math.exp(-eta)), 1e-10), 1.0 - 1e-10),
+    eta => least(greatest(lit(1.0) / (lit(1.0) + exp(-eta)), lit(1e-10)),
+      lit(1.0 - 1e-10)),
+    p => p * (1.0 - p), p => p * (lit(1.0) - p),
+    p => 1.0 / (p * (1.0 - p)), p => lit(1.0) / (p * (lit(1.0) - p)))
+  private val poissonFamily = logLink(1e-10, 1e15)(mu => mu, mu => mu)
+  private val gammaFamily = logLink(1e-300, 1e300)(_ => 1.0, _ => lit(1.0))
+  private def negBinFamily(alpha: Double) = logLink(1e-10, 1e15)(
+    mu => mu / (1.0 + alpha * mu), mu => mu / (lit(1.0) + lit(alpha) * mu))
+
+  /** The fits' listwise-complete slice `__y, __x0…` (doubles): a row with
+    * a null outcome or covariate is dropped before anything is summed, so
+    * counts, dispersions and moment statistics see exactly the rows the
+    * weighted-OLS passes do. */
+  private def glmSlice(df: DataFrame, y: Column, xs: Seq[Column],
+                       maxIter: Int): DataFrame = {
+    require(maxIter > 0, "maxIter must be positive (stderr needs a final fit)")
+    val named = y.cast("double").as("__y") +:
+      xs.zipWithIndex.map { case (x, i) => x.cast("double").as(s"__x$i") }
+    df.select(named: _*)
+      .filter(("__y" +: xs.indices.map(i => s"__x$i")).map(col(_).isNotNull).reduce(_ && _))
+  }
+
+  /** [[glmSlice]] for a count outcome: a negative y is dropped too (the
+    * Poisson and NB2 likelihoods are undefined there). */
+  private def countSlice(df: DataFrame, y: Column, xs: Seq[Column],
+                         maxIter: Int): DataFrame =
+    glmSlice(df, y, xs, maxIter).filter(col("__y") >= 0.0)
+
+  /** The prepared input of [[irls]]: the slice and, when the design
+    * collapse took them, its cells (x values with the y moments). */
+  private final case class Design(slim: DataFrame, k: Int, cells: Option[Array[XCell]]) {
+    def y: Column = col("__y")
+    def xCols: Seq[Column] = (0 until k).map(i => col(s"__x$i"))
+
+    /** The slice with the iterate β as a broadcast one-row frame, and
+      * η = Xβ over it, folded from the intercept (k = 0 is the intercept
+      * alone). The coefficients enter as an attribute reference, NOT as
+      * inline literals: inlined doubles change the generated source every
+      * iteration, so a D-iteration fit would janino-compile D distinct
+      * stages (measured 17 s cold vs 2.4 s warm on 6M rows before this).
+      * Behind the attribute the iteration plan's source is identical every
+      * pass and the whole loop compiles once. (A foldable typedLit would
+      * not work: element_at(literal, literal) constant-folds back to an
+      * inlined double.) */
+    def atBeta(beta: Array[Double]): (DataFrame, Column) = {
+      val spark = slim.sparkSession
+      import spark.implicits._
+      val b = col("__beta")
+      (slim.crossJoin(broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta"))),
+        xCols.zipWithIndex.foldLeft(element_at(b, k + 1)) { case (eta, (x, i)) =>
+          eta + x * element_at(b, i + 1)
+        })
+    }
+
+    /** (n, Σy, #{y ≤ 0}) — summed over the cells, else one aggregate. */
+    def moments: (Long, Double, Long) = cells match {
+      case Some(cs) => (cs.map(_.n).sum, cs.map(_.sumY).sum, cs.map(_.nNonPos).sum)
+      case None =>
+        val r = slim.agg(count(lit(1)), coalesce(sum(y), lit(0.0)),
+          count(when(y <= 0.0, 1))).head()
+        (r.getLong(0), r.getDouble(1), r.getLong(2))
+    }
+  }
+
+  /** `fit` over the prepared [[Design]]. The slice is persisted only when
+    * the collapse declined: on the cells path the collapse read it once;
+    * on the row path every iteration is one aggregate over the same slice,
+    * and without the cache each of the ~5-20 iterations would re-read and
+    * re-project the source. Released before returning. */
+  private def withDesign[T](slim: DataFrame, k: Int, cells: Option[Array[XCell]])(
+      fit: Design => T): T =
+    if (cells.isDefined) fit(Design(slim, k, cells))
+    else {
+      slim.persist()
+      try fit(Design(slim, k, None))
+      finally { slim.unpersist(); () }
+    }
+
+  /** The design collapse of the fits whose statistics are at most
+    * quadratic in y given x: by the covariates, carrying y moments. */
+  private def byX[T](slim: DataFrame, k: Int, maxCells: Int)(fit: Design => T): T =
+    withDesign(slim, k, DesignCells.collectByX(slim, "__y", maxCells))(fit)
+
+  /** η = β_k + Σ xᵢβᵢ for one cell, folded from the intercept like the
+    * row path's. */
+  private def etaAt(beta: Array[Double], xs: Array[Double]): Double = {
+    var eta = beta(xs.length)
+    var m = 0
+    while (m < xs.length) { eta += xs(m) * beta(m); m += 1 }
+    eta
+  }
+
+  /** A finished [[irls]] loop: β (xs then intercept) and the final
+    * iteration's (XᵀWX)⁻¹ — the Fisher information inverse, since the
+    * weighted OlsBuf accumulates exactly XᵀWX. */
+  private final case class Irls(beta: Array[Double], iterations: Int, converged: Boolean,
+                                xtxInv: Array[Array[Double]]) {
+    /** √(φ·[(XᵀWX)⁻¹]ᵢᵢ) in β order (GLM dispersion φ; 1 for the
+      * fixed-dispersion families). */
+    def se(phi: Double): Array[Double] =
+      xtxInv.indices.map(i => math.sqrt(phi * xtxInv(i)(i))).toArray
+  }
+
+  /** The IRLS loop of every GLM fit, with the reference's loop shape
+    * (regression.py:143-200): each iteration is ONE weighted-OLS pass of
+    * the working response z on X with weight w — over the cells in plain
+    * Scala (`OlsBuf.addCellYMoments`, O(cells·k²)), else one aggregate
+    * over the rows ([[Design.atBeta]]) — until no coefficient moves by
+    * `tol`. */
+  private def irls(d: Design, fam: Family, beta0: Array[Double],
+                   maxIter: Int, tol: Double): Irls = {
+    val k = d.k
+    var beta = beta0
+    var it = 0
+    var converged = false
+    var lastModel: OlsModel = null
+    while (it < maxIter && !converged) {
+      lastModel = d.cells match {
+        case Some(cells) =>
+          val buf = graft.agg.OlsBuf.zero(k + 1)
+          cells.foreach { c =>
+            val eta = etaAt(beta, c.xs)
+            val mu = fam.mean(eta)
+            val b = fam.slope(mu)
+            buf.addCellYMoments(eta - mu * b, b, c.sumY, c.sumY2, c.xs :+ 1.0,
+              fam.weight(mu), c.n)
+          }
+          Regression.modelFromBuf(buf, k, useBias = true)
+        case None =>
+          val (rows, eta) = d.atBeta(beta)
+          val mu = fam.meanCol(eta)
+          Regression.fitOls(rows, eta + (d.y - mu) * fam.slopeCol(mu), d.xCols,
+            useBias = true, weight = fam.weightCol(mu))
+      }
+      val next = lastModel.summary.coefficients // xs ++ bias
+      converged = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max < tol
+      beta = next
+      it += 1
+    }
+    Irls(beta, it, converged, lastModel.xtxInv)
+  }
+
+  /** Sums over the design's rows at β, μ = `fam`'s mean: over the cells
+    * in plain Scala (`cell(i, c, μ)` is the i-th cell's whole
+    * contribution), else ONE aggregate of `row(y, μ)` over the rows. */
+  private def sumsAt(d: Design, fam: Family, beta: Array[Double])(
+      cell: (Int, XCell, Double) => Seq[Double],
+      row: (Column, Column) => Seq[Column]): Seq[Double] = d.cells match {
+    case Some(cells) =>
+      cells.indices.map(i => cell(i, cells(i), fam.mean(etaAt(beta, cells(i).xs))))
+        .transpose.map(_.sum)
+    case None =>
+      val (rows, eta) = d.atBeta(beta)
+      val sums = row(d.y, fam.meanCol(eta)).map(sum)
+      rows.agg(sums.head, sums.tail: _*).head().toSeq.map(_.asInstanceOf[Double])
+  }
+
+  /** Pearson dispersion φ̂ = Σ(y − μ̂)²/V(μ̂) / (n − p) at β, per cell from
+    * the y moments: Σ(y − μ)² = Σy² − 2μΣy + nμ². */
+  private def pearson(d: Design, fam: Family, beta: Array[Double], n: Long,
+                      v: Double => Double, vCol: Column => Column): Double =
+    sumsAt(d, fam, beta)(
+      (_, c, mu) => Seq((c.sumY2 - 2.0 * mu * c.sumY + c.n * mu * mu) / v(mu)),
+      (y, mu) => Seq(pow(y - mu, 2) / vCol(mu))).head / (n - d.k - 1).toDouble
+
+  /** IRLS logistic: w = p(1−p), z = η + (y−p)/(p(1−p)), dispersion 1, so
+    * the SEs are the final (XᵀWX)⁻¹'s — exactly the summary the reference
+    * prints (regression.py:203-255). */
   def logisticIrls(df: DataFrame, y: Column, xs: Seq[Column],
                    maxIter: Int = 25, tol: Double = 1e-8,
                    maxCells: Int = 4096): LogisticFit = {
-    require(maxIter > 0, "maxIter must be positive (stderr needs a final fit)")
-    val spark = df.sparkSession
-    import spark.implicits._
     val k = xs.length
-    var beta = Array.fill(k + 1)(0.0) // xs coefs ++ bias
-    var converged = false
-    var it = 0
-    var lastModel: OlsModel = null
-    // every iteration is one aggregate scan over the SAME (y, x...) slice;
-    // without the cache each of the ~10-20 iterations re-reads and
-    // re-projects the source (at sf0.1 that is the whole q34 runtime).
-    // MEMORY_AND_DISK by default, released before returning.
-    val slim = df.select(y.cast("double").as("__y") +:
-      xs.zipWithIndex.map { case (x, i) => x.cast("double").as(s"__x$i") }: _*)
-      .persist()
-    try {
-      val yd = col("__y")
-      val xsS = (0 until k).map(i => col(s"__x$i"))
-      // design collapse (graft.stats.LocalCollapse): z is linear in y given
-      // x and w depends only on x, so per-x-cell y moments are exact
-      val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
-      cellsOpt match {
-        case Some(cells) =>
-          while (it < maxIter && !converged) {
-            val buf = graft.agg.OlsBuf.zero(k + 1)
-            var i = 0
-            while (i < cells.length) {
-              val c = cells(i)
-              var eta = beta(k)
-              var m = 0
-              while (m < k) { eta += c.xs(m) * beta(m); m += 1 }
-              val p0 = 1.0 / (1.0 + math.exp(-eta))
-              val p = math.min(math.max(p0, 1e-10), 1.0 - 1e-10)
-              val w = p * (1.0 - p)
-              // z = η + (y − p)/w = (η − p/w) + y/w
-              buf.addCellYMoments(eta - p / w, 1.0 / w, c.sumY, c.sumY2,
-                c.xs :+ 1.0, w, c.n)
-              i += 1
-            }
-            val m = Regression.modelFromBuf(buf, k, useBias = true)
-            lastModel = m
-            val next = m.summary.coefficients
-            val delta = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max
-            beta = next
-            converged = delta < tol
-            it += 1
-          }
-        case None =>
-      while (it < maxIter && !converged) {
-        val withBeta = slim.crossJoin(broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta")))
-        val b = col("__beta")
-        val eta = xsS.zipWithIndex.map { case (x, i) =>
-          x * element_at(b, i + 1)
-        }.reduce(_ + _) + element_at(b, k + 1)
-        val p0 = lit(1.0) / (lit(1.0) + exp(-eta))
-        // clamp away from 0/1 so weights stay positive-definite
-        val p = least(greatest(p0, lit(1e-10)), lit(1.0 - 1e-10))
-        val w = p * (lit(1.0) - p)
-        val z = eta + (yd - p) / w
-        val m = Regression.fitOls(withBeta, z, xsS, useBias = true, weight = w)
-        lastModel = m
-        val next = m.summary.coefficients // xs ++ bias
-        val delta = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max
-        beta = next
-        converged = delta < tol
-        it += 1
-      }
-      }
-    } finally {
-      slim.unpersist()
-      ()
+    byX(glmSlice(df, y, xs, maxIter), k, maxCells) { d =>
+      val f = irls(d, logisticFamily, new Array[Double](k + 1), maxIter, tol)
+      val se = f.se(1.0)
+      LogisticFit(f.beta.take(k), f.beta(k), f.iterations, f.converged,
+        se.take(k), se(k))
     }
-    // cov(β) = (XᵀWX)⁻¹ at the final weights (GLM dispersion 1); the
-    // weighted OlsBuf accumulates exactly XᵀWX, so its inverse is already
-    // on the model. Order matches coefficients: xs then bias.
-    val se = (0 to k).map(i => math.sqrt(lastModel.xtxInv(i)(i))).toArray
-    LogisticFit(beta.take(k), beta(k), it, converged, se.take(k), se(k))
   }
 
   /** Poisson GLM fit with inference: stderr/z/p per coefficient (xs
@@ -219,161 +339,75 @@ object MlWrappers {
       zValues.map(z => 2.0 * (1.0 - graft.stats.Dist.normCdf(math.abs(z))))
   }
 
+  /** The Poisson IRLS on a prepared design, with n — [[poissonIrls]] and
+    * [[negBinIrls]]'s pilot. The intercept starts at log(ȳ) (the null
+    * model) so the first exp() stays in range on any y scale. */
+  private def poissonStage(d: Design, maxIter: Int, tol: Double): (Irls, Long) = {
+    val (n, sumY, _) = d.moments
+    require(n > d.k + 1, s"poisson_reg: need more than ${d.k + 1} rows, got $n")
+    val ybar = sumY / n
+    require(ybar > 0.0, "poisson_reg: outcome is all-zero — the log link has no MLE")
+    (irls(d, poissonFamily, Array.fill(d.k)(0.0) :+ math.log(ybar), maxIter, tol), n)
+  }
+
   /** IRLS Poisson regression (log link) — the count-outcome sibling of
     * [[logisticIrls]] and the GLM the reference's OLS/logistic surface
     * stops short of: per iteration, with η = Xβ and μ = exp(η),
     *
     *   w = μ,   z = η + (y − μ)/μ
     *
-    * and the update is ONE weighted-OLS aggregate pass (McCullagh &
-    * Nelder 1989 §2.5's canonical-link scoring). Same 100 TB shape as
-    * logisticIrls: the iterate rides a broadcast one-row frame so the
-    * whole loop janino-compiles once (see logisticIrls' note), the
-    * (y, x…) slice is persisted across the ~5-15 iterations, O(k²)
-    * driver state. The intercept starts at log(ȳ) (the null model) so
-    * the first exp() stays in range on any y scale. Rows with a null or
-    * negative outcome are dropped listwise (a count can't be negative —
-    * the Poisson likelihood is undefined there). */
+    * (McCullagh & Nelder 1989 §2.5's canonical-link scoring). Rows with a
+    * null or negative outcome are dropped listwise (a count can't be
+    * negative — the Poisson likelihood is undefined there). */
   def poissonIrls(df: DataFrame, y: Column, xs: Seq[Column],
                   maxIter: Int = 25, tol: Double = 1e-8,
                   maxCells: Int = 4096): PoissonFit = {
-    require(maxIter > 0, "maxIter must be positive (stderr needs a final fit)")
-    val spark = df.sparkSession
-    import spark.implicits._
     val k = xs.length
-    val slim = df.select(y.cast("double").as("__y") +:
-      xs.zipWithIndex.map { case (x, i) => x.cast("double").as(s"__x$i") }: _*)
-      .filter(col("__y").isNotNull && col("__y") >= 0.0)
-      .persist()
-    try {
-      val yd = col("__y")
-      val xsS = (0 until k).map(i => col(s"__x$i"))
-      // design collapse (graft.stats.LocalCollapse): z is linear in y given
-      // x and μ depends only on x, so per-x-cell y moments are exact
-      val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
-      cellsOpt match {
-        case Some(cells) =>
-          val nRows = cells.map(_.n).sum
-          val ybar = cells.map(_.sumY).sum / nRows
-          require(nRows > k + 1,
-            s"poisson_reg: need more than ${k + 1} rows, got $nRows")
-          require(ybar > 0.0,
-            "poisson_reg: outcome is all-zero — the log link has no MLE")
-          var beta = Array.fill(k)(0.0) :+ math.log(ybar)
-          var converged = false
-          var it = 0
-          var lastModel: OlsModel = null
-          def muOf(c: graft.stats.DesignCells.XCell): Double = {
-            var eta = beta(k)
-            var m = 0
-            while (m < k) { eta += c.xs(m) * beta(m); m += 1 }
-            math.min(math.max(math.exp(eta), 1e-10), 1e15)
-          }
-          while (it < maxIter && !converged) {
-            val buf = graft.agg.OlsBuf.zero(k + 1)
-            var i = 0
-            while (i < cells.length) {
-              val c = cells(i)
-              var eta = beta(k)
-              var m0 = 0
-              while (m0 < k) { eta += c.xs(m0) * beta(m0); m0 += 1 }
-              val mu = math.min(math.max(math.exp(eta), 1e-10), 1e15)
-              // z = η + (y − μ)/μ = (η − 1) + y/μ
-              buf.addCellYMoments(eta - 1.0, 1.0 / mu, c.sumY, c.sumY2,
-                c.xs :+ 1.0, mu, c.n)
-              i += 1
-            }
-            val m = Regression.modelFromBuf(buf, k, useBias = true)
-            lastModel = m
-            val next = m.summary.coefficients
-            val delta = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max
-            beta = next
-            converged = delta < tol
-            it += 1
-          }
-          // Pearson dispersion at the converged μ: per-cell closed form
-          // Σ(y−μ)²/μ = (Σy² − 2μΣy + nμ²)/μ
-          var pearson = 0.0
-          var i = 0
-          while (i < cells.length) {
-            val c = cells(i)
-            val mu = muOf(c)
-            pearson += (c.sumY2 - 2.0 * mu * c.sumY + c.n * mu * mu) / mu
-            i += 1
-          }
-          val phi = pearson / (nRows - k - 1).toDouble
-          val se = (0 to k).map(i0 => math.sqrt(lastModel.xtxInv(i0)(i0))).toArray
-          return PoissonFit(beta.take(k), beta(k), it, converged,
-            se.take(k), se(k), phi, nRows)
-        case None =>
-      }
-      val head = slim.agg(count(lit(1)).as("n"), avg(yd).as("ybar")).head()
-      val nRows = head.getAs[Long]("n")
-      val ybar = head.getAs[Double]("ybar")
-      require(nRows > k + 1, s"poisson_reg: need more than ${k + 1} rows, got $nRows")
-      require(ybar > 0.0, "poisson_reg: outcome is all-zero — the log link has no MLE")
-      var beta = Array.fill(k)(0.0) :+ math.log(ybar) // xs coefs ++ bias
-      var converged = false
-      var it = 0
-      var lastModel: OlsModel = null
-      while (it < maxIter && !converged) {
-        val withBeta = slim.crossJoin(broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta")))
-        val b = col("__beta")
-        val eta = xsS.zipWithIndex.map { case (x, i) =>
-          x * element_at(b, i + 1)
-        }.reduce(_ + _) + element_at(b, k + 1)
-        // clamp μ away from 0 (weight must stay positive-definite) and
-        // from overflow while the iterate is far from the optimum
-        val mu = least(greatest(exp(eta), lit(1e-10)), lit(1e15))
-        val z = eta + (yd - mu) / mu
-        val m = Regression.fitOls(withBeta, z, xsS, useBias = true, weight = mu)
-        lastModel = m
-        val next = m.summary.coefficients // xs ++ bias
-        val delta = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max
-        beta = next
-        converged = delta < tol
-        it += 1
-      }
-      // Pearson dispersion at the converged μ: one more aggregate scan
-      val withBeta = slim.crossJoin(broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta")))
-      val b = col("__beta")
-      val eta = xsS.zipWithIndex.map { case (x, i) =>
-        x * element_at(b, i + 1)
-      }.reduce(_ + _) + element_at(b, k + 1)
-      val mu = least(greatest(exp(eta), lit(1e-10)), lit(1e15))
-      val pearson = withBeta.agg(
-        sum(org.apache.spark.sql.functions.pow(yd - mu, 2) / mu).as("x2")).head().getAs[Double]("x2")
-      val phi = pearson / (nRows - k - 1).toDouble
-      val se = (0 to k).map(i => math.sqrt(lastModel.xtxInv(i)(i))).toArray
-      PoissonFit(beta.take(k), beta(k), it, converged, se.take(k), se(k), phi, nRows)
-    } finally {
-      slim.unpersist()
-      ()
+    byX(countSlice(df, y, xs, maxIter), k, maxCells) { d =>
+      val (f, n) = poissonStage(d, maxIter, tol)
+      val phi = pearson(d, poissonFamily, f.beta, n, mu => mu, mu => mu)
+      val se = f.se(1.0)
+      PoissonFit(f.beta.take(k), f.beta(k), f.iterations, f.converged,
+        se.take(k), se(k), phi, n)
     }
+  }
+
+  /** One GLM summary frame, checked for `names` before `fit` runs: a row
+    * per term — xs under `names`, then "(intercept)" — of (term, estimate,
+    * stderr, z_value, p_value), Wald z with its two-sided normal p,
+    * followed by the fit-level (name, value, type) columns repeated on
+    * every row (the calibration-ece single-scan convenience). `fit` gives
+    * the estimates and stderrs in β order (xs, then intercept). */
+  private def glmSummary(df: DataFrame, verb: String, xs: Seq[Column], names: Seq[String])(
+      fit: => (Array[Double], Array[Double], Seq[(String, Any, DataType)])): DataFrame = {
+    require(names.length == xs.length,
+      s"$verb: ${xs.length} covariates but ${names.length} names")
+    val (est, se, fitCols) = fit
+    val rows = (names :+ "(intercept)").zipWithIndex.map { case (term, i) =>
+      val z = est(i) / se(i)
+      Row.fromSeq(Seq(term, est(i), se(i), z,
+        2.0 * (1.0 - graft.stats.Dist.normCdf(math.abs(z)))) ++ fitCols.map(_._2))
+    }
+    val schema = StructType(StructField("term", StringType) +:
+      (Seq("estimate", "stderr", "z_value", "p_value").map((_, DoubleType)) ++
+        fitCols.map { case (nm, _, t) => (nm, t) })
+        .map { case (nm, t) => StructField(nm, t, nullable = false) })
+    df.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** [[poissonIrls]] as a summary frame — one row per term (xs order,
     * then "(intercept)"): (term, estimate, stderr, z_value, p_value)
     * with the fit-level n / dispersion / iterations / converged columns
-    * repeated per row (the calibration-ece single-scan convenience). */
+    * repeated per row. */
   def poissonSummaryDf(df: DataFrame, y: Column, xs: Seq[Column],
-                       names: Seq[String], maxIter: Int = 25): DataFrame = {
-    require(names.length == xs.length,
-      s"poisson_reg: ${xs.length} covariates but ${names.length} names")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val fit = poissonIrls(df, y, xs, maxIter = maxIter)
-    val rows = names.indices.map { i =>
-      (names(i), fit.coefficients(i), fit.stderr(i), fit.zValues(i),
-        fit.pValues(i), fit.n, fit.dispersion, fit.iterations, fit.converged)
-    } :+ (("(intercept)", fit.intercept, fit.interceptStderr,
-      fit.intercept / fit.interceptStderr,
-      2.0 * (1.0 - graft.stats.Dist.normCdf(
-        math.abs(fit.intercept / fit.interceptStderr))),
-      fit.n, fit.dispersion, fit.iterations, fit.converged))
-    rows.toDF("term", "estimate", "stderr", "z_value", "p_value", "n",
-      "dispersion", "iterations", "converged")
-  }
+                       names: Seq[String], maxIter: Int = 25): DataFrame =
+    glmSummary(df, "poisson_reg", xs, names) {
+      val f = poissonIrls(df, y, xs, maxIter = maxIter)
+      (f.coefficients :+ f.intercept, f.stderr :+ f.interceptStderr,
+        Seq(("n", f.n, LongType), ("dispersion", f.dispersion, DoubleType),
+          ("iterations", f.iterations, IntegerType),
+          ("converged", f.converged, BooleanType)))
+    }
 
   /** Gamma GLM fit (log link) with inference. */
   case class GammaFit(coefficients: Array[Double], intercept: Double,
@@ -396,8 +430,7 @@ object MlWrappers {
     *
     * The log-link gamma IRLS is the cleanest of the family: the Fisher
     * weight (dμ/dη)²/V(μ) = μ²/(φμ²) is CONSTANT, so each iteration is
-    * one UNWEIGHTED OLS of the working response z = η + (y−μ)/μ — the
-    * [[logisticIrls]] broadcast-iterate shape with w = 1. SEs are
+    * one UNWEIGHTED OLS of the working response z = η + (y−μ)/μ. SEs are
     * φ̂·(XᵀX)⁻¹ with the Pearson dispersion φ̂ = Σ((y−μ̂)/μ̂)²/(n−p)
     * (φ is a free parameter here, unlike Poisson's fixed 1 — omitting
     * it would understate every SE by the outcome's CV²). The
@@ -409,153 +442,31 @@ object MlWrappers {
   def gammaIrls(df: DataFrame, y: Column, xs: Seq[Column],
                 maxIter: Int = 25, tol: Double = 1e-8,
                 maxCells: Int = 4096): GammaFit = {
-    require(maxIter > 0, "maxIter must be positive (stderr needs a final fit)")
-    val spark = df.sparkSession
-    import spark.implicits._
     val k = xs.length
-    val complete = (y +: xs).map(_.isNotNull).reduce(_ && _)
-    val slim = df.filter(complete).select(y.cast("double").as("__y") +:
-      xs.zipWithIndex.map { case (x, i) => x.cast("double").as(s"__x$i") }: _*)
-      .persist()
-    try {
-      val yd = col("__y")
-      val xsS = (0 until k).map(i => col(s"__x$i"))
-      // design collapse (graft.stats.LocalCollapse): the gamma IRLS weight
-      // is constant and z is linear in y given x, so per-x-cell moments are exact
-      val cellsOpt = graft.stats.DesignCells.collectByX(slim, "__y", maxCells)
-      cellsOpt match {
-        case Some(cells) =>
-          val nRows = cells.map(_.n).sum
-          val bad = cells.map(_.nNonPos).sum
-          require(bad == 0,
-            s"gamma_reg: $bad rows have y <= 0 — the " +
-              "gamma density has no mass there (hurdle or shift the outcome)")
-          require(nRows > k + 1,
-            s"gamma_reg: need more than ${k + 1} rows, got $nRows")
-          val ybar = cells.map(_.sumY).sum / nRows
-          var beta = Array.fill(k)(0.0) :+ math.log(ybar)
-          var converged = false
-          var it = 0
-          var lastModel: OlsModel = null
-          def muOf(c: graft.stats.DesignCells.XCell): Double = {
-            var eta = beta(k)
-            var m = 0
-            while (m < k) { eta += c.xs(m) * beta(m); m += 1 }
-            math.min(math.max(math.exp(eta), 1e-300), 1e300)
-          }
-          while (it < maxIter && !converged) {
-            val buf = graft.agg.OlsBuf.zero(k + 1)
-            var i = 0
-            while (i < cells.length) {
-              val c = cells(i)
-              var eta = beta(k)
-              var m0 = 0
-              while (m0 < k) { eta += c.xs(m0) * beta(m0); m0 += 1 }
-              val mu = math.min(math.max(math.exp(eta), 1e-300), 1e300)
-              // z = η + (y − μ)/μ = (η − 1) + y/μ; w = 1 (log link)
-              buf.addCellYMoments(eta - 1.0, 1.0 / mu, c.sumY, c.sumY2,
-                c.xs :+ 1.0, 1.0, c.n)
-              i += 1
-            }
-            val m = Regression.modelFromBuf(buf, k, useBias = true)
-            lastModel = m
-            val next = m.summary.coefficients
-            val delta = next.zip(beta).map { case (a, b2) => math.abs(a - b2) }.max
-            beta = next
-            converged = delta < tol
-            it += 1
-          }
-          // Pearson: Σ((y−μ)/μ)² = (Σy² − 2μΣy + nμ²)/μ²
-          var pearson = 0.0
-          var i = 0
-          while (i < cells.length) {
-            val c = cells(i)
-            val mu = muOf(c)
-            pearson += (c.sumY2 - 2.0 * mu * c.sumY + c.n * mu * mu) / (mu * mu)
-            i += 1
-          }
-          val phi = pearson / (nRows - k - 1).toDouble
-          val se = (0 to k).map(i0 =>
-            math.sqrt(phi * lastModel.xtxInv(i0)(i0))).toArray
-          return GammaFit(beta.take(k), beta(k), it, converged,
-            se.take(k), se(k), phi, nRows)
-        case None =>
-      }
-      val head = slim.agg(count(lit(1)).as("n"), avg(yd).as("ybar"),
-        sum(when(yd <= 0.0, 1L).otherwise(0L)).as("bad")).head()
-      val nRows = head.getAs[Long]("n")
-      require(head.getAs[Long]("bad") == 0,
-        s"gamma_reg: ${head.getAs[Long]("bad")} rows have y <= 0 — the " +
-          "gamma density has no mass there (hurdle or shift the outcome)")
-      require(nRows > k + 1,
-        s"gamma_reg: need more than ${k + 1} rows, got $nRows")
-      val ybar = head.getAs[Double]("ybar")
-      var beta = Array.fill(k)(0.0) :+ math.log(ybar) // xs coefs ++ bias
-      var converged = false
-      var it = 0
-      var lastModel: OlsModel = null
-      while (it < maxIter && !converged) {
-        val withBeta = slim.crossJoin(
-          broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta")))
-        val b = col("__beta")
-        // foldLeft from the bias term: the intercept-only fit (k = 0)
-        // is legitimate here — it closes exactly to ln(mean y)
-        val eta = xsS.zipWithIndex.map { case (x, i) =>
-          x * element_at(b, i + 1)
-        }.foldLeft(element_at(b, k + 1): Column)(_ + _)
-        val mu = least(greatest(exp(eta), lit(1e-300)), lit(1e300))
-        val z = eta + (yd - mu) / mu
-        val m = Regression.fitOls(withBeta, z, xsS, useBias = true)
-        lastModel = m
-        val next = m.summary.coefficients // xs ++ bias
-        val delta = next.zip(beta).map { case (a, b2) => math.abs(a - b2) }.max
-        beta = next
-        converged = delta < tol
-        it += 1
-      }
-      // Pearson dispersion at the converged μ: one more aggregate scan
-      val withBeta = slim.crossJoin(
-        broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta")))
-      val b = col("__beta")
-      val eta = xsS.zipWithIndex.map { case (x, i) =>
-        x * element_at(b, i + 1)
-      }.foldLeft(element_at(b, k + 1): Column)(_ + _)
-      val mu = least(greatest(exp(eta), lit(1e-300)), lit(1e300))
-      val pearson = withBeta.agg(
-        sum(org.apache.spark.sql.functions.pow((yd - mu) / mu, 2)).as("x2"))
-        .head().getAs[Double]("x2")
-      val phi = pearson / (nRows - k - 1).toDouble
-      val se = (0 to k).map(i =>
-        math.sqrt(phi * lastModel.xtxInv(i)(i))).toArray
-      GammaFit(beta.take(k), beta(k), it, converged, se.take(k), se(k),
-        phi, nRows)
-    } finally {
-      slim.unpersist()
-      ()
+    byX(glmSlice(df, y, xs, maxIter), k, maxCells) { d =>
+      val (n, sumY, bad) = d.moments
+      require(bad == 0, s"gamma_reg: $bad rows have y <= 0 — the " +
+        "gamma density has no mass there (hurdle or shift the outcome)")
+      require(n > k + 1, s"gamma_reg: need more than ${k + 1} rows, got $n")
+      val f = irls(d, gammaFamily, Array.fill(k)(0.0) :+ math.log(sumY / n), maxIter, tol)
+      val phi = pearson(d, gammaFamily, f.beta, n, mu => mu * mu, mu => mu * mu)
+      val se = f.se(phi)
+      GammaFit(f.beta.take(k), f.beta(k), f.iterations, f.converged,
+        se.take(k), se(k), phi, n)
     }
   }
 
   /** [[gammaIrls]] as a summary frame — the [[poissonSummaryDf]]
     * shape. */
   def gammaSummaryDf(df: DataFrame, y: Column, xs: Seq[Column],
-                     names: Seq[String], maxIter: Int = 25): DataFrame = {
-    require(names.length == xs.length,
-      s"gamma_reg: ${xs.length} covariates but ${names.length} names")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val fit = gammaIrls(df, y, xs, maxIter = maxIter)
-    val rows = names.indices.map { i =>
-      (names(i), fit.coefficients(i), fit.stderr(i), fit.zValues(i),
-        fit.pValues(i), fit.n, fit.dispersion, fit.iterations,
-        fit.converged)
-    } :+ (("(intercept)", fit.intercept, fit.interceptStderr,
-      fit.intercept / fit.interceptStderr,
-      2.0 * (1.0 - graft.stats.Dist.normCdf(
-        math.abs(fit.intercept / fit.interceptStderr))),
-      fit.n, fit.dispersion, fit.iterations, fit.converged))
-    rows.toDF("term", "estimate", "stderr", "z_value", "p_value", "n",
-      "dispersion", "iterations", "converged")
-  }
+                     names: Seq[String], maxIter: Int = 25): DataFrame =
+    glmSummary(df, "gamma_reg", xs, names) {
+      val f = gammaIrls(df, y, xs, maxIter = maxIter)
+      (f.coefficients :+ f.intercept, f.stderr :+ f.interceptStderr,
+        Seq(("n", f.n, LongType), ("dispersion", f.dispersion, DoubleType),
+          ("iterations", f.iterations, IntegerType),
+          ("converged", f.converged, BooleanType)))
+    }
 
   /** Negative-binomial (NB2) regression — the overdispersed-count sibling
     * of [[poissonIrls]]: log link, Var(y) = μ + αμ². Real count data
@@ -564,14 +475,27 @@ object MlWrappers {
     * √dispersion and every p-value lies; NB2 models the overdispersion
     * instead of post-hoc inflating (Cameron & Trivedi 2013 ch. 3-4).
     *
-    * Two stages, both distributed:
-    *  1. [[poissonIrls]] for the pilot means, then α̂ by the
+    * Two stages on one prepared design:
+    *  1. the Poisson fit for the pilot means, then α̂ by the
     *     Cameron-Trivedi auxiliary moment regression (their eq. 3.37,
     *     no-intercept OLS of ((y−μ̂)²−μ̂)/μ̂ on μ̂, which closes to
-    *     α̂ = Σ((y−μ̂)² − μ̂) / Σμ̂² — ONE aggregate);
+    *     α̂ = Σ((y−μ̂)² − μ̂) / Σμ̂² — ONE sum);
     *  2. IRLS with the NB2 working weight w = μ/(1 + αμ) (the Fisher
-    *     scoring weight for fixed α), same broadcast-iterate shape as
-    *     the Poisson loop, SEs from the converged (XᵀWX)⁻¹.
+    *     scoring weight for fixed α), SEs from the converged (XᵀWX)⁻¹.
+    *
+    * α̂ uncertainty and the Poisson-vs-NB2 adjudication:
+    *  - alpha_se: the plain OLS SE of the auxiliary no-intercept
+    *    regression that DEFINED α̂ (u = ((y−μ̂)²−μ̂)/μ̂ on μ̂):
+    *    se² = Σ(u−α̂μ̂)²/(n−1) / Σμ̂² — the textbook auxiliary t-test for
+    *    overdispersion (CT 2013 §3.4), at the pilot μ̂.
+    *  - LR test vs Poisson: 2(llNB2 − llPois) with the moment α̂ plugged
+    *    in (llNB2 at the ML α would be ≥ this, so the statistic is
+    *    conservative — the documented two-step caveat); α = 0 sits on the
+    *    boundary, so p = ½·P(χ²₁ > LR) (the Self-Liang ½χ²₀+½χ²₁ mixture).
+    *
+    * The design collapse is keyed on the FULL (y, x…) row, because
+    * lgamma(y + r) is nonlinear in y: each row cell is a y-moment cell
+    * whose rows share y, so both IRLS stages run on it unchanged.
     *
     * α̂ ≤ 0 (under-dispersed or equi-dispersed data) is a NAMED error
     * pointing back at poisson_reg — fitting NB2 there would divide by a
@@ -582,196 +506,55 @@ object MlWrappers {
   def negBinIrls(df: DataFrame, y: Column, xs: Seq[Column],
                  maxIter: Int = 25, tol: Double = 1e-8,
                  maxCells: Int = 4096): NegBinFit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val k = xs.length
-    val pilot = poissonIrls(df, y, xs, maxIter = maxIter, tol = tol)
-    val slim = df.select(y.cast("double").as("__y") +:
-      xs.zipWithIndex.map { case (x, i) => x.cast("double").as(s"__x$i") }: _*)
-      .filter(col("__y").isNotNull && col("__y") >= 0.0)
-      .persist()
-    try {
-      val yd = col("__y")
-      val xsS = (0 until k).map(i => col(s"__x$i"))
-      // design collapse (graft.stats.LocalCollapse) keyed on the FULL (y, x…)
-      // row: the NB2 likelihood's lgamma(y + r) is nonlinear in y
-      val cellsOpt = graft.stats.DesignCells.collect(slim, maxCells)
-      cellsOpt match {
-        case Some((cells, cnts)) =>
-          val pilotBeta0 = pilot.coefficients :+ pilot.intercept
-          def muAt(b: Array[Double], cell: Array[Double]): Double = {
-            var eta = b(k)
-            var m = 0
-            while (m < k) { eta += cell(m + 1) * b(m); m += 1 }
-            math.min(math.max(math.exp(eta), 1e-10), 1e15)
-          }
-          def etaAt(b: Array[Double], cell: Array[Double]): Double = {
-            var eta = b(k)
-            var m = 0
-            while (m < k) { eta += cell(m + 1) * b(m); m += 1 }
-            eta
-          }
-          var num = 0.0; var den = 0.0
-          var i = 0
-          while (i < cells.length) {
-            val cell = cells(i); val w = cnts(i).toDouble
-            val pmu = muAt(pilotBeta0, cell)
-            val yv = cell(0)
-            num += w * ((yv - pmu) * (yv - pmu) - pmu)
-            den += w * pmu * pmu
-            i += 1
-          }
-          val alpha = num / den
-          require(alpha > 0,
-            f"neg_bin: moment dispersion alpha = $alpha%.6f <= 0 — the data " +
-              "is not overdispersed; use poisson_reg")
-          var beta = pilotBeta0
-          var converged = false
-          var it = 0
-          var lastModel: OlsModel = null
-          while (it < maxIter && !converged) {
-            val buf = graft.agg.OlsBuf.zero(k + 1)
-            i = 0
-            while (i < cells.length) {
-              val cell = cells(i)
-              val eta = etaAt(beta, cell)
-              val mu = math.min(math.max(math.exp(eta), 1e-10), 1e15)
-              val z = eta + (cell(0) - mu) / mu
-              val w = mu / (1.0 + alpha * mu)
-              val xsB = new Array[Double](k + 1)
-              var m = 0
-              while (m < k) { xsB(m) = cell(m + 1); m += 1 }
-              xsB(k) = 1.0
-              buf.addCell(z, xsB, w, cnts(i))
-              i += 1
-            }
-            val m = Regression.modelFromBuf(buf, k, useBias = true)
-            lastModel = m
-            val next = m.summary.coefficients
-            val delta = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max
-            beta = next
-            converged = delta < tol
-            it += 1
-          }
-          val se = (0 to k).map(i0 =>
-            math.sqrt(lastModel.xtxInv(i0)(i0))).toArray
-          import org.apache.commons.math3.special.Gamma.logGamma
-          var ss = 0.0; var sx2 = 0.0; var nn = 0L; var llPois = 0.0
-          i = 0
-          while (i < cells.length) {
-            val cell = cells(i); val w = cnts(i).toDouble
-            val pmu = muAt(pilotBeta0, cell)
-            val yv = cell(0)
-            val u = ((yv - pmu) * (yv - pmu) - pmu) / pmu
-            val auxRes = u - alpha * pmu
-            ss += w * auxRes * auxRes
-            sx2 += w * pmu * pmu
-            nn += cnts(i)
-            llPois += w * (yv * math.log(pmu) - pmu - logGamma(yv + 1.0))
-            i += 1
-          }
-          val alphaSe = math.sqrt(ss / (nn - 1).toDouble / sx2)
-          val r0 = 1.0 / alpha
-          val lgR0 = logGamma(r0)
-          var llNb = 0.0
-          i = 0
-          while (i < cells.length) {
-            val cell = cells(i); val w = cnts(i).toDouble
-            val fmu = muAt(beta, cell)
-            val yv = cell(0)
-            llNb += w * (logGamma(yv + r0) - lgR0 - logGamma(yv + 1.0) +
-              r0 * math.log(r0 / (r0 + fmu)) +
-              yv * math.log(fmu / (r0 + fmu)))
-            i += 1
-          }
-          val lr = 2.0 * (llNb - llPois)
-          val lrP = 0.5 *
-            (1.0 - graft.stats.Dist.chiSqCdf(math.max(lr, 0.0), 1.0))
-          return NegBinFit(beta.take(k), beta(k), alpha, it, converged,
-            se.take(k), se(k), pilot.n, alphaSe, llPois, llNb, lr, lrP)
-        case None =>
-      }
-      def muOf(beta: Array[Double]): (DataFrame, Column) = {
-        val withBeta =
-          slim.crossJoin(broadcast(Seq(Tuple1(beta.toSeq)).toDF("__beta")))
-        val b = col("__beta")
-        val eta = xsS.zipWithIndex.map { case (x, i) =>
-          x * element_at(b, i + 1)
-        }.reduce(_ + _) + element_at(b, k + 1)
-        (withBeta, least(greatest(exp(eta), lit(1e-10)), lit(1e15)))
-      }
-      val pilotBeta = pilot.coefficients :+ pilot.intercept
-      val (pf, pmu) = muOf(pilotBeta)
-      val mom = pf.agg(
-        sum((yd - pmu) * (yd - pmu) - pmu).as("num"),
-        sum(pmu * pmu).as("den")).head()
-      val alpha = mom.getAs[Double]("num") / mom.getAs[Double]("den")
+    val slim = countSlice(df, y, xs, maxIter)
+    val rowCells = DesignCells.collect(slim, maxCells)
+    val ys = rowCells.fold(Array.empty[Double])(_._1.map(_(0)))
+    withDesign(slim, k, rowCells.map { case (cells, cnts) =>
+      cells.indices.map { i =>
+        val (yv, c) = (cells(i)(0), cnts(i))
+        XCell(cells(i).tail, c, c * yv, c * yv * yv, if (yv <= 0.0) c else 0L)
+      }.toArray
+    }) { d =>
+      val (pilot, n) = poissonStage(d, maxIter, tol)
+      val lg = udf((v: Double) => logGamma(v))
+      // at the pilot μ̂, with e = (y−μ̂)²−μ̂ and u = e/μ̂: α̂'s moments Σe and
+      // Σμ̂², Σu² for the auxiliary residual sum Σ(u−α̂μ̂)² = Σu² − (Σe)²/Σμ̂²,
+      // and the Poisson log-likelihood
+      val Seq(num, den, uu, llPois) = sumsAt(d, poissonFamily, pilot.beta)(
+        (i, c, mu) => {
+          val (yv, w) = (ys(i), c.n.toDouble)
+          val e = (yv - mu) * (yv - mu) - mu
+          Seq(w * e, w * mu * mu, w * (e / mu) * (e / mu),
+            w * (yv * math.log(mu) - mu - logGamma(yv + 1.0)))
+        },
+        (yc, mu) => {
+          val e = (yc - mu) * (yc - mu) - mu
+          Seq(e, mu * mu, (e / mu) * (e / mu), yc * log(mu) - mu - lg(yc + 1.0))
+        })
+      val alpha = num / den
       require(alpha > 0,
         f"neg_bin: moment dispersion alpha = $alpha%.6f <= 0 — the data " +
           "is not overdispersed; use poisson_reg")
-      var beta = pilotBeta
-      var converged = false
-      var it = 0
-      var lastModel: OlsModel = null
-      while (it < maxIter && !converged) {
-        val (withBeta, mu) = muOf(beta)
-        val b2 = col("__beta")
-        val eta = xsS.zipWithIndex.map { case (x, i) =>
-          x * element_at(b2, i + 1)
-        }.reduce(_ + _) + element_at(b2, k + 1)
-        val z = eta + (yd - mu) / mu
-        val w = mu / (lit(1.0) + lit(alpha) * mu)
-        val m = Regression.fitOls(withBeta, z, xsS, useBias = true, weight = w)
-        lastModel = m
-        val next = m.summary.coefficients
-        val delta = next.zip(beta).map { case (a, b) => math.abs(a - b) }.max
-        beta = next
-        converged = delta < tol
-        it += 1
-      }
-      val se = (0 to k).map(i => math.sqrt(lastModel.xtxInv(i)(i))).toArray
-      // α uncertainty + Poisson-vs-NB2 adjudication (one extra aggregate
-      // per frame, riding the cached slim):
-      //  - alpha_se: the plain OLS SE of the Cameron-Trivedi auxiliary
-      //    no-intercept regression that DEFINED α̂ (u = ((y−μ̂)²−μ̂)/μ̂ on
-      //    μ̂): se² = Σ(u−α̂μ̂)²/(n−1) / Σμ̂² — the textbook auxiliary
-      //    t-test for overdispersion (CT 2013 §3.4), at the pilot μ̂.
-      //  - LR test vs Poisson: 2(llNB2 − llPois) with the moment α̂
-      //    plugged in (llNB2 at the ML α would be ≥ this, so the
-      //    statistic is conservative — the documented two-step caveat);
-      //    α = 0 sits on the boundary, so p = ½·P(χ²₁ > LR) (the
-      //    Self-Liang ½χ²₀+½χ²₁ mixture).
-      val lg = udf((v: Double) =>
-        org.apache.commons.math3.special.Gamma.logGamma(v))
-      val (pf2, pmu2) = muOf(pilotBeta)
-      val u = ((yd - pmu2) * (yd - pmu2) - pmu2) / pmu2
-      val auxRes = u - lit(alpha) * pmu2
-      val aux = pf2.agg(
-        sum(auxRes * auxRes).as("ss"),
-        sum(pmu2 * pmu2).as("sx2"),
-        count(lit(1)).as("nn"),
-        sum(yd * log(pmu2) - pmu2 - lg(yd + 1.0)).as("ll_pois")).head()
-      val nAux = aux.getAs[Long]("nn").toDouble
-      val alphaSe = math.sqrt(
-        aux.getAs[Double]("ss") / (nAux - 1) / aux.getAs[Double]("sx2"))
+      val nb = negBinFamily(alpha)
+      val f = irls(d, nb, pilot.beta, maxIter, tol)
+      val alphaSe = math.sqrt((uu - num * num / den) / (n - 1).toDouble / den)
       val r = 1.0 / alpha
-      // lgamma(r) is a scalar — fold it driver-side instead of calling
-      // the udf once per row on a constant
-      val lgR = org.apache.commons.math3.special.Gamma.logGamma(r)
-      val (ff, fmu) = muOf(beta)
-      val llNb = ff.agg(sum(
-        lg(yd + r) - lit(lgR) - lg(yd + 1.0) +
-          lit(r) * log(lit(r) / (lit(r) + fmu)) +
-          yd * log(fmu / (lit(r) + fmu))).as("ll")).head().getAs[Double]("ll")
-      val llPois = aux.getAs[Double]("ll_pois")
+      val lgR = logGamma(r) // a scalar: folded driver-side, not per row
+      val Seq(llNb) = sumsAt(d, nb, f.beta)(
+        (i, c, mu) => {
+          val yv = ys(i)
+          Seq(c.n * (logGamma(yv + r) - lgR - logGamma(yv + 1.0) +
+            r * math.log(r / (r + mu)) + yv * math.log(mu / (r + mu))))
+        },
+        (yc, mu) => Seq(lg(yc + r) - lit(lgR) - lg(yc + 1.0) +
+          lit(r) * log(lit(r) / (lit(r) + mu)) + yc * log(mu / (lit(r) + mu))))
       val lr = 2.0 * (llNb - llPois)
       val lrP = 0.5 *
         (1.0 - graft.stats.Dist.chiSqCdf(math.max(lr, 0.0), 1.0))
-      NegBinFit(beta.take(k), beta(k), alpha, it, converged,
-        se.take(k), se(k), pilot.n, alphaSe, llPois, llNb, lr, lrP)
-    } finally {
-      slim.unpersist()
-      ()
+      val se = f.se(1.0)
+      NegBinFit(f.beta.take(k), f.beta(k), alpha, f.iterations, f.converged,
+        se.take(k), se(k), n, alphaSe, llPois, llNb, lr, lrP)
     }
   }
 
@@ -793,27 +576,17 @@ object MlWrappers {
     * Cameron-Trivedi auxiliary-regression SE; lr_stat/lr_p the
     * boundary-corrected Poisson-vs-NB2 likelihood ratio). */
   def negBinSummaryDf(df: DataFrame, y: Column, xs: Seq[Column],
-                      names: Seq[String], maxIter: Int = 25): DataFrame = {
-    require(names.length == xs.length,
-      s"neg_bin: ${xs.length} covariates but ${names.length} names")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val fit = negBinIrls(df, y, xs, maxIter = maxIter)
-    val rows = names.indices.map { i =>
-      (names(i), fit.coefficients(i), fit.stderr(i), fit.zValues(i),
-        fit.pValues(i), fit.n, fit.alpha, fit.alphaSe,
-        fit.alpha / fit.alphaSe, fit.lrStat, fit.lrP,
-        fit.iterations, fit.converged)
-    } :+ (("(intercept)", fit.intercept, fit.interceptStderr,
-      fit.intercept / fit.interceptStderr,
-      2.0 * (1.0 - graft.stats.Dist.normCdf(
-        math.abs(fit.intercept / fit.interceptStderr))),
-      fit.n, fit.alpha, fit.alphaSe, fit.alpha / fit.alphaSe,
-      fit.lrStat, fit.lrP, fit.iterations, fit.converged))
-    rows.toDF("term", "estimate", "stderr", "z_value", "p_value", "n",
-      "alpha", "alpha_se", "alpha_t", "lr_stat", "lr_p",
-      "iterations", "converged")
-  }
+                      names: Seq[String], maxIter: Int = 25): DataFrame =
+    glmSummary(df, "neg_bin", xs, names) {
+      val f = negBinIrls(df, y, xs, maxIter = maxIter)
+      (f.coefficients :+ f.intercept, f.stderr :+ f.interceptStderr,
+        Seq(("n", f.n, LongType), ("alpha", f.alpha, DoubleType),
+          ("alpha_se", f.alphaSe, DoubleType),
+          ("alpha_t", f.alpha / f.alphaSe, DoubleType),
+          ("lr_stat", f.lrStat, DoubleType), ("lr_p", f.lrP, DoubleType),
+          ("iterations", f.iterations, IntegerType),
+          ("converged", f.converged, BooleanType)))
+    }
 
   /** AUC of a score column against binary labels via the Mann-Whitney
     * rank-sum identity AUC = (R₁ − n₁(n₁+1)/2)/(n₁n₀), computed with the
