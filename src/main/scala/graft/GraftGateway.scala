@@ -586,10 +586,8 @@ object GraftGateway {
         } yield {
           val est = r.estimates(j - 1)(m)
           val se = r.stderr(j - 1)(m)
-          val z = est / se
-          (r.levels(j), termNames(m), est, se, z,
-            2.0 * (1.0 - graft.stats.Dist.normCdf(math.abs(z))),
-            r.n, r.levels.length.toLong)
+          val (z, p) = graft.stats.Newton.wald(est, se)
+          (r.levels(j), termNames(m), est, se, z, p, r.n, r.levels.length.toLong)
         }
         rows.toDF("class_value", "term", "estimate", "stderr", "z_value",
           "p_value", "n", "n_levels")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stats.{DesignCells, LinAlg, Newton}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,11 +16,10 @@ import org.apache.spark.sql.functions._
   * Weibull and reports no standard errors, so it cannot answer the
   * inference question this verb exists for.)
   *
-  * Damped ascent-guaranteed Newton on θ = (β₀..β_k, log σ) with the
-  * observed information (ridged until the solve direction is an ascent
-  * direction, then a likelihood backtracking line search — the surface
-  * is not globally concave, and pure Newton from a moment init
-  * demonstrably walks onto the flat σ→∞ ridge); SEs from the inverse
+  * Fit by [[graft.stats.Newton]] on θ = (β₀..β_k, log σ) with the
+  * observed information — its ridge and backtracking matter here: the
+  * surface is not globally concave, and pure Newton from a moment init
+  * demonstrably walks onto the flat σ→∞ ridge; SEs from the inverse
   * observed information at the optimum. For
   * `weibull`, the log_scale row's z-test is the classic
   * exponential-vs-Weibull test (σ = 1 ⇔ constant hazard); for
@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: ONE distributed aggregate per iteration — O(k²)
   * `sum()` expressions over codegen columns of z = (log t − x'β)/σ
   * (the lognormal branch uses the codegen [[graft.expr.MathExprs.erfc]],
-  * not a UDF) — and an O(k³) driver solve; a line-search trial costs no
-  * extra pass when accepted, because its stats row IS the next
-  * iteration's aggregate. Robustness: exp(z) is clamped at z = 50 (a
+  * not a UDF), read by position into one moment vector — and an O(k³)
+  * driver solve. Robustness: exp(z) is clamped at z = 50 (a
   * 50-σ residual) so a bad intermediate β can't overflow the sums, and
   * the lognormal hazard switches to its Mills-ratio asymptote beyond
   * z = 26 where erfc underflows.
@@ -62,11 +61,9 @@ object Aft {
       time.cast("double").as("__t") +: event.cast("int").as("__d") +:
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
       .withColumn("__y", log(col("__t")))
-    base.persist()
-    try {
-      // design collapse (graft.stats.LocalCollapse). Columns:
-      // 0 = __t, 1 = __d, 2..k+1 = __x*, k+2 = __y.
-      val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
+    // design collapse (graft.stats.LocalCollapse). Columns:
+    // 0 = __t, 1 = __d, 2..k+1 = __x*, k+2 = __y.
+    DesignCells.persistUnlessCollapsed(base, DesignCells.collect(base, maxCells)) { cellsOpt =>
       val (n, nEvents, badT, badD, mu0, sd0) = cellsOpt match {
         case Some((cells, cnts)) =>
           var nn = 0L; var ne = 0L; var bt = 0L; var bd = 0L; var sy = 0.0
@@ -111,16 +108,22 @@ object Aft {
       require(n > np.toLong,
         s"aft: $n complete rows cannot identify $np parameters")
 
-      var theta = new Array[Double](np)
-      theta(0) = mu0
-      theta(np - 1) = math.log(math.max(sd0, 1e-3))
+      val theta0 = new Array[Double](np)
+      theta0(0) = mu0
+      theta0(np - 1) = math.log(math.max(sd0, 1e-3))
       val pairs = for { j <- 0 until (k + 1); l <- j until (k + 1) }
         yield (j, l)
       def xcol(j: Int): Column = if (j == 0) lit(1.0) else col(s"__x${j - 1}")
+      // the moment vector at θ, in the row path's aggregate order: ll,
+      // Σgz·z, Σhz·z², then Σgz·x_j and Σhz·z·x_j (j = 0..k), then
+      // Σhz·x_j·x_l over `pairs`
+      def sg(j: Int) = 3 + j
+      def shz(j: Int) = 4 + k + j
+      def sh(pi: Int) = 5 + 2 * k + pi
 
       // ONE distributed pass: the log-likelihood plus every moment the
       // gradient/Hessian at `at` needs
-      def statsAtDist(at: Array[Double]): org.apache.spark.sql.Row = {
+      def momentsDist(at: Array[Double]): Array[Double] = {
         val s = math.exp(at(np - 1))
         val eta = (0 until (k + 1)).map(j => xcol(j) * lit(at(j)))
           .reduce(_ + _)
@@ -158,29 +161,20 @@ object Aft {
         val gz = when(d1, u).otherwise(vS)
         val hz = when(d1, up).otherwise(vp)
         val lli = when(d1, lf - lit(at(np - 1))).otherwise(ls)
-        val aggs =
-          Seq(sum(lli).as("ll"), sum(gz * z).as("sgz"),
-            sum(hz * z * z).as("shzz")) ++
-            (0 until (k + 1)).map(j => sum(gz * xcol(j)).as(s"sg$j")) ++
-            (0 until (k + 1)).map(j => sum(hz * z * xcol(j)).as(s"shz$j")) ++
-            pairs.map { case (j, l) =>
-              sum(hz * xcol(j) * xcol(l)).as(s"sh${j}_$l") }
-        base.agg(aggs.head, aggs.tail: _*).head()
+        DesignCells.sums(base,
+          Seq(sum(lli), sum(gz * z), sum(hz * z * z)) ++
+            (0 until (k + 1)).map(j => sum(gz * xcol(j))) ++
+            (0 until (k + 1)).map(j => sum(hz * z * xcol(j))) ++
+            pairs.map { case (j, l) => sum(hz * xcol(j) * xcol(l)) })
       }
-      // driver-side mirror of statsAtDist over the collapsed cells: the
+      // driver-side mirror of momentsDist over the collapsed cells: the
       // SAME per-row formulas (clamps included) times the cell count,
-      // summed in the deterministic sorted-cell order. Field names match
-      // statsAtDist's aggregate aliases so gradNegH reads either row.
-      def statsAtLocal(cells: Array[Array[Double]], cnts: Array[Long])
-                      (at: Array[Double]): org.apache.spark.sql.Row = {
+      // summed in the deterministic sorted-cell order
+      def momentsLocal(cells: Array[Array[Double]], cnts: Array[Long])
+                      (at: Array[Double]): Array[Double] = {
         val s = math.exp(at(np - 1))
         val c0 = math.log(math.sqrt(2.0 * math.Pi))
-        val nFields = 3 + 2 * (k + 1) + pairs.length
-        val acc = new Array[Double](nFields)
-        val ixLl = 0; val ixSgz = 1; val ixShzz = 2
-        def ixSg(j: Int) = 3 + j
-        def ixShz(j: Int) = 3 + (k + 1) + j
-        def ixSh(pi: Int) = 3 + 2 * (k + 1) + pi
+        val acc = new Array[Double](sh(pairs.length))
         var i = 0
         while (i < cells.length) {
           val cell = cells(i)
@@ -216,155 +210,53 @@ object Aft {
           val hz = if (d1) up else vp
           val lli = if (d1) lf - at(np - 1) else ls
           def xv(j: Int): Double = if (j == 0) 1.0 else cell(j + 1)
-          acc(ixLl) += w * lli
-          acc(ixSgz) += w * gz * z
-          acc(ixShzz) += w * hz * z * z
+          acc(0) += w * lli
+          acc(1) += w * gz * z
+          acc(2) += w * hz * z * z
           var j = 0
           while (j < k + 1) {
-            acc(ixSg(j)) += w * gz * xv(j)
-            acc(ixShz(j)) += w * hz * z * xv(j)
+            acc(sg(j)) += w * gz * xv(j)
+            acc(shz(j)) += w * hz * z * xv(j)
             j += 1
           }
           var pi = 0
           while (pi < pairs.length) {
             val (pj, pl) = pairs(pi)
-            acc(ixSh(pi)) += w * hz * xv(pj) * xv(pl)
+            acc(sh(pi)) += w * hz * xv(pj) * xv(pl)
             pi += 1
           }
           i += 1
         }
-        val names0 = Seq("ll", "sgz", "shzz") ++
-          (0 until (k + 1)).map(j => s"sg$j") ++
-          (0 until (k + 1)).map(j => s"shz$j") ++
-          pairs.map { case (j, l) => s"sh${j}_$l" }
-        val schema = org.apache.spark.sql.types.StructType(names0.map(f =>
-          org.apache.spark.sql.types.StructField(f,
-            org.apache.spark.sql.types.DoubleType)))
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          acc.map(_.asInstanceOf[Any]), schema)
+        acc
       }
-      val statsAt: Array[Double] => org.apache.spark.sql.Row =
-        cellsOpt match {
-          case Some((cells, cnts)) => statsAtLocal(cells, cnts)
-          case None => statsAtDist
-        }
-      // gradient and NEGATIVE Hessian from a stats row taken at `at`
-      def gradNegH(r: org.apache.spark.sql.Row, at: Array[Double])
-          : (Array[Double], Array[Array[Double]]) = {
+      val momentsAt: Array[Double] => Array[Double] = cellsOpt match {
+        case Some((cells, cnts)) => momentsLocal(cells, cnts)
+        case None => momentsDist
+      }
+      // ll, gradient and observed information from the moments at `at`
+      def toStats(m: Array[Double], at: Array[Double]): Newton.Stats = {
         val s = math.exp(at(np - 1))
         val grad = new Array[Double](np)
-        (0 until (k + 1)).foreach(j =>
-          grad(j) = -r.getAs[Double](s"sg$j") / s)
-        grad(np - 1) = -(r.getAs[Double]("sgz") + nEvents.toDouble)
-        val h = graft.stats.LinAlg.zeros(np, np)
-        pairs.foreach { case (j, l) =>
-          h(j)(l) = r.getAs[Double](s"sh${j}_$l") / (s * s)
+        (0 until (k + 1)).foreach(j => grad(j) = -m(sg(j)) / s)
+        grad(np - 1) = -(m(1) + nEvents.toDouble)
+        val h = LinAlg.zeros(np, np)
+        pairs.indices.foreach { pi =>
+          val (j, l) = pairs(pi)
+          h(j)(l) = m(sh(pi)) / (s * s)
           h(l)(j) = h(j)(l)
         }
         (0 until (k + 1)).foreach { j =>
-          h(j)(np - 1) =
-            (r.getAs[Double](s"shz$j") + r.getAs[Double](s"sg$j")) / s
+          h(j)(np - 1) = (m(shz(j)) + m(sg(j))) / s
           h(np - 1)(j) = h(j)(np - 1)
         }
-        h(np - 1)(np - 1) = r.getAs[Double]("shzz") + r.getAs[Double]("sgz")
-        (grad, h.map(_.map(x => -x)))
+        h(np - 1)(np - 1) = m(2) + m(1)
+        (m(0), grad, h.map(_.map(x => -x)))
       }
 
-      // damped ascent-guaranteed Newton: the AFT log-likelihood in
-      // (beta, log sigma) is NOT globally concave (the information is
-      // indefinite away from the optimum — pure Newton from a moment
-      // init demonstrably walks onto the flat sigma -> infinity ridge),
-      // so (a) ridge the negative Hessian until the solve direction is
-      // an ASCENT direction, (b) backtrack on the likelihood. The line
-      // search costs no extra pass on the accepted trial: its stats row
-      // IS the next iteration's aggregate.
-      var it = 0
-      var done = false
-      var st = statsAt(theta)
-      var ll = st.getAs[Double]("ll")
-      require(!ll.isNaN && !ll.isInfinity,
-        "aft: non-finite likelihood at the moment init — rescale " +
-          "extreme covariates or times")
-      var info: Array[Array[Double]] = null // negative Hessian at theta
-      while (!done && it < maxIter) {
-        val (g, negH) = gradNegH(st, theta)
-        info = negH
-        var mu = 0.0
-        var dir: Array[Double] = null
-        var tries = 0
-        while (dir == null && tries < 60) {
-          val a = Array.tabulate(np, np)((i, j) =>
-            negH(i)(j) + (if (i == j) mu else 0.0))
-          val cand =
-            try Some(graft.stats.LinAlg.matVec(
-              graft.stats.LinAlg.invert(a), g))
-            catch { case _: RuntimeException | _: IllegalArgumentException => None }
-          cand match {
-            case Some(v)
-                if v.zip(g).map { case (a1, b1) => a1 * b1 }.sum > 0 &&
-                  v.forall(x => !x.isNaN && !x.isInfinity) =>
-              dir = v
-            case _ =>
-              mu =
-                if (mu == 0.0)
-                  1e-3 * math.max(1.0, (0 until np).map(i =>
-                    math.abs(negH(i)(i))).max)
-                else mu * 10.0
-          }
-          tries += 1
-        }
-        require(dir != null,
-          "aft: could not find an ascent direction (degenerate " +
-            "information) — check for collinear covariates")
-        var f = 1.0
-        var halvings = 0
-        var accepted = false
-        var sawFinite = false
-        // acceptance tolerance is RELATIVE to |ll|: at row scale the
-        // log-likelihood is O(n), where a distributed sum's float noise
-        // alone is ~1e-12·|ll| — an absolute 1e-12 bar would reject
-        // every trial once the true improvement drops under the noise
-        // floor (the r18 board caught exactly this at sf0.1)
-        val noise = 1e-9 * (1.0 + math.abs(ll))
-        while (!accepted && halvings < 25) {
-          val trial = Array.tabulate(np)(j => theta(j) + f * dir(j))
-          val stT = statsAt(trial)
-          val llT = stT.getAs[Double]("ll")
-          if (!llT.isNaN && !llT.isInfinity) {
-            sawFinite = true
-            if (llT >= ll - noise) {
-              theta = trial; st = stT; ll = llT; accepted = true
-            } else { f /= 2.0; halvings += 1 }
-          } else { f /= 2.0; halvings += 1 }
-        }
-        if (!accepted) {
-          require(sawFinite,
-            s"aft: non-finite likelihood in every backtracking trial " +
-              s"at iteration $it (dist = $dist) — rescale extreme " +
-              "covariates")
-          // every finite trial sat within noise of the incumbent: the
-          // surface is flat at float resolution — converged
-          done = true
-        } else {
-          it += 1
-          val stepMax = dir.map(x => math.abs(f * x)).max
-          val (gNew, _) = gradNegH(st, theta)
-          done = stepMax < tol &&
-            gNew.map(math.abs).max < 1e-7 * (1.0 + math.abs(ll))
-        }
-      }
-      // observed information at the accepted final point
-      info = gradNegH(st, theta)._2
-      val cov = graft.stats.LinAlg.invert(info)
-      val se = Array.tabulate(np)(j => math.sqrt(cov(j)(j)))
-      val zv = Array.tabulate(np)(j => theta(j) / se(j))
-      val pv = zv.map(z =>
-        2.0 * (1.0 - graft.stats.Dist.normCdf(math.abs(z))))
-      AftResult(("intercept" +: names :+ "log_scale").toArray,
-        theta, se, zv, pv, n, nEvents, dist, it, ll)
-    } finally {
-      base.unpersist()
-      ()
+      val fit = Newton.maximize("aft", theta0, maxIter, tol)(at => toStats(momentsAt(at), at))
+      AftResult(("intercept" +: names :+ "log_scale").toArray, fit.estimates,
+        fit.stderr, fit.zValues, fit.pValues, n, nEvents, dist, fit.iterations,
+        fit.logLik)
     }
   }
 

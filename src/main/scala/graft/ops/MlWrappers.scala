@@ -200,19 +200,11 @@ object MlWrappers {
     }
   }
 
-  /** `fit` over the prepared [[Design]]. The slice is persisted only when
-    * the collapse declined: on the cells path the collapse read it once;
-    * on the row path every iteration is one aggregate over the same slice,
-    * and without the cache each of the ~5-20 iterations would re-read and
-    * re-project the source. Released before returning. */
+  /** `fit` over the prepared [[Design]], its slice persisted only on the
+    * row path ([[DesignCells.persistUnlessCollapsed]]). */
   private def withDesign[T](slim: DataFrame, k: Int, cells: Option[Array[XCell]])(
       fit: Design => T): T =
-    if (cells.isDefined) fit(Design(slim, k, cells))
-    else {
-      slim.persist()
-      try fit(Design(slim, k, None))
-      finally { slim.unpersist(); () }
-    }
+    DesignCells.persistUnlessCollapsed(slim, cells)(c => fit(Design(slim, k, c)))
 
   /** The design collapse of the fits whose statistics are at most
     * quadratic in y given x: by the covariates, carrying y moments. */

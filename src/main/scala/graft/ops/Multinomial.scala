@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.stats.{DesignCells, LinAlg, Newton}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multinomial (softmax) logistic regression — R `nnet::multinom`'s
@@ -14,8 +15,8 @@ import org.apache.spark.sql.functions._
   *   level is the reference class, nnet's convention), η_j = β_j'x̃
   *
   * The log-likelihood is globally concave; the fit still runs the
-  * damped ascent-guaranteed Newton (the [[Aft]] recipe) for uniformity
-  * and float safety. SEs from the inverse observed information. With
+  * damped ascent-guaranteed [[graft.stats.Newton]] for uniformity and
+  * float safety. SEs from the inverse observed information. With
   * J = 2 the model IS binary logistic regression for class 2 vs class
   * 1 — coefficients and SEs identical (spec-pinned against
   * logisticIrls to 1e-6).
@@ -23,10 +24,9 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: ONE distributed aggregate per iteration — the per-row
   * class probabilities are codegen softmax columns over literal-β
   * linear terms, gradient (J−1)(k+1) sums, Hessian
-  * (J−1)J/2 · (k+1)(k+2)/2 sums — then an O(((J−1)(k+1))³) driver
-  * solve; an accepted line-search trial's stats row doubles as the
-  * next iteration's aggregate. Levels bounded by maxLevels BEFORE
-  * collection.
+  * (J−1)J/2 · (k+1)(k+2)/2 sums, read by position into one moment
+  * vector — then an O(((J−1)(k+1))³) driver solve. Levels bounded by
+  * maxLevels BEFORE collection.
   */
 object Multinomial {
 
@@ -50,12 +50,9 @@ object Multinomial {
     val base = df.filter(complete).select(
       y.cast("double").as("__y") +:
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
-    base.persist()
-    try {
-      // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
-      val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
-      val levels = graft.stats.DesignCells.outcomeLevels(base, cellsOpt,
-          maxLevels, "multinomial_logit")(
+    // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
+    DesignCells.persistUnlessCollapsed(base, DesignCells.collect(base, maxCells)) { cellsOpt =>
+      val levels = DesignCells.outcomeLevels(base, cellsOpt, maxLevels, "multinomial_logit")(
         s"multinomial_logit: more than $maxLevels distinct outcome " +
           "levels — bucket the outcome first (or raise maxLevels knowingly)")
       val nJ = levels.length
@@ -72,8 +69,14 @@ object Multinomial {
       def xcol(m: Int): Column = if (m == 0) lit(1.0) else col(s"__x${m - 1}")
       // parameter layout: class j (2..J) block of kp entries
       def pix(j: Int, m: Int): Int = (j - 2) * kp + m
+      // the moment vector at β, in the row path's aggregate order: ll, the
+      // gradient in parameter order, then Σ w_jl·x_m1·x_m2 for classes
+      // j ≤ l and terms m1 ≤ m2, nested in that order
+      val hEntries = for {
+        j <- 2 to nJ; l <- j to nJ; m1 <- 0 until kp; m2 <- m1 until kp
+      } yield (j, l, m1, m2)
 
-      def statsAtDist(at: Array[Double]): Row = {
+      def momentsDist(at: Array[Double]): Array[Double] = {
         // eta_j for non-reference classes, clamped for exp safety
         val etas = (2 to nJ).map { j =>
           least(greatest(
@@ -87,40 +90,23 @@ object Multinomial {
         val etaOfC = (2 to nJ).foldLeft(when(cc === 1, lit(0.0))) {
           (acc, j) => acc.when(cc === j, etas(j - 2))
         }
-        val aggs = scala.collection.mutable.ArrayBuffer.empty[Column]
-        aggs += sum(etaOfC - log(denom)).as("ll")
-        (2 to nJ).foreach { j =>
-          val resid = (cc === j).cast("double") - probs(j - 2)
-          (0 until kp).foreach { m =>
-            aggs += sum(resid * xcol(m)).as(s"g${j}_$m")
-          }
+        val grad = for { j <- 2 to nJ; m <- 0 until kp }
+          yield sum(((cc === j).cast("double") - probs(j - 2)) * xcol(m))
+        val hess = hEntries.map { case (j, l, m1, m2) =>
+          val w =
+            if (j == l) probs(j - 2) * (lit(1.0) - probs(j - 2))
+            else lit(0.0) - probs(j - 2) * probs(l - 2)
+          sum(w * xcol(m1) * xcol(m2))
         }
-        (2 to nJ).foreach { j =>
-          (j to nJ).foreach { l =>
-            val w =
-              if (j == l) probs(j - 2) * (lit(1.0) - probs(j - 2))
-              else lit(0.0) - probs(j - 2) * probs(l - 2)
-            (0 until kp).foreach { m1 =>
-              (m1 until kp).foreach { m2 =>
-                aggs += sum(w * xcol(m1) * xcol(m2))
-                  .as(s"h${j}_${l}_${m1}_$m2")
-              }
-            }
-          }
-        }
-        base.agg(aggs.head, aggs.tail.toSeq: _*).head()
+        DesignCells.sums(base, sum(etaOfC - log(denom)) +: (grad ++ hess))
       }
-      // driver-side mirror of statsAtDist over the collapsed cells: the
+      // driver-side mirror of momentsDist over the collapsed cells: the
       // SAME per-row softmax formulas (η clamps included) times the cell
-      // count, in deterministic sorted-cell order. Field names match
-      // the aggregate aliases so gradNegH reads either row.
-      def statsAtLocal(cells: Array[Array[Double]], cnts: Array[Long])
-                      (at: Array[Double]): Row = {
+      // count, in deterministic sorted-cell order
+      def momentsLocal(cells: Array[Array[Double]], cnts: Array[Long])
+                      (at: Array[Double]): Array[Double] = {
         val cellCat = cells.map(c => levels.indexOf(c(0)) + 1)
-        var ll = 0.0
-        val g = Array.ofDim[Double](nJ + 1, kp)
-        // h(j)(l)(m1)(m2) for j <= l, m1 <= m2
-        val h = Array.ofDim[Double](nJ + 1, nJ + 1, kp, kp)
+        val acc = new Array[Double](1 + np + hEntries.length)
         val etas = new Array[Double](nJ - 1)
         var i = 0
         while (i < cells.length) {
@@ -141,13 +127,14 @@ object Multinomial {
           j = 2
           while (j <= nJ) { denom += math.exp(etas(j - 2)); j += 1 }
           val etaOfC = if (c == 1) 0.0 else etas(c - 2)
-          ll += w * (etaOfC - math.log(denom))
+          acc(0) += w * (etaOfC - math.log(denom))
+          var hi = 1 + np // hEntries order
           j = 2
           while (j <= nJ) {
             val pj = math.exp(etas(j - 2)) / denom
             val resid = (if (c == j) 1.0 else 0.0) - pj
             var m = 0
-            while (m < kp) { g(j)(m) += w * resid * xv(m); m += 1 }
+            while (m < kp) { acc(1 + pix(j, m)) += w * resid * xv(m); m += 1 }
             var l = j
             while (l <= nJ) {
               val pl = math.exp(etas(l - 2)) / denom
@@ -156,7 +143,8 @@ object Multinomial {
               while (m1 < kp) {
                 var m2 = m1
                 while (m2 < kp) {
-                  h(j)(l)(m1)(m2) += w * wjl * xv(m1) * xv(m2)
+                  acc(hi) += w * wjl * xv(m1) * xv(m2)
+                  hi += 1
                   m2 += 1
                 }
                 m1 += 1
@@ -167,135 +155,31 @@ object Multinomial {
           }
           i += 1
         }
-        val names0 = scala.collection.mutable.ArrayBuffer.empty[String]
-        val vals = scala.collection.mutable.ArrayBuffer.empty[Double]
-        names0 += "ll"; vals += ll
-        (2 to nJ).foreach { j =>
-          (0 until kp).foreach { m => names0 += s"g${j}_$m"; vals += g(j)(m) }
-        }
-        (2 to nJ).foreach { j =>
-          (j to nJ).foreach { l =>
-            (0 until kp).foreach { m1 =>
-              (m1 until kp).foreach { m2 =>
-                names0 += s"h${j}_${l}_${m1}_$m2"; vals += h(j)(l)(m1)(m2)
-              }
-            }
-          }
-        }
-        val schema = org.apache.spark.sql.types.StructType(names0.map(f =>
-          org.apache.spark.sql.types.StructField(f,
-            org.apache.spark.sql.types.DoubleType)).toSeq)
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          vals.map(_.asInstanceOf[Any]).toArray, schema)
+        acc
       }
-      val statsAt: Array[Double] => Row = cellsOpt match {
-        case Some((cells, cnts)) => statsAtLocal(cells, cnts)
-        case None => statsAtDist
+      val momentsAt: Array[Double] => Array[Double] = cellsOpt match {
+        case Some((cells, cnts)) => momentsLocal(cells, cnts)
+        case None => momentsDist
       }
-      def gradNegH(r: Row): (Array[Double], Array[Array[Double]]) = {
-        val g = new Array[Double](np)
-        (2 to nJ).foreach { j =>
-          (0 until kp).foreach { m =>
-            g(pix(j, m)) = r.getAs[Double](s"g${j}_$m")
-          }
+      // ll, gradient and observed information (+Σ w x x', the Fisher
+      // information with w as built) from the moments
+      def toStats(m: Array[Double]): Newton.Stats = {
+        val info = LinAlg.zeros(np, np)
+        hEntries.indices.foreach { e =>
+          val (j, l, m1, m2) = hEntries(e)
+          val v = m(1 + np + e)
+          info(pix(j, m1))(pix(l, m2)) = v; info(pix(j, m2))(pix(l, m1)) = v
+          info(pix(l, m1))(pix(j, m2)) = v; info(pix(l, m2))(pix(j, m1)) = v
         }
-        val negH = graft.stats.LinAlg.zeros(np, np)
-        (2 to nJ).foreach { j =>
-          (j to nJ).foreach { l =>
-            (0 until kp).foreach { m1 =>
-              (m1 until kp).foreach { m2 =>
-                val v = r.getAs[Double](s"h${j}_${l}_${m1}_$m2")
-                // -H = +sum(w x x') with w as built (Fisher information)
-                val cells = Seq(
-                  (pix(j, m1), pix(l, m2)), (pix(j, m2), pix(l, m1)),
-                  (pix(l, m1), pix(j, m2)), (pix(l, m2), pix(j, m1)))
-                cells.distinct.foreach { case (a0, b0) => negH(a0)(b0) = v }
-              }
-            }
-          }
-        }
-        (g, negH)
+        (m(0), m.slice(1, 1 + np), info)
       }
 
-      var param = new Array[Double](np)
-      var st = statsAt(param)
-      var ll = st.getAs[Double]("ll")
-      require(!ll.isNaN && !ll.isInfinity,
-        "multinomial_logit: non-finite likelihood at the zero init")
-      var it = 0
-      var done = false
-      while (!done && it < maxIter) {
-        val (g, negH) = gradNegH(st)
-        var mu = 0.0
-        var dir: Array[Double] = null
-        var tries = 0
-        while (dir == null && tries < 60) {
-          val a = Array.tabulate(np, np)((i, j) =>
-            negH(i)(j) + (if (i == j) mu else 0.0))
-          val cand =
-            try Some(graft.stats.LinAlg.matVec(
-              graft.stats.LinAlg.invert(a), g))
-            catch {
-              case _: RuntimeException | _: IllegalArgumentException => None
-            }
-          cand match {
-            case Some(v)
-                if v.zip(g).map { case (x1, x2) => x1 * x2 }.sum > 0 &&
-                  v.forall(x => !x.isNaN && !x.isInfinity) =>
-              dir = v
-            case _ =>
-              mu =
-                if (mu == 0.0)
-                  1e-3 * math.max(1.0, (0 until np).map(i =>
-                    math.abs(negH(i)(i))).max)
-                else mu * 10.0
-          }
-          tries += 1
-        }
-        require(dir != null,
-          "multinomial_logit: could not find an ascent direction " +
-            "(degenerate information) — check for collinear covariates " +
-            "or a perfectly separable class")
-        var f = 1.0
-        var halvings = 0
-        var accepted = false
-        var sawFinite = false
-        // noise-RELATIVE acceptance (the Aft rationale): |ll| is O(n)
-        // at row scale, so an absolute bar loses to summation noise
-        val noise = 1e-9 * (1.0 + math.abs(ll))
-        while (!accepted && halvings < 25) {
-          val trial = Array.tabulate(np)(j => param(j) + f * dir(j))
-          val stT = statsAt(trial)
-          val llT = stT.getAs[Double]("ll")
-          if (!llT.isNaN && !llT.isInfinity) {
-            sawFinite = true
-            if (llT >= ll - noise) {
-              param = trial; st = stT; ll = llT; accepted = true
-            } else { f /= 2.0; halvings += 1 }
-          } else { f /= 2.0; halvings += 1 }
-        }
-        if (!accepted) {
-          require(sawFinite,
-            s"multinomial_logit: non-finite likelihood in every " +
-              s"backtracking trial at iteration $it")
-          done = true // flat at float resolution: converged
-        } else {
-          it += 1
-          val stepMax = dir.map(x => math.abs(f * x)).max
-          val (gNew, _) = gradNegH(st)
-          done = stepMax < tol &&
-            gNew.map(math.abs).max < 1e-7 * (1.0 + math.abs(ll))
-        }
-      }
-      val info = gradNegH(st)._2
-      val cov = graft.stats.LinAlg.invert(info)
-      val est = Array.tabulate(nJ - 1, kp)((j, m) => param(j * kp + m))
-      val se = Array.tabulate(nJ - 1, kp)((j, m) =>
-        math.sqrt(cov(j * kp + m)(j * kp + m)))
-      MultinomialFit(levels, est, se, n, it, ll)
-    } finally {
-      base.unpersist()
-      ()
+      val fit = Newton.maximize("multinomial_logit", new Array[Double](np), maxIter, tol)(
+        at => toStats(momentsAt(at)))
+      MultinomialFit(levels,
+        Array.tabulate(nJ - 1, kp)((j, m) => fit.estimates(j * kp + m)),
+        Array.tabulate(nJ - 1, kp)((j, m) => fit.stderr(j * kp + m)),
+        n, fit.iterations, fit.logLik)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.stats.{DesignCells, LinAlg, Newton}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Proportional-odds (cumulative-logit) ordinal regression — R
@@ -12,12 +13,12 @@ import org.apache.spark.sql.functions._
   *   P(Y ≤ j | x) = σ(θ_j − x'β),  θ_1 < … < θ_{J−1}
   *
   * (polr's sign convention: positive β pushes mass to HIGHER
-  * categories). Damped ascent-guaranteed Newton on (θ, β) — the
-  * cumulative-logit likelihood is concave, but the ridge + likelihood
-  * backtracking loop (the [[Aft]] recipe) also enforces the threshold
-  * ordering for free: a step that crosses thresholds makes some row's
-  * cell probability non-positive, the trial likelihood goes NaN, and
-  * the line search rejects it. SEs from the inverse observed
+  * categories). Fit by [[graft.stats.Newton]] on (θ, β) — the
+  * cumulative-logit likelihood is concave, but the driver's ridge +
+  * likelihood backtracking also enforces the threshold ordering for
+  * free: a step that crosses thresholds makes some row's cell
+  * probability non-positive, the trial likelihood goes NaN, and the line
+  * search rejects it. SEs from the inverse observed
   * information at the optimum.
   *
   * With J = 2 the model IS binary logistic regression: β identical and
@@ -26,9 +27,8 @@ import org.apache.spark.sql.functions._
   * 100 TB shape: ONE distributed aggregate per iteration — the
   * per-row category picks its (θ_c, θ_{c−1}) pair via when-chains over
   * a literal level array, every gradient/Hessian entry is a codegen
-  * `sum()` (O((J+k)²) of them), and an accepted line-search trial's
-  * stats row doubles as the next iteration's aggregate (the Aft
-  * idiom). O((J+k)³) driver solve. Levels are the sorted distinct
+  * `sum()` (O((J+k)²) of them), read by position into one moment
+  * vector. O((J+k)³) driver solve. Levels are the sorted distinct
   * numeric values of y, bounded by maxLevels.
   */
 object Ordinal {
@@ -52,12 +52,9 @@ object Ordinal {
     val base = df.filter(complete).select(
       y.cast("double").as("__y") +:
         xs.zipWithIndex.map { case (x, j) => x.cast("double").as(s"__x$j") }: _*)
-    base.persist()
-    try {
-      // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
-      val cellsOpt = graft.stats.DesignCells.collect(base, maxCells)
-      val levels = graft.stats.DesignCells.outcomeLevels(base, cellsOpt,
-          maxLevels, "ordinal_logit")(
+    // design collapse (graft.stats.LocalCollapse). Columns: 0 = __y, 1..k = __x*.
+    DesignCells.persistUnlessCollapsed(base, DesignCells.collect(base, maxCells)) { cellsOpt =>
+      val levels = DesignCells.outcomeLevels(base, cellsOpt, maxLevels, "ordinal_logit")(
         s"ordinal_logit: more than $maxLevels distinct outcome levels — " +
           "this is not an ordinal outcome (bucket it first, or raise " +
           "maxLevels knowingly)")
@@ -86,10 +83,17 @@ object Ordinal {
         val p = math.min(math.max(cum.toDouble / n, 1e-6), 1.0 - 1e-6)
         theta0(j - 1) = math.log(p / (1.0 - p))
       }
-      var param = theta0
+      // the moment vector at (θ, β), in the row path's aggregate order:
+      // ll, the gradient in parameter order (∂θ_j then ∂β_l), then the
+      // Hessian's θ_j diagonal, its adjacent-threshold cross terms θ_j θ_{j+1},
+      // its θ_j β_l block and its β upper triangle
+      def hth(j: Int) = np + j
+      def hthx(j: Int) = np + nTh + j
+      def hc(j: Int, l: Int) = np + 2 * nTh + (j - 1) * k + l
+      def hb(l1: Int, l2: Int) = np + 2 * nTh + nTh * k + l1 * (2 * k - l1 + 1) / 2 + l2 - l1
 
       // ONE distributed pass at `at`: ll + every gradient/Hessian moment
-      def statsAtDist(at: Array[Double]): Row = {
+      def momentsDist(at: Array[Double]): Array[Double] = {
         val eta =
           if (at.drop(nTh).forall(_ == 0.0)) lit(0.0)
           else (0 until k).map(j => col(s"__x$j") * lit(at(nTh + j)))
@@ -123,51 +127,37 @@ object Ordinal {
         def mB(j: Int): Column = (cc === j + 1).cast("double")
         def xcol(l: Int): Column = col(s"__x$l")
         val aggs = scala.collection.mutable.ArrayBuffer.empty[Column]
-        aggs += sum(log(p0)).as("ll")
-        (1 to nTh).foreach { j =>
-          aggs += sum(mA(j) * dA / p - mB(j) * dB / p).as(s"gth$j")
-        }
-        (0 until k).foreach { l =>
-          aggs += sum(gEta * xcol(l)).as(s"gb$l")
-        }
+        aggs += sum(log(p0))
+        (1 to nTh).foreach { j => aggs += sum(mA(j) * dA / p - mB(j) * dB / p) }
+        (0 until k).foreach { l => aggs += sum(gEta * xcol(l)) }
         (1 to nTh).foreach { j =>
           aggs += sum(mA(j) * (dpA / p - dA * dA / (p * p)) +
-            mB(j) * (lit(0.0) - dpB / p - dB * dB / (p * p))).as(s"hth$j")
+            mB(j) * (lit(0.0) - dpB / p - dB * dB / (p * p)))
         }
         (1 until nTh).foreach { j => // adjacent-threshold cross: rows c == j+1
-          aggs += sum(mB(j) * dA * dB / (p * p)).as(s"hthx$j")
+          aggs += sum(mB(j) * dA * dB / (p * p))
         }
         (1 to nTh).foreach { j =>
           (0 until k).foreach { l =>
             aggs += sum((mA(j) * (lit(0.0) - dpA / p +
               dA * (dA - dB) / (p * p)) +
               mB(j) * (dpB / p - dB * (dA - dB) / (p * p))) * xcol(l))
-              .as(s"hc${j}_$l")
           }
         }
         (0 until k).foreach { l1 =>
-          (l1 until k).foreach { l2 =>
-            aggs += sum(hEta * xcol(l1) * xcol(l2)).as(s"hb${l1}_$l2")
-          }
+          (l1 until k).foreach { l2 => aggs += sum(hEta * xcol(l1) * xcol(l2)) }
         }
-        base.agg(aggs.head, aggs.tail.toSeq: _*).head()
+        DesignCells.sums(base, aggs.toSeq)
       }
-      // driver-side mirror of statsAtDist over the collapsed cells: the
+      // driver-side mirror of momentsDist over the collapsed cells: the
       // SAME per-row formulas (clamps, the skip-nonpositive-p0 behavior
       // of Spark's null-skipping sum(log(p0))) times the cell count, in
-      // deterministic sorted-cell order. Field names match the
-      // aggregate aliases so gradNegH reads either row.
-      def statsAtLocal(cells: Array[Array[Double]], cnts: Array[Long])
-                      (at: Array[Double]): Row = {
+      // deterministic sorted-cell order
+      def momentsLocal(cells: Array[Array[Double]], cnts: Array[Long])
+                      (at: Array[Double]): Array[Double] = {
         def sig(v: Double): Double = 1.0 / (1.0 + math.exp(-v))
         val cellCat = cells.map(c => levels.indexOf(c(0)) + 1)
-        var ll = 0.0
-        val gth = new Array[Double](nTh + 1)
-        val gb = new Array[Double](k)
-        val hth = new Array[Double](nTh + 1)
-        val hthx = new Array[Double](nTh + 1)
-        val hc = Array.ofDim[Double](nTh + 1, k)
-        val hb = Array.ofDim[Double](k, k)
+        val m = new Array[Double](hb(k, k))
         var i = 0
         while (i < cells.length) {
           val cell = cells(i)
@@ -188,165 +178,65 @@ object Ordinal {
           val hEta = (dpA - dpB) / p - (dA - dB) * (dA - dB) / (p * p)
           // Spark's sum(log(p0)) skips null (p0 <= 0) contributions and
           // is NaN-sticky on NaN — mirror both
-          if (p0.isNaN) ll = Double.NaN
-          else if (p0 > 0.0) ll += w * math.log(p0)
+          if (p0.isNaN) m(0) = Double.NaN
+          else if (p0 > 0.0) m(0) += w * math.log(p0)
           if (c <= nTh) {
-            gth(c) += w * dA / p
-            hth(c) += w * (dpA / p - dA * dA / (p * p))
+            m(c) += w * dA / p
+            m(hth(c)) += w * (dpA / p - dA * dA / (p * p))
           }
           if (c >= 2) {
-            gth(c - 1) -= w * dB / p
-            hth(c - 1) += w * (-dpB / p - dB * dB / (p * p))
-            if (c - 1 < nTh) hthx(c - 1) += w * dA * dB / (p * p)
+            m(c - 1) -= w * dB / p
+            m(hth(c - 1)) += w * (-dpB / p - dB * dB / (p * p))
+            if (c - 1 < nTh) m(hthx(c - 1)) += w * dA * dB / (p * p)
           }
           l = 0
           while (l < k) {
             val xv = cell(l + 1)
-            gb(l) += w * gEta * xv
+            m(1 + nTh + l) += w * gEta * xv
             if (c <= nTh)
-              hc(c)(l) += w * (-dpA / p + dA * (dA - dB) / (p * p)) * xv
+              m(hc(c, l)) += w * (-dpA / p + dA * (dA - dB) / (p * p)) * xv
             if (c >= 2 && c - 1 <= nTh)
-              hc(c - 1)(l) += w * (dpB / p - dB * (dA - dB) / (p * p)) * xv
+              m(hc(c - 1, l)) += w * (dpB / p - dB * (dA - dB) / (p * p)) * xv
             var l2 = l
             while (l2 < k) {
-              hb(l)(l2) += w * hEta * xv * cell(l2 + 1)
+              m(hb(l, l2)) += w * hEta * xv * cell(l2 + 1)
               l2 += 1
             }
             l += 1
           }
           i += 1
         }
-        val names0 = scala.collection.mutable.ArrayBuffer.empty[String]
-        val vals = scala.collection.mutable.ArrayBuffer.empty[Double]
-        names0 += "ll"; vals += ll
-        (1 to nTh).foreach { j => names0 += s"gth$j"; vals += gth(j) }
-        (0 until k).foreach { l => names0 += s"gb$l"; vals += gb(l) }
-        (1 to nTh).foreach { j => names0 += s"hth$j"; vals += hth(j) }
-        (1 until nTh).foreach { j => names0 += s"hthx$j"; vals += hthx(j) }
-        (1 to nTh).foreach { j =>
-          (0 until k).foreach { l => names0 += s"hc${j}_$l"; vals += hc(j)(l) }
-        }
-        (0 until k).foreach { l1 =>
-          (l1 until k).foreach { l2 =>
-            names0 += s"hb${l1}_$l2"; vals += hb(l1)(l2)
-          }
-        }
-        val schema = org.apache.spark.sql.types.StructType(names0.map(f =>
-          org.apache.spark.sql.types.StructField(f,
-            org.apache.spark.sql.types.DoubleType)).toSeq)
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          vals.map(_.asInstanceOf[Any]).toArray, schema)
+        m
       }
-      val statsAt: Array[Double] => Row = cellsOpt match {
-        case Some((cells, cnts)) => statsAtLocal(cells, cnts)
-        case None => statsAtDist
+      val momentsAt: Array[Double] => Array[Double] = cellsOpt match {
+        case Some((cells, cnts)) => momentsLocal(cells, cnts)
+        case None => momentsDist
       }
-      def gradNegH(r: Row): (Array[Double], Array[Array[Double]]) = {
-        val g = new Array[Double](np)
-        (1 to nTh).foreach(j => g(j - 1) = r.getAs[Double](s"gth$j"))
-        (0 until k).foreach(l => g(nTh + l) = r.getAs[Double](s"gb$l"))
-        val h = graft.stats.LinAlg.zeros(np, np)
-        (1 to nTh).foreach(j => h(j - 1)(j - 1) = r.getAs[Double](s"hth$j"))
+      // ll, gradient and observed information from the moments
+      def toStats(m: Array[Double]): Newton.Stats = {
+        val h = LinAlg.zeros(np, np)
+        (1 to nTh).foreach(j => h(j - 1)(j - 1) = m(hth(j)))
         (1 until nTh).foreach { j =>
-          h(j - 1)(j) = r.getAs[Double](s"hthx$j"); h(j)(j - 1) = h(j - 1)(j)
+          h(j - 1)(j) = m(hthx(j)); h(j)(j - 1) = h(j - 1)(j)
         }
         (1 to nTh).foreach { j =>
           (0 until k).foreach { l =>
-            h(j - 1)(nTh + l) = r.getAs[Double](s"hc${j}_$l")
+            h(j - 1)(nTh + l) = m(hc(j, l))
             h(nTh + l)(j - 1) = h(j - 1)(nTh + l)
           }
         }
         (0 until k).foreach { l1 =>
           (l1 until k).foreach { l2 =>
-            h(nTh + l1)(nTh + l2) = r.getAs[Double](s"hb${l1}_$l2")
+            h(nTh + l1)(nTh + l2) = m(hb(l1, l2))
             h(nTh + l2)(nTh + l1) = h(nTh + l1)(nTh + l2)
           }
         }
-        (g, h.map(_.map(x => -x)))
+        (m(0), m.slice(1, 1 + np), h.map(_.map(x => -x)))
       }
 
-      var st = statsAt(param)
-      var ll = st.getAs[Double]("ll")
-      require(!ll.isNaN && !ll.isInfinity,
-        "ordinal_logit: non-finite likelihood at the empirical init")
-      var it = 0
-      var done = false
-      while (!done && it < maxIter) {
-        val (g, negH) = gradNegH(st)
-        var mu = 0.0
-        var dir: Array[Double] = null
-        var tries = 0
-        while (dir == null && tries < 60) {
-          val a = Array.tabulate(np, np)((i, j) =>
-            negH(i)(j) + (if (i == j) mu else 0.0))
-          val cand =
-            try Some(graft.stats.LinAlg.matVec(
-              graft.stats.LinAlg.invert(a), g))
-            catch {
-              case _: RuntimeException | _: IllegalArgumentException => None
-            }
-          cand match {
-            case Some(v)
-                if v.zip(g).map { case (x1, x2) => x1 * x2 }.sum > 0 &&
-                  v.forall(x => !x.isNaN && !x.isInfinity) =>
-              dir = v
-            case _ =>
-              mu =
-                if (mu == 0.0)
-                  1e-3 * math.max(1.0, (0 until np).map(i =>
-                    math.abs(negH(i)(i))).max)
-                else mu * 10.0
-          }
-          tries += 1
-        }
-        require(dir != null,
-          "ordinal_logit: could not find an ascent direction " +
-            "(degenerate information) — check for collinear covariates")
-        var f = 1.0
-        var halvings = 0
-        var accepted = false
-        var sawFinite = false
-        // noise-RELATIVE acceptance (the Aft rationale): at row scale
-        // |ll| is O(n) and a distributed sum's float noise ~1e-12·|ll|
-        // would defeat an absolute bar once improvements shrink to it
-        val noise = 1e-9 * (1.0 + math.abs(ll))
-        while (!accepted && halvings < 25) {
-          val trial = Array.tabulate(np)(j => param(j) + f * dir(j))
-          // a trial that crosses thresholds produces a non-positive
-          // cell probability -> NaN ll -> rejected here
-          val stT = statsAt(trial)
-          val llT = stT.getAs[Double]("ll")
-          if (!llT.isNaN && !llT.isInfinity) {
-            sawFinite = true
-            if (llT >= ll - noise) {
-              param = trial; st = stT; ll = llT; accepted = true
-            } else { f /= 2.0; halvings += 1 }
-          } else { f /= 2.0; halvings += 1 }
-        }
-        if (!accepted) {
-          require(sawFinite,
-            s"ordinal_logit: non-finite likelihood in every " +
-              s"backtracking trial at iteration $it")
-          done = true // flat at float resolution: converged
-        } else {
-          it += 1
-          val stepMax = dir.map(x => math.abs(f * x)).max
-          val (gNew, _) = gradNegH(st)
-          done = stepMax < tol &&
-            gNew.map(math.abs).max < 1e-7 * (1.0 + math.abs(ll))
-        }
-      }
-      val info = gradNegH(st)._2
-      val cov = graft.stats.LinAlg.invert(info)
-      val se = Array.tabulate(np)(j => math.sqrt(cov(j)(j)))
-      val zv = Array.tabulate(np)(j => param(j) / se(j))
-      val pv = zv.map(z =>
-        2.0 * (1.0 - graft.stats.Dist.normCdf(math.abs(z))))
-      val terms = ((1 to nTh).map(j => s"cut_$j") ++ names).toArray
-      OrdinalFit(terms, param, se, zv, pv, levels, n, it, ll)
-    } finally {
-      base.unpersist()
-      ()
+      val fit = Newton.maximize("ordinal_logit", theta0, maxIter, tol)(at => toStats(momentsAt(at)))
+      OrdinalFit(((1 to nTh).map(j => s"cut_$j") ++ names).toArray, fit.estimates,
+        fit.stderr, fit.zValues, fit.pValues, levels, n, fit.iterations, fit.logLik)
     }
   }
 

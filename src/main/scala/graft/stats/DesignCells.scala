@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
@@ -64,6 +64,28 @@ object DesignCells {
           ord.map(rows(_).getLong(k + 1)).toArray))
       }
     }
+  }
+
+  /** `fit` over `slim` and its design collapse `cells`. The slice is
+    * persisted only when the collapse declined: on the cells path the
+    * collapse read it once; on the row path every iteration is one
+    * aggregate over the same slice, and without the cache each of the
+    * ~5-20 iterations would re-read and re-project the source. Released
+    * before returning. */
+  def persistUnlessCollapsed[C, T](slim: DataFrame, cells: Option[C])(
+      fit: Option[C] => T): T =
+    if (cells.isDefined) fit(cells)
+    else {
+      slim.persist()
+      try fit(None)
+      finally { slim.unpersist(); () }
+    }
+
+  /** One aggregate of `aggs` over `slim`, read by position (a null sum
+    * reads 0.0): the row path's moment vector of an iterative fit. */
+  def sums(slim: DataFrame, aggs: Seq[Column]): Array[Double] = {
+    val r = slim.agg(aggs.head, aggs.tail: _*).head()
+    Array.tabulate(r.length)(r.getAs[Double](_))
   }
 
   /** The sorted distinct values of `slim`'s column 0 (a model's outcome

@@ -217,6 +217,21 @@ class LocalCollapseSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("use LocalCollapse.within: ", ", ", ""))
   }
 
+  test("library code under ops/ has no name-keyed stats row and no Newton loop of its own") {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/ops"))
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.nonEmpty)
+    val banned = Seq("GenericRowWithSchema", "halvings <", "tries < 60")
+    val hits = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if banned.exists(l.contains) => s"$f:${i + 1}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("use graft.stats.Newton: ", ", ", ""))
+  }
+
   test("statistics kernels build no encoder and extend no Aggregator") {
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/agg"))
     val files =
